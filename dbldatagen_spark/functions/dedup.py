@@ -32,10 +32,9 @@ from pyspark.sql import functions as F
 
 from dbldatagen_spark.functions._parallel import ensure_parallelism
 
-# Fixed 64-bit odd constants; draw i-th minhash permutation as
-# a_i * h + b_i over the shingle hash h (Carter–Wegman style).
+# Fixed 64-bit odd constant: the i-th minhash permutation is xxhash64
+# salted with an odd multiple of it (see minhash_signature_exprs).
 _MH_SEED_A = 0x9E3779B97F4A7C15
-_MH_SEED_B = 0xC2B2AE3D27D4EB4F
 
 
 def normalize_text_expr(text: Column) -> Column:
@@ -389,6 +388,11 @@ def ngram_jaccard_pairs(
     Spark job at call time (one pass over the document-frequency
     frame, which the stop-cut then reuses via a persisted share);
     pass ``max_candidate_pairs=None`` for a fully lazy plan.
+
+    Precondition: ``id_col`` is unique (it is not checked). With
+    ``max_posting_len=None`` the common-shingle count is a COUNT over
+    the posting self-join, so rows sharing an id inflate ``|A ∩ B|``
+    and repeat output pairs; deduplicate ids first.
     """
     shingled = shingled_df(ensure_parallelism(df), id_col, text_col, k)
     return _pair_jaccard(
@@ -418,13 +422,72 @@ def minhash_signature_exprs(
         return lambda s: F.xxhash64(F.lit(salt), s)
 
     base = shingles if pre_hashed else F.transform(shingles, lambda s: F.xxhash64(s))
-    out = []
-    for i in range(num_hashes):
-        salt = ((2 * i + 1) * _MH_SEED_A) & ((1 << 63) - 1)
-        out.append(
-            F.array_min(F.transform(base, _salted(salt))).alias(f"mh_{i}")
+    return [
+        F.array_min(F.transform(base, _salted(_mh_salt(i)))).alias(f"mh_{i}")
+        for i in range(num_hashes)
+    ]
+
+
+def _mh_salt(i: int) -> int:
+    return ((2 * i + 1) * _MH_SEED_A) & ((1 << 63) - 1)
+
+
+def _minhash_band_exprs(hash_col: str, num_hashes: int, bands: int):
+    """``(signature, band_keys)``: the ``_sig`` array of the pre-hashed
+    :func:`minhash_signature_exprs` over ``hash_col``, and one bucket key
+    per band, ``xxhash64(band index, that band's _sig entries)`` — which
+    reads ``_sig``, so it goes in a projection above the signature's.
+
+    Each is ONE parsed SQL expression: built from Column objects they
+    cost a few py4j calls per hash and band element (~3,200 for one
+    64-hash call).  ``xxhash64`` hashes ``int`` and ``bigint``
+    differently; the SQL parser types an unsuffixed integer as ``F.lit``
+    does (``int`` inside the int32 range, ``bigint`` outside), so the
+    keys stay bit-identical — pinned by a golden-value test, since any
+    drift would move every LSH bucket."""
+    rows = num_hashes // bands
+    sig = ", ".join(
+        f"array_min(transform(`{hash_col}`, s -> xxhash64({_mh_salt(i)}, s)))"
+        for i in range(num_hashes)
+    )
+    keys = ", ".join(
+        f"xxhash64({b}, "
+        + ", ".join(f"element_at(_sig, {b * rows + r + 1})" for r in range(rows))
+        + ")"
+        for b in range(bands)
+    )
+    return F.expr(f"array({sig})").alias("_sig"), F.expr(f"array({keys})")
+
+
+def _hashed_shingles(
+    df: DataFrame, id_col: str, text_col: str, k: int, id_out: str, hash_out: str
+) -> DataFrame:
+    """``(id_out, hash_out)``: each doc's distinct k-shingles, each string
+    hashed exactly once; the separate projection is a CollapseProject
+    barrier (the hash array is referenced num_hashes times)."""
+    return shingled_df(ensure_parallelism(df), id_col, text_col, k).select(
+        F.col(id_col).alias(id_out),
+        F.transform(F.col("shingles"), lambda s: F.xxhash64(s)).alias(hash_out),
+    )
+
+
+def _lsh_buckets(
+    hashed: DataFrame, id_col: str, hash_col: str, num_hashes: int, bands: int
+) -> DataFrame:
+    """``(id_col, _band, _key)`` rows: one LSH bucket key per band of
+    each row's MinHash signature (see :func:`_minhash_band_exprs`)."""
+    sig, band_keys = _minhash_band_exprs(hash_col, num_hashes, bands)
+    # one array column, not num_hashes columns: >100 output fields would
+    # trip spark.sql.codegen.maxFields and silently drop whole-stage
+    # codegen.  Separate projections: _sig is referenced num_hashes times,
+    # so CollapseProject keeps the signature evaluated once per row
+    return (
+        hashed.select(F.col(id_col), sig)
+        .select(
+            F.col(id_col), F.posexplode_outer(band_keys).alias("_band", "_key")
         )
-    return out
+        .where(F.col("_key").isNotNull())
+    )
 
 
 def query_shingles(text: str, k: int = 3) -> List[str]:
@@ -561,6 +624,38 @@ def lsh_tune(
     return b, r, recall, midpoint
 
 
+def _verified_jaccard(
+    candidates: DataFrame, left: DataFrame, right: DataFrame, threshold: float
+) -> DataFrame:
+    """Candidate pairs ``(ka, kb)`` whose round-4 Jaccard over the
+    shingle-hash sets of ``left = (ka, ha)`` and ``right = (kb, hb)``
+    reaches ``threshold``, as ``(ka, kb, jaccard)``.  Jaccard over 64-bit
+    hashes equals Jaccard over the strings up to vanishing collision
+    probability, and long-array intersection is far cheaper.
+
+    Aggregate barrier over the unique candidate keys (see
+    _pair_jaccard): keeps the threshold filter from being substituted
+    into the join condition, where it re-evaluated the hash-array
+    intersect+union once more per candidate.  Singleton groups, so
+    min() is the value itself."""
+    (ka, ha), (kb, hb) = left.columns, right.columns
+    return (
+        candidates.join(left, ka)
+        .join(right, kb)
+        .groupBy(ka, kb)
+        .agg(
+            F.min(
+                F.round(
+                    F.size(F.array_intersect(ha, hb)) / F.size(F.array_union(ha, hb)),
+                    4,
+                )
+            ).alias("jaccard")
+        )
+        .where(F.col("jaccard") >= F.lit(threshold))
+        .select(ka, kb, "jaccard")
+    )
+
+
 def minhash_near_duplicates(
     df: DataFrame,
     id_col: str,
@@ -601,14 +696,7 @@ def minhash_near_duplicates(
         bands, _r, _, _ = lsh_tune(threshold, num_hashes=num_hashes)
     if num_hashes % bands != 0:
         raise ValueError(f"bands ({bands}) must divide num_hashes ({num_hashes})")
-    rows_per_band = num_hashes // bands
-    shingled = shingled_df(ensure_parallelism(df), id_col, text_col, k)
-    # hash each shingle string exactly once; the separate projection is a
-    # CollapseProject barrier (the hash array is referenced num_hashes times)
-    hashed = shingled.select(
-        F.col(id_col),
-        F.transform(F.col("shingles"), lambda s: F.xxhash64(s)).alias("_shash"),
-    )
+    hashed = _hashed_shingles(df, id_col, text_col, k, id_col, "_shash")
     if verify and cache:
         # the (id, hash-array) projection feeds the signature pass AND both
         # sides of the verification join — persisting it turns three full
@@ -617,29 +705,7 @@ def minhash_near_duplicates(
         # rather than OOMs, so the tradeoff holds at cluster scale; pass
         # cache=False to keep the operator fully stateless.
         hashed = hashed.persist()
-    # one array column, not num_hashes columns: >100 output fields would
-    # trip spark.sql.codegen.maxFields and silently drop whole-stage codegen
-    sig_exprs = minhash_signature_exprs(
-        F.col("_shash"), num_hashes, pre_hashed=True
-    )
-    sig = hashed.select(
-        F.col(id_col), F.array(*sig_exprs).alias("_sig")
-    )
-    band_keys = F.array(
-        *[
-            F.xxhash64(
-                F.lit(b),
-                *[
-                    F.element_at(F.col("_sig"), b * rows_per_band + r + 1)
-                    for r in range(rows_per_band)
-                ],
-            )
-            for b in range(bands)
-        ]
-    )
-    buckets = sig.select(
-        F.col(id_col), F.posexplode_outer(band_keys).alias("_band", "_key")
-    ).where(F.col("_key").isNotNull())
+    buckets = _lsh_buckets(hashed, id_col, "_shash", num_hashes, bands)
     if max_bucket_len is not None:
         if max_bucket_len < 2:
             raise ValueError("max_bucket_len must be >= 2")
@@ -666,37 +732,10 @@ def minhash_near_duplicates(
     )
     if not verify:
         return candidates
-    # verify on the hashed shingle sets: Jaccard over 64-bit hashes equals
-    # Jaccard over the strings up to vanishing collision probability, and
-    # long-array intersection is far cheaper than string-array intersection
-    sh_a = hashed.select(
-        F.col(id_col).alias("id_a"), F.col("_shash").alias("_sh_a")
+    return _verified_jaccard(
+        candidates, hashed.toDF("id_a", "_sh_a"), hashed.toDF("id_b", "_sh_b"),
+        threshold,
     )
-    sh_b = hashed.select(
-        F.col(id_col).alias("id_b"), F.col("_shash").alias("_sh_b")
-    )
-    # aggregate barrier over the unique candidate keys (see
-    # _pair_jaccard): keeps the threshold filter from being substituted
-    # into the join condition, where it re-evaluated the hash-array
-    # intersect+union once more per candidate.  Singleton groups, so
-    # min() is the value itself.
-    verified = (
-        candidates.join(sh_a, "id_a")
-        .join(sh_b, "id_b")
-        .groupBy("id_a", "id_b")
-        .agg(
-            F.min(
-                F.round(
-                    F.size(F.array_intersect("_sh_a", "_sh_b"))
-                    / F.size(F.array_union("_sh_a", "_sh_b")),
-                    4,
-                )
-            ).alias("jaccard")
-        )
-        .where(F.col("jaccard") >= F.lit(threshold))
-        .select("id_a", "id_b", "jaccard")
-    )
-    return verified
 
 
 def simhash_signatures(
@@ -1334,15 +1373,23 @@ def duplicate_components(
     doc id reachable through the pair graph — the canonical representative
     every dedup pipeline keeps.
 
-    Algorithm: iterative min-label propagation with pointer jumping
-    (each round a vertex takes the min of its own label, its neighbors'
-    labels, and its label's label), converging in O(log diameter) rounds.
-    Every round shuffles only ``(long, long)`` label pairs — never
-    documents — and a checkpoint truncates the lineage so plan size stays
-    constant across iterations (without it, iteration k re-plans all k-1
-    predecessors; at cluster scale that serializes the driver). Near-dup
-    graphs have tiny diameters (dup clusters are near-cliques), so 3-4
-    rounds is typical; ``max_iterations`` only guards pathological chains.
+    Algorithm: iterative min-label propagation with pointer jumping,
+    converging in O(log diameter) rounds. The initial label is already
+    one hop along: the min of a vertex's own id and its neighbors' ids.
+    Each round a vertex takes the min of its label and its neighbors'
+    labels, then jumps through the previous round's (materialized)
+    label of that min. Every round shuffles only ``(long, long)`` label
+    pairs — never documents — and a checkpoint truncates the lineage so
+    plan size stays constant across iterations (without it, iteration k
+    re-plans all k-1 predecessors; at cluster scale that serializes the
+    driver). Near-dup graphs have tiny diameters (dup clusters are
+    near-cliques): on a clique the initial labels are final and one
+    confirming round runs; ``max_iterations`` only guards pathological
+    chains; a run it cuts off has had the initial hop on top of its
+    ``max_iterations`` rounds, one hop more than the cap suggests. Each
+    superseded round checkpoint is released once the next is
+    materialized, and the persisted edges on every path; only the
+    returned frame's checkpoint stays.
 
     Checkpointing: the default ``localCheckpoint`` writes to executor
     block storage — fast, but lost if an executor dies (a real risk on
@@ -1377,16 +1424,9 @@ def duplicate_components(
             prev_checkpoint_dir = None
         sc.setCheckpointDir(checkpoint_dir)
 
-        def _checkpoint(df: DataFrame) -> DataFrame:
-            return df.checkpoint()
-    else:
-
-        def _checkpoint(df: DataFrame) -> DataFrame:
-            return df.localCheckpoint()
-
     try:
         return _propagate_components(
-            pairs, id_a, id_b, max_iterations, _checkpoint
+            pairs, id_a, id_b, max_iterations, checkpoint_dir is not None
         )
     finally:
         if checkpoint_dir is not None:
@@ -1404,69 +1444,86 @@ def duplicate_components(
                     pass
 
 
+def _checkpoint(df: DataFrame, reliable: bool) -> DataFrame:
+    return df.checkpoint() if reliable else df.localCheckpoint()
+
+
+def _release_checkpoint(df: DataFrame) -> None:
+    """Drop the blocks of an eager ``localCheckpoint`` (a no-op for a
+    reliable checkpoint, whose RDD is not persisted).
+    ``DataFrame.unpersist`` cannot: the blocks belong to the RDD under
+    the frame's ``LogicalRDD``, not to the cache manager."""
+    df._jdf.queryExecution().logical().rdd().unpersist(False)
+
+
 def _propagate_components(
     pairs: DataFrame,
     id_a: str,
     id_b: str,
     max_iterations: int,
-    _checkpoint,
+    reliable: bool,
 ) -> DataFrame:
     """Min-label propagation loop of :func:`duplicate_components` (split
     out so the checkpoint-dir save/restore wraps all eager checkpoints)."""
     edges = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-    edges = (
-        edges.union(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .distinct()
-        .persist()
-    )
-    labels = edges.select(F.col("src").alias("vertex")).distinct().select(
-        "vertex", F.col("vertex").alias("component")
-    )
-    labels = _checkpoint(labels)
-    for _ in range(max_iterations):
-        nbr = (
-            edges.join(labels, edges["dst"] == labels["vertex"])
-            .groupBy("src")
-            .agg(F.min("component").alias("_nbr_min"))
+    # no distinct: a duplicate edge cannot change a min
+    edges = edges.union(
+        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    ).persist()
+    labels = None
+    try:
+        # the first neighbor-min hop doubles as the vertex scan
+        labels = _checkpoint(
+            edges.groupBy("src")
+            .agg(F.min("dst").alias("_nbr_min"))
+            .select(
+                F.col("src").alias("vertex"),
+                F.least("src", "_nbr_min").alias("component"),
+            ),
+            reliable,
         )
-        stepped = labels.join(nbr, labels["vertex"] == nbr["src"], "left").select(
-            labels["vertex"],
-            F.least(
-                labels["component"], F.coalesce(F.col("_nbr_min"), labels["component"])
-            ).alias("component"),
-            # thread the pre-step label through so convergence reads off
-            # the checkpointed rows themselves — no per-round join of two
-            # checkpointed frames just to ask "did anything change"
-            labels["component"].alias("_prev"),
-        )
-        # pointer jumping: component ids are themselves vertices, so chase
-        # one extra hop per round for O(log diameter) convergence
-        x, y = stepped.alias("x"), stepped.alias("y")
-        jumped = x.join(
-            y, F.col("x.component") == F.col("y.vertex"), "left"
-        ).select(
-            F.col("x.vertex").alias("vertex"),
-            F.least(
-                F.col("x.component"),
-                F.coalesce(F.col("y.component"), F.col("x.component")),
-            ).alias("component"),
-            F.col("x._prev").alias("_prev"),
-        )
-        jumped = _checkpoint(jumped)
-        # the checkpoint just materialized (vertex, component, _prev); the
-        # convergence probe is a limit-1 scan of those cached blocks —
-        # before, it was a join of this round's and last round's label
-        # frames (a broadcast build + probe job per iteration)
-        changed = (
-            jumped.where(F.col("component") != F.col("_prev"))
-            .limit(1)
-            .count()
-        )
-        labels = jumped.drop("_prev")
-        if changed == 0:
-            break
-    edges.unpersist()
-    return labels
+        for _ in range(max_iterations):
+            nbr = (
+                edges.join(labels, edges["dst"] == labels["vertex"])
+                .groupBy("src")
+                .agg(F.min("component").alias("_nbr_min"))
+            )
+            stepped = labels.join(
+                nbr, labels["vertex"] == nbr["src"], "left"
+            ).select(
+                labels["vertex"],
+                # least() skips NULLs: no coalesce needed for the left join
+                F.least(labels["component"], "_nbr_min").alias("component"),
+                # thread the pre-step label through so convergence reads
+                # off the checkpointed rows themselves
+                labels["component"].alias("_prev"),
+            )
+            # pointer jumping (component ids are vertices): one extra hop
+            # per round, through the materialized labels — a self-join of
+            # `stepped` would run the edge join and aggregate twice
+            x, y = stepped.alias("x"), labels.alias("y")
+            jumped = x.join(
+                y, F.col("x.component") == F.col("y.vertex"), "left"
+            ).select(
+                F.col("x.vertex").alias("vertex"),
+                F.least("x.component", "y.component").alias("component"),
+                F.col("x._prev").alias("_prev"),
+            )
+            jumped = _checkpoint(jumped, reliable)
+            _release_checkpoint(labels)
+            labels = jumped
+            # the convergence probe is a limit-1 scan of the blocks the
+            # checkpoint just materialized
+            changed = labels.where(F.col("component") != F.col("_prev"))
+            if changed.limit(1).count() == 0:
+                break
+        return labels.select("vertex", "component")
+    except BaseException:
+        if labels is not None:
+            _release_checkpoint(labels)
+        raise
+    finally:
+        edges.unpersist()
 
 
 def minhash_cluster_dedup(
@@ -1500,26 +1557,7 @@ def minhash_cluster_dedup(
     """
     if num_hashes % bands != 0:
         raise ValueError(f"bands ({bands}) must divide num_hashes ({num_hashes})")
-    rows_per_band = num_hashes // bands
-    shingled = shingled_df(ensure_parallelism(df), id_col, text_col, k)
-    hashed = shingled.select(
-        F.col(id_col),
-        F.transform(F.col("shingles"), lambda s: F.xxhash64(s)).alias("_shash"),
-    ).persist()
-    sig_exprs = minhash_signature_exprs(F.col("_shash"), num_hashes, pre_hashed=True)
-    sig = hashed.select(F.col(id_col), F.array(*sig_exprs).alias("_sig"))
-    band_keys = F.array(
-        *[
-            F.xxhash64(
-                F.lit(b),
-                *[
-                    F.element_at(F.col("_sig"), b * rows_per_band + r + 1)
-                    for r in range(rows_per_band)
-                ],
-            )
-            for b in range(bands)
-        ]
-    )
+    hashed = _hashed_shingles(df, id_col, text_col, k, id_col, "_shash").persist()
     # bucket minima via a map-side-combined aggregate + join, NOT an
     # unordered window over the bucket key: a mega-bucket (mass-
     # identical documents — exactly the corpus this operator's star
@@ -1530,9 +1568,7 @@ def minhash_cluster_dedup(
     # persisted (24 bytes/row x bands — cheaper than re-evaluating the
     # signature expressions for the join's second branch) and released
     # with the shingle cache below.
-    buckets = sig.select(
-        F.col(id_col), F.posexplode_outer(band_keys).alias("_band", "_key")
-    ).where(F.col("_key").isNotNull()).persist()
+    buckets = _lsh_buckets(hashed, id_col, "_shash", num_hashes, bands).persist()
     mins = buckets.groupBy("_band", "_key").agg(
         F.min(id_col).alias("_min_id")
     )
@@ -1590,8 +1626,7 @@ def cross_corpus_near_duplicates(
     corpus on ``query_id`` to drop contaminated documents.
 
     Same MinHash/band machinery as :func:`minhash_near_duplicates`
-    (intentionally parallel code — that operator backs an externally
-    verified query and stays untouched), but the candidate join is
+    (:func:`_lsh_buckets`), but the candidate join is
     query-buckets x corpus-buckets instead of within-corpus, so candidate
     volume is bounded by band collisions *between* corpora: at 100 TB of
     train and a few GB of eval the shuffled band keys are dominated by the
@@ -1607,39 +1642,16 @@ def cross_corpus_near_duplicates(
     """
     if num_hashes % bands != 0:
         raise ValueError(f"bands ({bands}) must divide num_hashes ({num_hashes})")
-    rows_per_band = num_hashes // bands
 
     def prep(df: DataFrame, side: str):
-        hashed = shingled_df(ensure_parallelism(df), id_col, text_col, k).select(
-            F.col(id_col).alias(f"{side}_id"),
-            F.transform(F.col("shingles"), lambda s: F.xxhash64(s)).alias(
-                f"_shash_{side}"
-            ),
+        hashed = _hashed_shingles(
+            df, id_col, text_col, k, f"{side}_id", f"_shash_{side}"
         )
         if verify:  # reused by the verification join; single-use otherwise
             hashed = hashed.persist()
-        sig_exprs = minhash_signature_exprs(
-            F.col(f"_shash_{side}"), num_hashes, pre_hashed=True
+        buckets = _lsh_buckets(
+            hashed, f"{side}_id", f"_shash_{side}", num_hashes, bands
         )
-        sig = hashed.select(
-            F.col(f"{side}_id"), F.array(*sig_exprs).alias("_sig")
-        )
-        band_keys = F.array(
-            *[
-                F.xxhash64(
-                    F.lit(b),
-                    *[
-                        F.element_at(F.col("_sig"), b * rows_per_band + r + 1)
-                        for r in range(rows_per_band)
-                    ],
-                )
-                for b in range(bands)
-            ]
-        )
-        buckets = sig.select(
-            F.col(f"{side}_id"),
-            F.posexplode_outer(band_keys).alias("_band", "_key"),
-        ).where(F.col("_key").isNotNull())
         return hashed, buckets
 
     q_hashed, q_buckets = prep(query_df, "query")
@@ -1651,27 +1663,7 @@ def cross_corpus_near_duplicates(
     )
     if not verify:
         return candidates
-    # aggregate barrier over the unique candidate keys (see
-    # _pair_jaccard): keeps the threshold filter out of the join
-    # condition, where it re-evaluated the hash-array intersect+union
-    # per candidate.  Singleton groups, so min() is the value itself.
-    out = (
-        candidates.join(q_hashed, "query_id")
-        .join(c_hashed, "corpus_id")
-        .groupBy("query_id", "corpus_id")
-        .agg(
-            F.min(
-                F.round(
-                    F.size(F.array_intersect("_shash_query", "_shash_corpus"))
-                    / F.size(F.array_union("_shash_query", "_shash_corpus")),
-                    4,
-                )
-            ).alias("jaccard")
-        )
-        .where(F.col("jaccard") >= F.lit(threshold))
-        .select("query_id", "corpus_id", "jaccard")
-    )
-    return out
+    return _verified_jaccard(candidates, q_hashed, c_hashed, threshold)
 
 
 def duplicated_span_stats(
@@ -2403,6 +2395,11 @@ def containment_pairs(
     Spark job at call time (shared with the stop-cut via a persisted
     document-frequency frame); ``max_candidate_pairs=None`` keeps the
     plan fully lazy.
+
+    Precondition: ``id_col`` is unique (it is not checked). With
+    ``max_posting_len=None`` ``n_common`` is a COUNT over the posting
+    self-join, so rows sharing an id inflate it and repeat output
+    pairs; deduplicate ids first.
     """
     if not 0.0 < threshold <= 1.0:
         raise ValueError(f"threshold must be in (0, 1], got {threshold}")

@@ -489,55 +489,55 @@ def kmeans_fit(
 
     inertia_history = []
     prev = None
-    for _ in range(max_iter):
-        cents = centroids.copy()
+    try:
+        for _ in range(max_iter):
+            cents = centroids.copy()
 
-        def partial(batches, _c=cents):
+            def partial(batches, _c=cents):
+                counts = np.zeros(k)
+                sums = np.zeros((k, d))
+                inertia = 0.0
+                for pdf in batches:
+                    if len(pdf) == 0:
+                        continue
+                    mat = np.vstack(pdf.iloc[:, 0].to_numpy()).astype(np.float64)
+                    # squared euclidean distance to every centroid, vectorized
+                    d2 = (
+                        (mat * mat).sum(axis=1)[:, None]
+                        - 2.0 * mat @ _c.T
+                        + (_c * _c).sum(axis=1)[None, :]
+                    )
+                    cell = d2.argmin(axis=1)
+                    inertia += float(d2[np.arange(len(mat)), cell].sum())
+                    np.add.at(counts, cell, 1)
+                    np.add.at(sums, cell, mat)
+                yield pd.DataFrame(
+                    {
+                        "cell": range(k),
+                        "n": counts.astype("int64"),
+                        "s": [row.tolist() for row in sums],
+                        "inertia": [inertia] + [0.0] * (k - 1),
+                    }
+                )
+
+            parts = vecs.mapInPandas(
+                partial, "cell int, n long, s array<double>, inertia double"
+            ).collect()
             counts = np.zeros(k)
             sums = np.zeros((k, d))
             inertia = 0.0
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                mat = np.vstack(pdf.iloc[:, 0].to_numpy()).astype(np.float64)
-                # squared euclidean distance to every centroid, vectorized
-                d2 = (
-                    (mat * mat).sum(axis=1)[:, None]
-                    - 2.0 * mat @ _c.T
-                    + (_c * _c).sum(axis=1)[None, :]
-                )
-                cell = d2.argmin(axis=1)
-                inertia += float(d2[np.arange(len(mat)), cell].sum())
-                np.add.at(counts, cell, 1)
-                np.add.at(sums, cell, mat)
-            yield pd.DataFrame(
-                {
-                    "cell": range(k),
-                    "n": counts.astype("int64"),
-                    "s": [row.tolist() for row in sums],
-                    "inertia": [inertia] + [0.0] * (k - 1),
-                }
-            )
-
-        parts = vecs.mapInPandas(
-            partial, "cell int, n long, s array<double>, inertia double"
-        ).collect()
-        counts = np.zeros(k)
-        sums = np.zeros((k, d))
-        inertia = 0.0
-        for r in parts:
-            counts[r["cell"]] += r["n"]
-            sums[r["cell"]] += np.asarray(r["s"])
-            inertia += r["inertia"]
-        inertia_history.append(inertia)
-        nonempty = counts > 0
-        centroids[nonempty] = sums[nonempty] / counts[nonempty, None]
-        if prev is not None and prev - inertia <= tol * max(prev, 1.0):
-            break
-        prev = inertia
-    # released on the normal path; an exception mid-fit leaves the block
-    # to the ContextCleaner's weak-ref reclaim, like any abandoned cache
-    vecs.unpersist()
+            for r in parts:
+                counts[r["cell"]] += r["n"]
+                sums[r["cell"]] += np.asarray(r["s"])
+                inertia += r["inertia"]
+            inertia_history.append(inertia)
+            nonempty = counts > 0
+            centroids[nonempty] = sums[nonempty] / counts[nonempty, None]
+            if prev is not None and prev - inertia <= tol * max(prev, 1.0):
+                break
+            prev = inertia
+    finally:
+        vecs.unpersist()
     return centroids, inertia_history
 
 
@@ -649,67 +649,69 @@ def pq_train(
         [seeds[:, s * dsub:(s + 1) * dsub].copy() for s in range(m)]
     )
     # persist for the fit's duration — one upstream execution instead of
-    # one per Lloyd iteration (guide §5); released after the loop
+    # one per Lloyd iteration (guide §5); released in the finally below
     vecs = df.select(F.col(vec_col)).persist()
 
     inertia_history = []
     prev = None
-    for _ in range(max_iter):
-        cents = codebooks.copy()
+    try:
+        for _ in range(max_iter):
+            cents = codebooks.copy()
 
-        def partial(batches, _c=cents):
+            def partial(batches, _c=cents):
+                counts = np.zeros((m, k))
+                sums = np.zeros((m, k, dsub))
+                inertia = np.zeros(m)
+                for pdf in batches:
+                    if len(pdf) == 0:
+                        continue
+                    mat = np.vstack(pdf.iloc[:, 0].to_numpy()).astype(np.float64)
+                    for s in range(m):
+                        sub = mat[:, s * dsub:(s + 1) * dsub]
+                        c = _c[s]
+                        d2 = (
+                            (sub * sub).sum(axis=1)[:, None]
+                            - 2.0 * sub @ c.T
+                            + (c * c).sum(axis=1)[None, :]
+                        )
+                        cell = d2.argmin(axis=1)
+                        inertia[s] += float(
+                            d2[np.arange(len(sub)), cell].sum()
+                        )
+                        np.add.at(counts[s], cell, 1)
+                        np.add.at(sums[s], cell, sub)
+                yield pd.DataFrame(
+                    {
+                        "sub": np.repeat(range(m), k),
+                        "cell": list(range(k)) * m,
+                        "n": counts.reshape(-1).astype("int64"),
+                        "s": [row.tolist() for row in sums.reshape(m * k, dsub)],
+                        "inertia": [
+                            inertia[i] if j == 0 else 0.0
+                            for i in range(m)
+                            for j in range(k)
+                        ],
+                    }
+                )
+
+            parts = vecs.mapInPandas(
+                partial, "sub int, cell int, n long, s array<double>, inertia double"
+            ).collect()
             counts = np.zeros((m, k))
             sums = np.zeros((m, k, dsub))
-            inertia = np.zeros(m)
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                mat = np.vstack(pdf.iloc[:, 0].to_numpy()).astype(np.float64)
-                for s in range(m):
-                    sub = mat[:, s * dsub:(s + 1) * dsub]
-                    c = _c[s]
-                    d2 = (
-                        (sub * sub).sum(axis=1)[:, None]
-                        - 2.0 * sub @ c.T
-                        + (c * c).sum(axis=1)[None, :]
-                    )
-                    cell = d2.argmin(axis=1)
-                    inertia[s] += float(
-                        d2[np.arange(len(sub)), cell].sum()
-                    )
-                    np.add.at(counts[s], cell, 1)
-                    np.add.at(sums[s], cell, sub)
-            yield pd.DataFrame(
-                {
-                    "sub": np.repeat(range(m), k),
-                    "cell": list(range(k)) * m,
-                    "n": counts.reshape(-1).astype("int64"),
-                    "s": [row.tolist() for row in sums.reshape(m * k, dsub)],
-                    "inertia": [
-                        inertia[i] if j == 0 else 0.0
-                        for i in range(m)
-                        for j in range(k)
-                    ],
-                }
-            )
-
-        parts = vecs.mapInPandas(
-            partial, "sub int, cell int, n long, s array<double>, inertia double"
-        ).collect()
-        counts = np.zeros((m, k))
-        sums = np.zeros((m, k, dsub))
-        inertia = 0.0
-        for r in parts:
-            counts[r["sub"], r["cell"]] += r["n"]
-            sums[r["sub"], r["cell"]] += np.asarray(r["s"])
-            inertia += r["inertia"]
-        inertia_history.append(inertia)
-        nonempty = counts > 0
-        codebooks[nonempty] = sums[nonempty] / counts[nonempty][:, None]
-        if prev is not None and prev - inertia <= tol * max(prev, 1.0):
-            break
-        prev = inertia
-    vecs.unpersist()
+            inertia = 0.0
+            for r in parts:
+                counts[r["sub"], r["cell"]] += r["n"]
+                sums[r["sub"], r["cell"]] += np.asarray(r["s"])
+                inertia += r["inertia"]
+            inertia_history.append(inertia)
+            nonempty = counts > 0
+            codebooks[nonempty] = sums[nonempty] / counts[nonempty][:, None]
+            if prev is not None and prev - inertia <= tol * max(prev, 1.0):
+                break
+            prev = inertia
+    finally:
+        vecs.unpersist()
     return codebooks, inertia_history
 
 

@@ -1304,6 +1304,30 @@ def test_kmeans_partition_invariance(spark, emb):
     assert np.allclose(h1, h2, rtol=1e-12)
 
 
+@pytest.mark.parametrize("fit", ["kmeans_fit", "pq_train"])
+def test_lloyd_fit_releases_vectors_on_error(spark, fit):
+    """A fit that fails mid-loop must still release its persisted
+    vector frame: one ragged vector past the k seed rows makes the
+    partial-sum batch's ``np.vstack`` raise inside the first iteration."""
+    from pyspark.errors import PythonException
+
+    from dbldatagen_spark.functions import similarity
+
+    rows = [(i, [float(i), 1.0, 0.0, 2.0]) for i in range(8)]
+    rows.append((8, [1.0, 2.0]))
+    df = spark.createDataFrame(rows, "vec_id long, v array<double>").coalesce(1)
+    jsc = spark.sparkContext._jsc
+
+    def _ids():
+        return {int(i) for i in jsc.getPersistentRDDs().keySet().toArray()}
+
+    kwargs = {"k": 2} if fit == "kmeans_fit" else {"m": 2, "k": 2}
+    before = _ids()
+    with pytest.raises(PythonException):
+        getattr(similarity, fit)(df, "v", id_col="vec_id", max_iter=3, **kwargs)
+    assert _ids() - before == set()
+
+
 def test_tfidf_terms(spark):
     import math
 
