@@ -7719,78 +7719,73 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     entries, so the leading cohort is chosen to cover every operator
     family; redundant variants of already-covered shapes follow after.
 
-    Round-16 rotation: pure STALEST-FIRST drain (an optimization
-    round adds no growth rows).  The r15 window drained green
-    (CORRECTNESS_r15.json: 50/50), so the stalest cohorts are the
-    remaining 30 r10-stale rows (gen_stock_ticker_conformance ..
-    multimodal_video_near_dup, ledger order) followed by the first
-    20 r11-stale rows (ann_ivfpq_persisted .. emb_mrl_truncation) —
-    exactly the next-window preview scripts/update_rotation.py
-    printed after the r15 draw, re-asserted stalest-first against
-    the regenerated ledger this round.  Post-drain, the stalest
-    unverified cohort is the remaining 18 r11 rows (the script's
-    next-window preview prints the exact order).  Demoted: the
-    entire round-15 window — all 50 were green on their r15
-    exposure.  The window is drawn by the ``_R16_WINDOW`` list below
-    over the full registry dict, so the FIRST 50 entries of this
-    function's return value ARE the window; the full
-    query -> last-driver-round ledger lives in ROTATION.md."""
-    _R16_WINDOW = [
-        # the remaining 30 r10-stale rows, ledger order
-        "gen_stock_ticker_conformance",
-        "q3_top_revenue",
-        "q5_region_revenue",
-        "events_scd2_intervals",
-        "events_scd2_lookup",
-        "events_cdc_apply",
-        "customers_derive_cdc",
-        "events_streaming_cdc",
-        "events_watermark_dedup",
-        "events_watermark_late_counts",
-        "events_stream_stream_left_join",
-        "events_stream_static_join",
-        "ann_kmeans_ivf",
-        "ann_lsh_recall",
-        "ann_cosine_topk",
-        "text_tfidf",
-        "text_bm25_search",
-        "docs_hybrid_ranking",
-        "events_ewma",
-        "events_cusum_flags",
-        "events_cms_heavy_hitters",
-        "events_cms_join_size",
-        "events_histogram_quantiles",
-        "events_kmv_daily_merge",
-        "events_trajectory_similarity",
-        "events_autocorrelation",
-        "lineitem_bloom_prefilter",
-        "multimodal_image_near_dup",
-        "multimodal_audio_near_dup",
-        "multimodal_video_near_dup",
-        # the first 20 r11-stale rows, ledger order
-        "ann_ivfpq_persisted",
-        "docs_substring_dedup",
-        "corpus_language_routing",
-        "text_quality_classifier",
-        "corpus_temperature_mix",
-        "docs_quality_buckets",
-        "dedup_keep_best",
-        "events_funnel",
-        "events_cohort_retention",
-        "events_transition_matrix",
-        "events_seasonal_anomalies",
-        "privacy_dp_counts",
-        "lineitem_expectations",
-        "events_psi_drift",
-        "customers_rfm_segments",
-        "customers_checksum",
-        "lineitem_benford",
-        "docs_weighted_sample",
-        "docs_source_quota",
-        "emb_mrl_truncation",
+    Round-17 rotation: pure STALEST-FIRST drain.  The round-16 window
+    drained green (CORRECTNESS_r16.json: 50/50) and is demoted.  The
+    window is exactly the next-window draw order that
+    ``python scripts/update_rotation.py`` prints after the r16 draw:
+    the remaining 30 r11-stale rows, all 10 r12-stale rows, then the
+    first 10 of the 50 r13-stale rows (ledger order within a cohort).
+    The window is drawn by the ``_R17_WINDOW`` list below over the
+    full registry dict, so the FIRST 50 entries of this function's
+    return value ARE the window; the full query -> last-checked-round
+    ledger lives in ROTATION.md."""
+    _R17_WINDOW = [
+        # the remaining 30 r11-stale rows, ledger order
+        "events_behavior_vectors",
+        "events_stream_stream_join",
+        "events_session_features",
+        "events_missing_hours",
+        "events_rate_limit",
+        "text_mojibake",
+        "events_ohlc_bars",
+        "events_common_paths",
+        "events_scd2_validate",
+        "events_asof_nearest",
+        "events_incremental_agg",
+        "events_sequence_gaps",
+        "events_zorder_layout",
+        "events_span_overlap",
+        "events_feature_scaling",
+        "docs_contrastive_negatives",
+        "docs_token_budget",
+        "events_winsorized_stats",
+        "events_hourly_windows",
+        "events_json_extract",
+        "emb_label_centroids",
+        "dedup_components",
+        "dedup_simhash",
+        "text_token_stats",
+        "text_fingerprint",
+        "text_chunking",
+        "text_ngram_counts",
+        "text_training_shards",
+        "corpus_sketch_stats",
+        "events_pivot_daily",
+        # all 10 r12-stale rows, ledger order
+        "gen_timestamp_cycle",
+        "gen_expression",
+        "gen_determinism",
+        "gen_uuid_conformance",
+        "gen_pattern_conformance",
+        "gen_weighted_shape",
+        "gen_unique_combinations",
+        "gen_sales_order_ri",
+        "gen_constant_seedfrom",
+        "gen_format_prefix",
+        # the first 10 r13-stale rows, ledger order
+        "web_host_authority",
+        "web_anchor_profile",
+        "docs_curriculum_order",
+        "docs_contamination_split",
+        "docs_distribution_match",
+        "docs_ngram_novelty",
+        "corpus_tokenizer_fertility",
+        "events_cube_counts",
+        "customers_set_ops",
+        "events_unpivot_daily",
     ]
     base = {
-        # Full registry (window drawn by _R16_WINDOW above; the
+        # Full registry (window drawn by _R17_WINDOW above; the
         # remaining entries keep their prior order)
         "docs_calibrated_keep": _docs_calibrated_keep,
         "web_domain_anchor_profile": _web_domain_anchor_profile,
@@ -8039,7 +8034,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "privacy_k_anonymity": _privacy_k_anonymity,
         "events_hot_keys": _events_hot_keys,
     }
-    out = {name: base[name] for name in _R16_WINDOW}
+    out = {name: base[name] for name in _R17_WINDOW}
     out.update(base)  # remaining entries keep their prior order
     return out
 

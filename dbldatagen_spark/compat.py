@@ -30,6 +30,9 @@ except ImportError:  # pragma: no cover
 
 from pyspark.sql import Column as _Column
 
+from dbldatagen_spark.plans.planner import dependency_levels
+from dbldatagen_spark.plans.spec import SpecValidationError
+
 ColumnLike = Union[_Column, str]
 
 
@@ -53,7 +56,8 @@ def topologicalSort(
     initial_columns: Optional[List[str]] = None,
     flatten: bool = True,
 ):
-    """Kahn topological sort over ``(name, dependencies)`` pairs.
+    """Kahn topological sort over ``(name, dependencies)`` pairs
+    (:func:`dbldatagen_spark.plans.planner.dependency_levels`).
 
     Returns a flat name list (``flatten=True``) or a list of levels —
     each level's entries depend only on earlier levels. Declaration
@@ -63,20 +67,15 @@ def topologicalSort(
     """
     pairs = [(name, set(deps)) for name, deps in sources]
     known = {name for name, _ in pairs}
-    done: Set[str] = set(initial_columns or [])
-    levels: List[List[str]] = [list(initial_columns)] if initial_columns else []
-    remaining = [(n, {d for d in deps if d in known and d != n} - done)
-                 for n, deps in pairs if n not in done]
-    while remaining:
-        level = [n for n, deps in remaining if not deps]
-        if not level:
-            cyc = ", ".join(sorted(n for n, _ in remaining))
-            raise DataGenError(f"cycle or unresolved dependency among: {cyc}")
-        levels.append(level)
-        done.update(level)
-        remaining = [
-            (n, deps - done) for n, deps in remaining if n not in done
-        ]
+    done = set(initial_columns or [])
+    deps = {n: {d for d in ds if d in known and d != n} - done
+            for n, ds in pairs if n not in done}
+    try:
+        levels = dependency_levels(deps)
+    except SpecValidationError as e:
+        raise DataGenError(str(e), e) from e
+    if initial_columns:
+        levels.insert(0, list(initial_columns))
     if flatten:
         return [n for level in levels for n in level]
     return levels

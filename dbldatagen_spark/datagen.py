@@ -31,27 +31,30 @@ from pyspark.sql import types as T
 
 from dbldatagen_spark.operators import templates as tmod
 from dbldatagen_spark.operators.constraints import Constraint, SqlExpr
-from dbldatagen_spark.operators.distributions import (
-    index_expr,
-    unit_expr,
-    weighted_index_expr,
+from dbldatagen_spark.operators.distributions import index_expr
+from dbldatagen_spark.operators.numeric import (
+    range_count,
+    range_expr,
+    spark_type_name,
 )
-from dbldatagen_spark.operators.numeric import lattice_count, spark_type_name
 from dbldatagen_spark.operators.seed import (
     cell_seed,
     decorrelate,
     derive_column_seed,
     null_mask,
 )
-from dbldatagen_spark.operators.strings import pattern_expr, uuid_expr
+from dbldatagen_spark.operators.strings import pattern_expr, uuid_expr, values_expr
 from dbldatagen_spark.plans.spec import (
     Distribution,
     Normal,
+    RangeColumn,
     SpecValidationError,
     Uniform,
+    WeightedValues,
     normalize_dtype,
 )
 from dbldatagen_spark.generator import expression_refs
+from dbldatagen_spark.plans.planner import dependency_levels
 
 INFER_DATATYPE = "__infer__"
 
@@ -1030,31 +1033,11 @@ class DataGenerator:
 
         # 3. value lists (optionally weighted)
         if col.values is not None:
-            n = len(col.values)
-            if col.weights is not None:
-                if random:
-                    idx = weighted_index_expr(seed_col, col.weights)
-                else:
-                    # deterministic weighted cycling: scale base onto the CDF
-                    scaled = F.pmod(self._index_source(col).cast("long"), F.lit(1000))
-                    total = float(sum(col.weights))
-                    idx: Column = F.lit(n - 1).cast("long")
-                    cum = 0.0
-                    conds = []
-                    for i, w in enumerate(col.weights[:-1]):
-                        cum += w / total
-                        conds.append((cum, i))
-                    for threshold, i in reversed(conds):
-                        idx = F.when(
-                            scaled < F.lit(int(round(threshold * 1000))),
-                            F.lit(i).cast("long"),
-                        ).otherwise(idx)
-            elif random:
-                idx = index_expr(seed_col, n, dist)
-            else:
-                idx = F.pmod(self._index_source(col).cast("long"), F.lit(n))
-            arr = F.array(*[F.lit(v) for v in col.values])
-            out = F.element_at(arr, idx.cast("int") + F.lit(1))
+            out = values_expr(
+                col.values, seed_col,
+                WeightedValues(col.weights) if col.weights is not None else dist,
+                random=random, id_col=self._index_source(col),
+            )
             if col.col_type not in (None, INFER_DATATYPE):
                 out = out.cast(_cast_target(dtype))
             return out
@@ -1123,9 +1106,10 @@ class DataGenerator:
         num_dtype = dtype if dtype not in ("string", "infer") else "long"
         lo = col.min_value
         hi = col.max_value
+        id_col = self._index_source(col)
         if lo is None and hi is None and col.unique_values is None:
             # identity over base (v0: column = base column value)
-            value = self._index_source(col).cast(
+            value = id_col.cast(
                 spark_type_name(num_dtype) if dtype != "string" else "bigint"
             )
             return self._decorate_numeric(col, value, dtype)
@@ -1134,52 +1118,35 @@ class DataGenerator:
         if hi is None:
             hi = lo + (col.unique_values - 1 if col.unique_values else 1_000_000)
         step = col.step or 1
-        count = lattice_count(float(lo), float(hi), float(step))
-
+        if col.unique_values is not None and int(col.unique_values) <= 0:
+            raise SpecValidationError("uniqueValues must be positive")
+        # the lattice runs in long when min and step are integral, else in
+        # double; the target type is one cast away
+        lattice = "long" if int(step) == step and int(lo) == lo else "double"
+        strategy = RangeColumn(lo, hi, step, col.distribution or Uniform())
         if col.unique_values is not None:
             k = int(col.unique_values)
-            if k <= 0:
-                raise SpecValidationError(f"uniqueValues must be positive")
-            k = min(k, count)
-            if random:
-                idx = index_expr(seed_col, k, col.distribution or Uniform())
-            else:
-                idx = F.pmod(self._index_source(col).cast("long"), F.lit(k))
-            if k < count and random:
-                # bijective scatter over the full lattice so the k distinct
+            count = range_count(strategy, lattice)
+            if k < count:
+                # draw one of k lattice indexes, then cycle the lattice with
+                # that draw as the index source; random draws are scattered
+                # bijectively (range_expr reduces them mod count) so the k
                 # values spread across [min,max] instead of clustering low
-                a = _coprime_multiplier(count)
-                b = (self._col_seed(col.name, 77) & _MASK64) % count
-                idx = F.pmod(idx * F.lit(a) + F.lit(b), F.lit(count))
-        elif random:
-            idx = index_expr(seed_col, count, col.distribution or Uniform())
-        else:
-            idx = F.pmod(self._index_source(col).cast("long"), F.lit(count))
-
-        is_integral = float(step) == int(step) and float(lo) == int(lo)
-        if is_integral:
-            value = idx * F.lit(int(step)) + F.lit(int(lo))
-        else:
-            value = idx.cast("double") * F.lit(float(step)) + F.lit(float(lo))
+                if random:
+                    a = _coprime_multiplier(count)
+                    b = (self._col_seed(col.name, 77) & _MASK64) % count
+                    id_col = index_expr(
+                        seed_col, k, col.distribution or Uniform()
+                    ) * F.lit(a) + F.lit(b)
+                else:
+                    id_col = F.pmod(id_col.cast("long"), F.lit(k))
+                random = False
+        elif random and col.step is None and dtype in ("float", "double"):
+            strategy = RangeColumn(lo, hi, None, strategy.distribution)  # continuous
+            lattice = "double"
+        value = range_expr(strategy, lattice, seed_col, random=random, id_col=id_col)
         if dtype not in ("string", "infer"):
-            if dtype.startswith("decimal"):
-                from dbldatagen_spark.plans.spec import decimal_precision_scale
-
-                p, s = decimal_precision_scale(dtype)
-                value = F.round(value.cast("double"), s).cast(f"decimal({p},{s})")
-            else:
-                value = value.cast(spark_type_name(dtype))
-        # continuous (no step, fractional type) refinement
-        if (
-            col.step is None
-            and dtype in ("float", "double")
-            and random
-            and col.unique_values is None
-        ):
-            unit = unit_expr(seed_col, col.distribution or Uniform())
-            value = (unit * F.lit(float(hi) - float(lo)) + F.lit(float(lo))).cast(
-                spark_type_name(dtype)
-            )
+            value = value.cast(spark_type_name(dtype))
         return self._decorate_numeric(col, value, dtype)
 
     def _decorate_numeric(self, col: _V0Column, value: Column, dtype: str) -> Column:
@@ -1262,23 +1229,8 @@ class DataGenerator:
                 d |= expression_refs(c.expr, names)
             d.discard(c.name)
             deps[c.name] = d
-        level: Dict[str, int] = {}
-        remaining = dict(deps)
-        cur = 0
-        while remaining:
-            ready = [n for n, d in remaining.items() if all(x in level for x in d)]
-            if not ready:
-                raise SpecValidationError(
-                    f"cyclic column dependencies among {sorted(remaining)}"
-                )
-            for n in ready:
-                level[n] = cur
-                del remaining[n]
-            cur += 1
-        out: List[List[_V0Column]] = [[] for _ in range(cur)]
-        for c in self._columns:
-            out[level[c.name]].append(c)
-        return [x for x in out if x]
+        by_name = {c.name: c for c in self._columns}
+        return [[by_name[n] for n in level] for level in dependency_levels(deps)]
 
     def _base_dataframe(
         self, withStreaming: bool, options: Optional[Dict[str, Any]]

@@ -1072,7 +1072,14 @@ def authority_weighted_sample(
             "constant) first"
         ),
     )
-    host = url_host_expr(F.col(url_col))
+    # the duplicate-key guard gates the corpus-side JOIN KEY: a consumer
+    # selecting only passthrough columns still needs the key to run the
+    # join, so column pruning cannot drop the raise while the fan-out
+    # it guards against is possible
+    df = df.crossJoin(F.broadcast(mxf))
+    host = F.when(
+        F.col("_aws_n") != F.col("_aws_nd"), F.raise_error(dup_msg)
+    ).otherwise(url_host_expr(F.col(url_col)))
     ranks = authority.select(
         F.col(node_col).alias(out_node),
         F.col(rank_col).cast("long").alias(out_rank),
@@ -1111,16 +1118,11 @@ def authority_weighted_sample(
         if broadcast_authority:
             ranks = F.broadcast(ranks)
         joined = df.withColumn(out_node, host).join(ranks, out_node, "left")
-    joined = joined.crossJoin(F.broadcast(mxf))
     base_l = F.lit(base_ppm).cast("long")
+    # empty/degenerate authority: every document keeps at the floor
+    # rate (documented — never a silent full-keep)
     ppm = F.when(
-        F.col("_aws_n") != F.col("_aws_nd"),
-        F.raise_error(dup_msg).cast("long"),
-    ).when(
-        # empty/degenerate authority: every document keeps at the
-        # floor rate (documented — never a silent full-keep)
-        F.col("_aws_mx").isNull() | (F.col("_aws_mx") <= 0),
-        base_l,
+        F.col("_aws_mx").isNull() | (F.col("_aws_mx") <= 0), base_l
     )
     if span > 0:
         # int64-safe rearrangement of span * mx >= 2^63:

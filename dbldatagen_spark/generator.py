@@ -9,7 +9,9 @@ Execution model (reference lifecycle
 2. columns are batched into **select levels** by dependency order
    (expression columns referencing generated columns, ``seed_from``
    correlations) — one ``df.select("*", ...)`` per level keeps the lineage
-   shallow (N columns → O(levels) projections, not N ``withColumn`` nodes);
+   shallow (N columns → O(levels) projections, not N ``withColumn`` nodes).
+   The levels come from ``plans.planner.dependency_levels``, the one
+   toposort shared with table ordering and the v0 ``DataGenerator``;
 3. pandas-UDF columns (faker/template text) ride the same levels via
    ``withColumn``;
 4. final projection to the declared column order drops the row id.
@@ -43,6 +45,7 @@ from dbldatagen_spark.operators.seed import (
 )
 from dbldatagen_spark.operators.strings import pattern_expr, uuid_expr, values_expr
 from dbldatagen_spark.operators.temporal import date_expr, timestamp_expr
+from dbldatagen_spark.plans.planner import dependency_levels, resolve_plan
 from dbldatagen_spark.plans.spec import (
     ArrayColumn,
     ColumnSpec,
@@ -184,7 +187,8 @@ def build_column_expr(
 
 def _dependency_levels(table: TableSpec) -> List[List[ColumnSpec]]:
     """Batch columns into select levels honoring expression refs and
-    seed_from (Kahn-style level assignment; cycles rejected)."""
+    seed_from (:func:`~dbldatagen_spark.plans.planner.dependency_levels`;
+    cycles rejected)."""
     names = {c.name for c in table.columns}
     deps: Dict[str, set] = {}
     for c in table.columns:
@@ -206,23 +210,8 @@ def _dependency_levels(table: TableSpec) -> List[List[ColumnSpec]]:
             d.add(c.seed_from)
         d.discard(c.name)
         deps[c.name] = d
-    level: Dict[str, int] = {}
-    remaining = dict(deps)
-    current = 0
-    while remaining:
-        ready = [n for n, d in remaining.items() if all(x in level for x in d)]
-        if not ready:
-            raise SpecValidationError(
-                f"cyclic column dependencies among {sorted(remaining)}"
-            )
-        for n in ready:
-            level[n] = current
-            del remaining[n]
-        current += 1
-    levels: List[List[ColumnSpec]] = [[] for _ in range(current)]
-    for c in table.columns:
-        levels[level[c.name]].append(c)
-    return [lv for lv in levels if lv]
+    by_name = {c.name: c for c in table.columns}
+    return [[by_name[n] for n in level] for level in dependency_levels(deps)]
 
 
 _TARGET_ROWS_PER_PARTITION = 5_000_000
@@ -283,8 +272,6 @@ def generate(
     """Build every table in FK-dependency order (parents first), returning
     ``{name: DataFrame}``. No table ever depends on another's *data* — only
     on its spec — so generation is still join-free."""
-    from dbldatagen_spark.plans.planner import resolve_plan
-
     resolved = resolve_plan(plan)
     out: Dict[str, DataFrame] = {}
     for name in resolved.generation_order:

@@ -68,16 +68,22 @@ def sequence_expr(strategy: SequenceColumn, id_col: Column, dtype: str) -> Colum
     return value.cast(spark_type_name(dtype))
 
 
-def lattice_count(min_value: float, max_value: float, step: float) -> int:
-    """Number of points on the ``min..max`` lattice with spacing ``step``.
-
-    A 1e-9 epsilon absorbs float representation error (e.g. 1.0..5.0 step
-    0.5 must yield exactly 8+1... 9 points? no — 1.0,1.5,...,5.0 = 9; the
-    reference's F4 fixture counts 8 discrete values for a half-open
-    convention; we use the inclusive convention: floor(span/step + eps)+1).
+def range_count(strategy: RangeColumn, dtype: str) -> int:
+    """Number of points on the inclusive lattice :func:`range_expr` steps
+    through for ``dtype`` (``step`` defaults to 1).  Integral dtypes count
+    exactly in integer arithmetic up to ``floor(max_value)``, so no point
+    lies above ``max_value`` at any span.  Fractional and decimal dtypes
+    count ``floor(span/step + eps) + 1`` in double, so 1.0..5.0 step 0.5 has
+    the 9 points 1.0, 1.5, ..., 5.0; the 1e-9 epsilon absorbs float
+    representation error in ``span/step``.  (The reference's F4 fixture
+    counts 8 values under a half-open convention.)
     """
-    span = max_value - min_value
-    return int(math.floor(span / step + _LATTICE_EPS)) + 1
+    step = strategy.step or 1
+    if dtype in ("byte", "short", "int", "long"):
+        lo, hi = int(strategy.min_value), math.floor(strategy.max_value)
+        return (hi - lo) // int(step) + 1
+    span = float(strategy.max_value) - float(strategy.min_value)
+    return int(math.floor(span / float(step) + _LATTICE_EPS)) + 1
 
 
 def range_expr(
@@ -86,18 +92,21 @@ def range_expr(
 ) -> Column:
     """Ranged value in ``[min_value, max_value]``.
 
-    ``random=False`` (v0 "non-random" mode) cycles deterministically through
-    the lattice by row id: ``pmod(id, count)`` — matches the reference's
-    modulo iteration (``column_generation_spec.py:1299-1363``) without the
-    double-mod dance because ``pmod`` is already non-negative.
+    ``random=True`` draws the lattice index from ``seed_col`` through the
+    distribution; a fractional dtype without a ``step`` is continuous.
+
+    ``random=False`` is the v0 ``DataGenerator`` path for non-random
+    columns: it cycles the lattice, index ``pmod(id_col, count)`` (falling
+    back to ``seed_col``), which matches the reference's modulo iteration
+    (``column_generation_spec.py:1299-1363``) without the double-mod dance
+    because ``pmod`` is already non-negative.  ``step`` defaults to 1 on
+    every dtype.  The lattice size is :func:`range_count`.
     """
     base = dtype if not dtype.startswith("decimal") else "decimal"
     if base in ("byte", "short", "int", "long"):
         return _integral_range(strategy, dtype, seed_col, random=random, id_col=id_col)
-    if base in ("float", "double"):
+    if base in ("float", "double", "decimal"):
         return _fractional_range(strategy, dtype, seed_col, random=random, id_col=id_col)
-    if base == "decimal":
-        return _decimal_range(strategy, dtype, seed_col, random=random, id_col=id_col)
     raise ValueError(f"range strategy incompatible with dtype {dtype!r}")
 
 
@@ -116,58 +125,26 @@ def _lattice_index(
 def _integral_range(
     strategy: RangeColumn, dtype: str, seed_col: Column, random: bool, id_col: Column
 ) -> Column:
-    step = int(strategy.step or 1)
-    lo, hi = int(strategy.min_value), int(strategy.max_value)
-    count = (hi - lo) // step + 1
+    count = range_count(strategy, dtype)
     idx = _lattice_index(strategy, count, seed_col, random, id_col)
-    value = idx * F.lit(step) + F.lit(lo)
+    value = idx * F.lit(int(strategy.step or 1)) + F.lit(int(strategy.min_value))
     return value.cast(spark_type_name(dtype))
 
 
 def _fractional_range(
     strategy: RangeColumn, dtype: str, seed_col: Column, random: bool, id_col: Column
 ) -> Column:
+    """float / double / decimal: continuous when random without a step,
+    else the ``idx*step + min`` lattice computed in double."""
     lo, hi = float(strategy.min_value), float(strategy.max_value)
-    if strategy.step is None:
-        if not random:
-            # non-random continuous degenerates to a fine lattice over ids
-            count = 1_000_000
-            src = id_col if id_col is not None else seed_col
-            unit = F.pmod(src.cast("long"), F.lit(count)).cast("double") / F.lit(
-                float(count)
-            )
-        else:
-            unit = unit_expr(seed_col, strategy.distribution)
+    if random and strategy.step is None:
+        unit = unit_expr(seed_col, strategy.distribution)
         value = unit * F.lit(hi - lo) + F.lit(lo)
     else:
-        step = float(strategy.step)
-        count = lattice_count(lo, hi, step)
+        count = range_count(strategy, dtype)
         idx = _lattice_index(strategy, count, seed_col, random, id_col)
-        value = idx.cast("double") * F.lit(step) + F.lit(lo)
-    return value.cast(spark_type_name(dtype))
-
-
-def _decimal_range(
-    strategy: RangeColumn, dtype: str, seed_col: Column, random: bool, id_col: Column
-) -> Column:
-    p, s = decimal_precision_scale(dtype if dtype.startswith("decimal") else "decimal")
-    lo, hi = float(strategy.min_value), float(strategy.max_value)
-    if strategy.step is not None:
-        step = float(strategy.step)
-        count = lattice_count(lo, hi, step)
-        idx = _lattice_index(strategy, count, seed_col, random, id_col)
-        value = idx.cast("double") * F.lit(step) + F.lit(lo)
-    else:
-        if not random:
-            count = 1_000_000
-            src = id_col if id_col is not None else seed_col
-            unit = F.pmod(src.cast("long"), F.lit(count)).cast("double") / F.lit(
-                float(count)
-            )
-        else:
-            unit = unit_expr(seed_col, strategy.distribution)
-        value = unit * F.lit(hi - lo) + F.lit(lo)
-    # the decimal cast itself rounds HALF_UP at target scale (same rule the
+        value = idx.cast("double") * F.lit(float(strategy.step or 1)) + F.lit(lo)
+    # a decimal cast rounds HALF_UP at target scale itself (same rule the
     # reference applies via an explicit round, numeric.py:208-212) — an
     # extra F.round first would double the per-row decimal work
-    return value.cast(f"decimal({p},{s})")
+    return value.cast(spark_type_name(dtype))

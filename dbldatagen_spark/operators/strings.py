@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import re
 from dataclasses import dataclass
+from itertools import accumulate
 from typing import List, Optional, Sequence, Union
 
 from pyspark.sql import Column
@@ -170,19 +171,34 @@ def values_expr(
 ) -> Column:
     """Pick from an explicit value list.
 
-    Non-random mode cycles by row id (v0 semantics); random mode uses the
+    ``random=True`` draws the index from ``seed_col`` through the
     distribution (WeightedValues → cumulative-threshold fold).
+
+    ``random=False`` is the v0 ``DataGenerator`` path for non-random
+    columns: it cycles the list by ``id_col`` (falling back to
+    ``seed_col``), ``pmod(id, n)``.  With WeightedValues it cycles a
+    1000-slot CDF instead: ``pmod(id, 1000)`` picks the first value whose
+    cumulative weight share, rounded to thousandths, exceeds the slot.
     """
     from dbldatagen_spark.plans.spec import WeightedValues
 
     n = len(values)
-    if not random:
-        src = id_col if id_col is not None else seed_col
-        idx = F.pmod(src.cast("long"), F.lit(n))
-    elif isinstance(distribution, WeightedValues):
+    src = id_col if id_col is not None else seed_col
+    if random and isinstance(distribution, WeightedValues):
         idx = weighted_index_expr(seed_col, distribution.weights)
-    else:
+    elif random:
         idx = index_expr(seed_col, n, distribution)
+    elif isinstance(distribution, WeightedValues):
+        slot = F.pmod(src.cast("long"), F.lit(1000))
+        total = sum(distribution.weights)
+        cdf = accumulate(w / total for w in distribution.weights[:-1])
+        idx = F.lit(n - 1).cast("long")
+        for i, share in reversed(list(enumerate(cdf))):
+            idx = F.when(
+                slot < F.lit(int(round(share * 1000))), F.lit(i).cast("long")
+            ).otherwise(idx)
+    else:
+        idx = F.pmod(src.cast("long"), F.lit(n))
     arr = F.array(*[F.lit(v) for v in values])
     out = F.element_at(arr, idx.cast("int") + F.lit(1))
     if dtype is not None and dtype not in ("infer",):

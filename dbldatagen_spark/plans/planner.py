@@ -3,12 +3,16 @@
 Reference lifecycle: ``/root/reference/dbldatagen/core/engine/planner.py:
 219-395`` (expression-ref validation, seed_from chain rejection, PK
 strategy checks, FK graph + Kahn toposort). Implementation original.
+
+:func:`dependency_levels` is the package's one toposort: table order here,
+column select levels in ``generator`` and the v0 ``DataGenerator``, and
+``compat.topologicalSort`` all call it with their own dependency maps.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from typing import Dict, List, Set
+from typing import Dict, Iterable, List, Mapping, Set
 
 from dbldatagen_spark.plans.spec import (
     DataGenPlan,
@@ -34,6 +38,27 @@ class ResolvedPlan:
     fk_resolutions: List[FKResolution] = field(default_factory=list)
 
 
+def dependency_levels(deps: Mapping[str, Iterable[str]]) -> List[List[str]]:
+    """Kahn's algorithm, one level at a time: each level holds the names
+    whose dependencies all sit in earlier levels, in ``deps`` order.
+    A cycle, or a dependency on a name outside ``deps``, raises
+    :class:`SpecValidationError`."""
+    remaining = {name: set(d) for name, d in deps.items()}
+    done: Set[str] = set()
+    levels: List[List[str]] = []
+    while remaining:
+        level = [name for name, d in remaining.items() if d <= done]
+        if not level:
+            raise SpecValidationError(
+                f"cyclic dependencies among {sorted(remaining)}"
+            )
+        levels.append(level)
+        done.update(level)
+        for name in level:
+            del remaining[name]
+    return levels
+
+
 def _validate_table(table: TableSpec) -> None:
     from dbldatagen_spark.generator import expression_refs
 
@@ -54,8 +79,9 @@ def _validate_table(table: TableSpec) -> None:
 
 
 def resolve_plan(plan: DataGenPlan) -> ResolvedPlan:
-    """Validate FK references and compute parents-first generation order via
-    Kahn's algorithm; cycles are an error."""
+    """Validate FK references and compute parents-first generation order
+    (:func:`dependency_levels`, declaration order within a level); cycles
+    are an error."""
     table_names = {t.name for t in plan.tables}
     fk_resolutions: List[FKResolution] = []
     deps: Dict[str, Set[str]] = {t.name: set() for t in plan.tables}
@@ -88,18 +114,5 @@ def resolve_plan(plan: DataGenPlan) -> ResolvedPlan:
                     FKResolution(table.name, col.name, fk.parent_table, fk.parent_column)
                 )
 
-    # Kahn toposort, preserving plan declaration order for determinism
-    order: List[str] = []
-    resolved: Set[str] = set()
-    remaining = [t.name for t in plan.tables]
-    while remaining:
-        ready = [n for n in remaining if deps[n] <= resolved]
-        if not ready:
-            raise SpecValidationError(
-                f"cyclic foreign-key dependencies among tables {sorted(remaining)}"
-            )
-        for n in ready:
-            order.append(n)
-            resolved.add(n)
-        remaining = [n for n in remaining if n not in resolved]
+    order = [name for level in dependency_levels(deps) for name in level]
     return ResolvedPlan(plan=plan, generation_order=order, fk_resolutions=fk_resolutions)

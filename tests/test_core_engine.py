@@ -315,7 +315,7 @@ class TestMultiTable:
         from dbldatagen_spark.plans.planner import resolve_plan
 
         resolved = resolve_plan(self.plan())
-        assert resolved.generation_order.index("customers") < resolved.generation_order.index("orders")
+        assert resolved.generation_order == ["customers", "orders"]
 
     def test_uuid_pk_reconstruction(self, spark):
         parent = TableSpec(
@@ -382,6 +382,30 @@ class TestValidation:
         )
         with pytest.raises(SpecValidationError):
             generate_table(spark, t, seed=1)
+        # the same toposort orders v0 columns and FK tables
+        from dbldatagen_spark import DataGenerator
+        from dbldatagen_spark.plans.planner import resolve_plan
+
+        v0 = (
+            DataGenerator(spark, rows=10)
+            .withColumn("a", "int", minValue=0, maxValue=9, baseColumn="b")
+            .withColumn("b", "int", minValue=0, maxValue=9, baseColumn="a")
+        )
+        with pytest.raises(SpecValidationError, match="cyclic"):
+            v0.build()
+        ring = DataGenPlan([
+            TableSpec(
+                name, 10,
+                columns=[
+                    ColumnSpec("pk", SequenceColumn(), dtype="long"),
+                    ColumnSpec("fk", ForeignKeyColumn(f"{other}.pk")),
+                ],
+                primary_key="pk",
+            )
+            for name, other in (("t1", "t2"), ("t2", "t1"))
+        ])
+        with pytest.raises(SpecValidationError, match="cyclic"):
+            resolve_plan(ring)
 
 
 class TestSeedFrom:

@@ -564,6 +564,7 @@ class TestIntrospection:
         # b depends on a, so a must appear in an earlier phase than b
         pos = {n: i for i, phase in enumerate(order) for n in phase}
         assert pos["a"] < pos["b"]
+        assert order == [["a", "lab"], ["b"]]  # declaration order per phase
         text = gen.explain(suppressOutput=True)
         assert "Data generation plan" in text
         assert "b <- a * 2" in text

@@ -9131,6 +9131,24 @@ class TestAuthorityWeightedSample:
         assert plan2.count("Join") >= 2
         assert plan2.count("array_contains") == 1
 
+    @pytest.mark.parametrize("level", ["host", "domain"])
+    def test_duplicate_guard_survives_column_pruning(self, spark, level):
+        """A consumer reading only passthrough columns still hits the
+        duplicate-key guard: pruning the flag columns must not let the
+        duplicate-keyed join fan rows out silently."""
+        from dbldatagen_spark.functions import (
+            authority_weighted_sample, host_authority,
+        )
+
+        links, docs = self._fixtures(spark)
+        auth = host_authority(links, "su", "du", iterations=1)
+        dup = authority_weighted_sample(
+            docs, "doc_id", "url", auth.unionByName(auth), level=level)
+        with pytest.raises(Exception, match="duplicate"):
+            dup.select("doc_id", "url").collect()
+        with pytest.raises(Exception, match="duplicate"):
+            dup.count()
+
     def test_partition_stability(self, spark):
         from dbldatagen_spark.functions import (
             authority_weighted_sample, host_authority,

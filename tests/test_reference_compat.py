@@ -81,6 +81,16 @@ def test_compat_utilities():
     ) == ["a", "b", "c"]
     with pytest.raises(dg.DataGenError):
         dg.topologicalSort([("a", {"b"}), ("b", {"a"})])
+    # levels keep declaration order; initial columns come first and
+    # count as satisfied; unknown and self dependencies are ignored
+    deps = [("z", {"id"}), ("y", {"z", "q"}), ("x", {"id", "x"}), ("w", {"y"})]
+    assert dg.topologicalSort(deps, flatten=False) == [["z", "x"], ["y"], ["w"]]
+    assert dg.topologicalSort(deps, initial_columns=["id"], flatten=False) == [
+        ["id"], ["z", "x"], ["y"], ["w"]
+    ]
+    assert dg.topologicalSort(deps, initial_columns=["id"]) == [
+        "id", "z", "x", "y", "w"
+    ]
     with pytest.raises(dg.DataGenError):
         dg.ensure(False, "nope")
     opts = dg.ColumnSpecOptions({"min": 1, "percent_nulls": 0.5})
