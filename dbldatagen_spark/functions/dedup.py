@@ -24,7 +24,8 @@ Scale design (the point of each operator at 100 TB):
 from __future__ import annotations
 
 import re
-from typing import List, Optional
+from functools import reduce
+from typing import List, Optional, Sequence
 
 from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame
@@ -220,29 +221,56 @@ def _blocked_posting(
     return posting
 
 
-def _pair_jaccard(
+def _self_pairs(
+    frame: DataFrame, keys: Sequence[str], id_col: str, carry: Sequence[str] = ()
+) -> DataFrame:
+    """``(id_a, id_b, <c>a, <c>b, ...)`` for each ``c`` in ``carry``: the
+    equi-self-join of ``frame`` on ``keys`` with ``id_a < id_b``, one row
+    per (pair, shared key).  The pair kernel of the dedup family; each
+    caller adds its own ``distinct``, count or verification on top."""
+    a, b = frame.alias("a"), frame.alias("b")
+    cond = reduce(
+        Column.__and__,
+        [F.col(f"a.{k}") == F.col(f"b.{k}") for k in keys]
+        + [F.col(f"a.{id_col}") < F.col(f"b.{id_col}")],
+    )
+    return a.join(b, cond).select(
+        F.col(f"a.{id_col}").alias("id_a"),
+        F.col(f"b.{id_col}").alias("id_b"),
+        *[F.col(f"{s}.{c}").alias(f"{c}{s}") for c in carry for s in "ab"],
+    )
+
+
+def _shingle_overlap(
     shingled: DataFrame,
     id_col: str,
-    *,
-    threshold: float,
-    max_posting_len: Optional[int] = None,
-    max_candidate_pairs: Optional[int] = DEFAULT_MAX_CANDIDATE_PAIRS,
-    op_name: str = "ngram_jaccard_pairs",
+    max_posting_len: Optional[int],
+    max_candidate_pairs: Optional[int],
+    op_name: str,
 ) -> DataFrame:
-    """Inverted-index pair generation + exact Jaccard from a DataFrame of
-    ``(id, shingles: array<string>)``.
+    """``(id_a, id_b, n_common, n_a, n_b)``, all ``long``, for every pair of
+    a DataFrame of ``(id, shingles: array<string>)`` sharing at least one
+    shingle: ``|A ∩ B|``, ``|A|`` and ``|B|`` over the full distinct
+    shingle arrays.  Each pair metric of the family (Jaccard,
+    containment) is a projection over this one frame.
 
-    ``max_posting_len`` is the stop-shingle cut: shingles appearing in
-    more than that many documents are dropped from the *blocking* index
-    ONLY — candidate pairs are generated from the cut index, then the
-    exact Jaccard is computed per candidate from the full distinct
-    shingle arrays (``array_intersect``), so the cut affects recall
-    (which pairs are considered) but never the measure itself. A shingle
-    with a d-document posting list contributes d^2 candidate pairs — one
-    viral boilerplate phrase at 100 TB is a cartesian explosion; capping
-    bounds per-shingle work at cap^2. Only pairs whose every common
-    shingle is that frequent are lost, and such pairs are overwhelmingly
-    boilerplate-only (below-threshold) matches.
+    Blocking is the inverted index: the posting self-join generates only
+    pairs with a common shingle.  ``max_posting_len`` is the stop-shingle
+    cut: shingles appearing in more than that many documents are dropped
+    from the *blocking* index ONLY — candidate pairs come from the cut
+    index, then the counts are computed per candidate from the full
+    arrays (``array_intersect``), so the cut affects recall (which pairs
+    are considered) but never the measure.  A shingle with a d-document
+    posting list contributes d^2 candidate pairs — one viral boilerplate
+    phrase at 100 TB is a cartesian explosion; capping bounds
+    per-shingle work at cap^2.  Only pairs whose every common shingle is
+    that frequent are lost, and such pairs are overwhelmingly
+    boilerplate-only matches.
+
+    Precondition: ``id_col`` is unique (it is not checked).  With
+    ``max_posting_len=None`` ``n_common`` is a COUNT over the posting
+    self-join, so rows sharing an id inflate it and repeat output pairs;
+    deduplicate ids first.
     """
     # explode_outer + notnull instead of explode: InferFiltersFromGenerate
     # turns plain explode into a pushed-down size(<array>) > 0 Filter whose
@@ -263,8 +291,7 @@ def _pair_jaccard(
     blocking = _blocked_posting(
         posting, "_sh", max_posting_len, max_candidate_pairs, op_name
     )
-    a = blocking.alias("a")
-    b = blocking.alias("b")
+    pairs = _self_pairs(blocking, ["_sh"], id_col)
     if max_posting_len is None:
         # Exact blocking (no stop-shingle cut): the posting self-join
         # emits exactly one row per (pair, common shingle) — shingle
@@ -273,94 +300,45 @@ def _pair_jaccard(
         # array_intersect (an O(|a|+|b|) hash-set probe per candidate
         # pair — 1.1M pairs at sf0.1) and the two joins that carried
         # whole shingle arrays to every pair; the per-side set sizes
-        # join back as (id, int) rows instead.  With a posting cut the
-        # count would miss common shingles whose posting was trimmed
-        # (metrics are contractually exact over FULL arrays), so the
-        # array_intersect path below stays for that mode.  The count
-        # aggregate doubles as the pushdown barrier the array path's
-        # min() aggregate provided; the residual jaccard arithmetic is
-        # three-integer scalar math, harmless to re-evaluate.
-        common = (
-            a.join(
-                b,
-                (F.col("a._sh") == F.col("b._sh"))
-                & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-            )
-            .groupBy(
-                F.col(f"a.{id_col}").alias("id_a"),
-                F.col(f"b.{id_col}").alias("id_b"),
-            )
-            .agg(F.count(F.lit(1)).cast("long").alias("_inter"))
+        # join back as (id, long) rows instead.  With a posting cut the
+        # count would miss common shingles whose posting was trimmed,
+        # so the array_intersect path below stays for that mode.  The
+        # count aggregate doubles as the pushdown barrier the array
+        # path's min() aggregate provides; the residual metric
+        # arithmetic is integer scalar math, harmless to re-evaluate.
+        common = pairs.groupBy("id_a", "id_b").agg(
+            F.count(F.lit(1)).cast("long").alias("n_common")
         )
-        n_a = shingled.select(
-            F.col(id_col).alias("id_a"), F.size("shingles").alias("_na")
+        sizes = shingled.select(
+            F.col(id_col), F.size("shingles").cast("long").alias("_n")
         )
-        n_b = shingled.select(
-            F.col(id_col).alias("id_b"), F.size("shingles").alias("_nb")
+        out = common.join(sizes.toDF("id_a", "n_a"), "id_a").join(
+            sizes.toDF("id_b", "n_b"), "id_b"
         )
-        return (
-            common.join(n_a, "id_a")
-            .join(n_b, "id_b")
-            .withColumn(
-                "jaccard",
-                F.round(
-                    F.col("_inter")
-                    / (F.col("_na") + F.col("_nb") - F.col("_inter")),
-                    4,
-                ),
-            )
-            .where(F.col("jaccard") >= F.lit(threshold))
-            .select("id_a", "id_b", "jaccard")
-        )
-    cand = (
-        a.join(
-            b,
-            (F.col("a._sh") == F.col("b._sh"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-        )
-        .distinct()
-    )
-    sh_a = shingled.select(
-        F.col(id_col).alias("id_a"), F.col("shingles").alias("_sh_a")
-    )
-    sh_b = shingled.select(
-        F.col(id_col).alias("id_b"), F.col("shingles").alias("_sh_b")
-    )
-    inter = F.size(F.array_intersect(F.col("_sh_a"), F.col("_sh_b"))).cast("long")
-    # the per-pair metrics live inside an aggregate over the (already
+        return out.select("id_a", "id_b", "n_common", "n_a", "n_b")
+    # the per-pair counts live inside an aggregate over the (already
     # unique) pair keys: a predicate cannot push through an Aggregate's
-    # non-grouping output, so the threshold filter stays ABOVE this node.
-    # As a plain projection, PushPredicateThroughJoin substituted the
-    # filter into the join condition, inlining the full-array intersect —
-    # the expensive expression then ran TWICE per candidate pair (once as
-    # join condition, once in the project).  Groups are singletons, so
-    # min() is the value itself and the extra exchange moves one
-    # (pair, 3 longs) row per candidate — bounded by the density guard.
-    jac = (
-        cand.join(sh_a, "id_a")
-        .join(sh_b, "id_b")
+    # non-grouping output, so a caller's threshold filter stays ABOVE this
+    # node.  As a plain projection, PushPredicateThroughJoin substituted
+    # the filter into the join condition, inlining the full-array
+    # intersect — the expensive expression then ran TWICE per candidate
+    # pair (once as join condition, once in the project).  Groups are
+    # singletons, so min() is the value itself and the extra exchange
+    # moves one (pair, 3 longs) row per candidate — bounded by the
+    # density guard.
+    return (
+        pairs.distinct()
+        .join(shingled.toDF("id_a", "_sh_a"), "id_a")
+        .join(shingled.toDF("id_b", "_sh_b"), "id_b")
         .groupBy("id_a", "id_b")
         .agg(
-            F.min(inter).alias("_inter"),
-            F.min(F.size("_sh_a")).alias("_na"),
-            F.min(F.size("_sh_b")).alias("_nb"),
+            F.min(
+                F.size(F.array_intersect("_sh_a", "_sh_b")).cast("long")
+            ).alias("n_common"),
+            F.min(F.size("_sh_a").cast("long")).alias("n_a"),
+            F.min(F.size("_sh_b").cast("long")).alias("n_b"),
         )
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("_inter")
-                / (F.col("_na") + F.col("_nb") - F.col("_inter")),
-                4,
-            ),
-        )
-        .where(F.col("jaccard") >= F.lit(threshold))
-        .select("id_a", "id_b", "jaccard")
     )
-    return jac
 
 
 def ngram_jaccard_pairs(
@@ -373,14 +351,15 @@ def ngram_jaccard_pairs(
     max_posting_len: Optional[int] = 1000,
     max_candidate_pairs: Optional[int] = DEFAULT_MAX_CANDIDATE_PAIRS,
 ) -> DataFrame:
-    """All document pairs with exact k-word-shingle Jaccard >= threshold.
+    """All document pairs with exact k-word-shingle Jaccard >= threshold,
+    as ``(id_a, id_b, jaccard)`` with ``id_a < id_b``.
 
     Blocking = the inverted index itself: only pairs sharing >= 1 shingle
     are generated. The default ``max_posting_len=1000`` (the stop-shingle
-    cut — see :func:`_pair_jaccard`) bounds per-shingle candidate work at
-    1000^2: the skew, not the total size, is what hurts at 100 TB, and a
-    single viral boilerplate shingle with an unbounded posting list is a
-    d^2 cartesian explosion. Pass ``max_posting_len=None`` for exact
+    cut — see :func:`_shingle_overlap`) bounds per-shingle candidate work
+    at 1000^2: the skew, not the total size, is what hurts at 100 TB, and
+    a single viral boilerplate shingle with an unbounded posting list is
+    a d^2 cartesian explosion. Pass ``max_posting_len=None`` for exact
     small-corpus runs where every shared shingle must count toward
     blocking; ``minhash_near_duplicates`` is the cheaper path at scale.
 
@@ -389,16 +368,22 @@ def ngram_jaccard_pairs(
     frame, which the stop-cut then reuses via a persisted share);
     pass ``max_candidate_pairs=None`` for a fully lazy plan.
 
-    Precondition: ``id_col`` is unique (it is not checked). With
-    ``max_posting_len=None`` the common-shingle count is a COUNT over
-    the posting self-join, so rows sharing an id inflate ``|A ∩ B|``
-    and repeat output pairs; deduplicate ids first.
+    Precondition: ``id_col`` is unique, unchecked (see
+    :func:`_shingle_overlap`).
     """
     shingled = shingled_df(ensure_parallelism(df), id_col, text_col, k)
-    return _pair_jaccard(
-        shingled, id_col, threshold=threshold,
-        max_posting_len=max_posting_len,
-        max_candidate_pairs=max_candidate_pairs,
+    overlap = _shingle_overlap(
+        shingled, id_col, max_posting_len, max_candidate_pairs,
+        "ngram_jaccard_pairs",
+    )
+    inter = F.col("n_common")
+    return (
+        overlap.withColumn(
+            "jaccard",
+            F.round(inter / (F.col("n_a") + F.col("n_b") - inter), 4),
+        )
+        .where(F.col("jaccard") >= F.lit(threshold))
+        .select("id_a", "id_b", "jaccard")
     )
 
 
@@ -634,7 +619,7 @@ def _verified_jaccard(
     probability, and long-array intersection is far cheaper.
 
     Aggregate barrier over the unique candidate keys (see
-    _pair_jaccard): keeps the threshold filter from being substituted
+    _shingle_overlap): keeps the threshold filter from being substituted
     into the join condition, where it re-evaluated the hash-array
     intersect+union once more per candidate.  Singleton groups, so
     min() is the value itself."""
@@ -716,20 +701,7 @@ def minhash_near_duplicates(
             .select("_band", "_key")
         )
         buckets = buckets.join(keep, ["_band", "_key"])
-    a = buckets.alias("a")
-    b_ = buckets.alias("b")
-    candidates = (
-        a.join(
-            b_,
-            (F.col("a._band") == F.col("b._band"))
-            & (F.col("a._key") == F.col("b._key"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
-        )
-        .distinct()
-    )
+    candidates = _self_pairs(buckets, ["_band", "_key"], id_col).distinct()
     if not verify:
         return candidates
     return _verified_jaccard(
@@ -768,27 +740,15 @@ def simhash_signatures(
     if token_hash != "xxhash64":
         raise ValueError(f"token_hash must be xxhash64|md5, got {token_hash!r}")
     hashes = F.transform(tokens, lambda t: F.xxhash64(t))
-    bit_cols = []
-    for j in range(64):
-        contrib = F.aggregate(
-            hashes,
-            F.lit(0),
-            lambda acc, h: acc
-            + F.when(F.shiftrightunsigned(h, j).bitwiseAND(F.lit(1)) == 1, 1).otherwise(
-                -1
-            ),
-        )
-        bit = F.when(contrib > 0, F.lit(1).cast("long")).otherwise(F.lit(0).cast("long"))
-        bit_cols.append(bit * F.lit(1 << j if j < 63 else -(1 << 63)))
-    sim = bit_cols[0]
-    for c in bit_cols[1:]:
-        sim = sim + c
-    return df.select(F.col(id_col), sim.alias("simhash"))
+    return df.select(
+        F.col(id_col), _simhash_from_hashes(hashes, 64).alias("simhash")
+    )
 
 
 def _simhash_from_hashes(hashes: Column, n_bits: int) -> Column:
-    """Majority-vote signature over the low ``n_bits`` of per-token hashes
-    (n_bits < 64 keeps the signature a positive bigint)."""
+    """Majority-vote signature over the low ``n_bits`` of per-token hashes.
+    Below 64 bits the signature is a non-negative bigint; at 64, bit 63
+    carries the two's-complement weight ``-(1 << 63)``."""
     bit_cols = []
     for j in range(n_bits):
         contrib = F.aggregate(
@@ -802,7 +762,7 @@ def _simhash_from_hashes(hashes: Column, n_bits: int) -> Column:
         bit = F.when(contrib > 0, F.lit(1).cast("long")).otherwise(
             F.lit(0).cast("long")
         )
-        bit_cols.append(bit * F.lit(1 << j))
+        bit_cols.append(bit * F.lit(1 << j if j < 63 else -(1 << 63)))
     sim = bit_cols[0]
     for c in bit_cols[1:]:
         sim = sim + c
@@ -816,43 +776,15 @@ def simhash_near_duplicates(
     *,
     max_hamming: int = 3,
 ) -> DataFrame:
-    """Candidate pairs whose SimHashes agree on >= 1 of 4 16-bit bands,
-    verified by exact Hamming distance <= max_hamming."""
-    sigs = simhash_signatures(df, id_col, text_col)
-    bands = sigs.select(
-        F.col(id_col),
-        F.col("simhash"),
-        F.posexplode(
-            F.array(
-                *[
-                    F.shiftrightunsigned(F.col("simhash"), 16 * b).bitwiseAND(
-                        F.lit(0xFFFF)
-                    )
-                    for b in range(4)
-                ]
-            )
-        ).alias("_band", "_key"),
-    )
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a._band") == F.col("b._band"))
-            & (F.col("a._key") == F.col("b._key"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            F.col("a.simhash").alias("_s_a"),
-            F.col("b.simhash").alias("_s_b"),
-        )
-        .distinct()
-    )
-    return (
-        cand.withColumn("hamming", F.bit_count(F.col("_s_a").bitwiseXOR(F.col("_s_b"))))
-        .where(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
+    """Pairs whose :func:`simhash_signatures` are within ``max_hamming``
+    bits, as ``(id_a, id_b, hamming)`` with ``id_a < id_b``: the banded
+    :func:`hamming_near_duplicates` kernel with 4 16-bit bands.  By
+    pigeonhole a pair within 3 bits agrees on at least one band, so the
+    output is exactly the all-pairs answer; ``max_hamming >= 4`` would
+    silently miss pairs and raises ``ValueError`` instead."""
+    return hamming_near_duplicates(
+        simhash_signatures(df, id_col, text_col), id_col, "simhash",
+        max_hamming=max_hamming, bands=4,
     )
 
 
@@ -1039,19 +971,8 @@ def embedding_near_duplicates(
                 )
             ).alias("_band", "_key"),
         )
-        a, b = banded.alias("a"), banded.alias("b")
-        pairs = a.join(
-            b,
-            (F.col("a._band") == F.col("b._band"))
-            & (F.col("a._key") == F.col("b._key"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        ).select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            F.col("a._v").alias("_va"),
-            F.col("b._v").alias("_vb"),
-            F.col("a._n").alias("_na"),
-            F.col("b._n").alias("_nb"),
+        pairs = _self_pairs(
+            banded, ["_band", "_key"], id_col, carry=["_v", "_n"]
         )
     else:
         cand = _allpairs_cosine_screen(base, id_col, threshold)
@@ -1566,43 +1487,42 @@ def minhash_cluster_dedup(
     # The aggregate bounds reducer volume at distinct-buckets x
     # map-tasks, and the join-back is AQE-skew-splittable.  buckets is
     # persisted (24 bytes/row x bands — cheaper than re-evaluating the
-    # signature expressions for the join's second branch) and released
-    # with the shingle cache below.
+    # signature expressions for the join's second branch).  Both caches
+    # serve only the eager label propagation and are released once it
+    # returns or raises.
     buckets = _lsh_buckets(hashed, id_col, "_shash", num_hashes, bands).persist()
-    mins = buckets.groupBy("_band", "_key").agg(
-        F.min(id_col).alias("_min_id")
-    )
-    star = (
-        buckets.join(mins, ["_band", "_key"])
-        .where(F.col(id_col) != F.col("_min_id"))
-        .select(F.col(id_col).alias("id_a"), F.col("_min_id").alias("id_b"))
-        .distinct()
-    )
-    if verify:
-        sh_a = hashed.select(F.col(id_col).alias("id_a"), F.col("_shash").alias("_sh_a"))
-        sh_b = hashed.select(F.col(id_col).alias("id_b"), F.col("_shash").alias("_sh_b"))
+    try:
+        mins = buckets.groupBy("_band", "_key").agg(
+            F.min(id_col).alias("_min_id")
+        )
         star = (
-            star.join(sh_a, "id_a")
-            .join(sh_b, "id_b")
-            .where(
-                F.size(F.array_intersect("_sh_a", "_sh_b"))
-                / F.size(F.array_union("_sh_a", "_sh_b"))
-                >= F.lit(threshold)
+            buckets.join(mins, ["_band", "_key"])
+            .where(F.col(id_col) != F.col("_min_id"))
+            .select(F.col(id_col).alias("id_a"), F.col("_min_id").alias("id_b"))
+            .distinct()
+        )
+        if verify:
+            sh_a = hashed.toDF("id_a", "_sh_a")
+            sh_b = hashed.toDF("id_b", "_sh_b")
+            star = (
+                star.join(sh_a, "id_a")
+                .join(sh_b, "id_b")
+                .where(
+                    F.size(F.array_intersect("_sh_a", "_sh_b"))
+                    / F.size(F.array_union("_sh_a", "_sh_b"))
+                    >= F.lit(threshold)
+                )
+                .select("id_a", "id_b")
             )
-            .select("id_a", "id_b")
-        )
-    comp = duplicate_components(star)
+        comp = duplicate_components(star)
+    finally:
+        hashed.unpersist()
+        buckets.unpersist()
     ids = df.select(F.col(id_col))
-    out = (
-        ids.join(comp, ids[id_col] == comp["vertex"], "left")
-        .select(
-            F.col(id_col),
-            F.coalesce(F.col("component"), F.col(id_col)).alias("canonical_id"),
-        )
+    return ids.join(comp, ids[id_col] == comp["vertex"], "left").select(
+        F.col(id_col),
+        F.coalesce(F.col("component"), F.col(id_col)).alias("canonical_id"),
     )
-    hashed.unpersist()
-    buckets.unpersist()
-    return out
 
 
 def cross_corpus_near_duplicates(
@@ -2064,19 +1984,14 @@ def semantic_dedup(
     # single dot fold per pair (same trick as embedding_near_duplicates;
     # bit-identical: same folds, same product)
     assigned = assigned.withColumn("_n", norm_expr(F.col("_v")))
-    a, b = assigned.alias("a"), assigned.alias("b")
-    denom = F.col("a._n") * F.col("b._n")
+    denom = F.col("_na") * F.col("_nb")
     cos = F.when(
-        denom > 0, dot_expr(F.col("a._v"), F.col("b._v")) / denom
+        denom > 0, dot_expr(F.col("_va"), F.col("_vb")) / denom
     ).otherwise(F.lit(0.0))
     dropped = (
-        a.join(
-            b,
-            (F.col("a._ck") == F.col("b._ck"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
+        _self_pairs(assigned, ["_ck"], id_col, carry=["_v", "_n"])
         .where(F.round(cos, 4) >= F.lit(threshold))
-        .select(F.col(f"b.{id_col}").alias(id_col))
+        .select(F.col("id_b").alias(id_col))
         .distinct()
     )
     return (
@@ -2143,17 +2058,10 @@ def fuzzy_match_records(
     )
     if max_block_size is not None:
         base = _cap_fuzzy_blocks(base, block_len, max_block_size)
-    a, b = base.alias("a"), base.alias("b")
     return (
-        a.join(
-            b,
-            (F.col("a._blk") == F.col("b._blk"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
+        _self_pairs(base, ["_blk"], id_col, carry=["_nm"])
         .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            F.levenshtein(F.col("a._nm"), F.col("b._nm")).alias("distance"),
+            "id_a", "id_b", F.levenshtein("_nma", "_nmb").alias("distance")
         )
         .where(F.col("distance") <= F.lit(max_distance))
     )
@@ -2305,8 +2213,7 @@ def hamming_near_duplicates(
     settings that silently lose the guarantee.
 
     Scale shape: ``bands`` 10-byte rows shuffle per signature;
-    candidate volume is band-bucket bounded, identical to the SimHash
-    path above.
+    candidate volume is band-bucket bounded.
     """
     if bands not in (1, 2, 4, 8):
         raise ValueError(f"bands must divide 64 bits evenly (1/2/4/8), got {bands}")
@@ -2336,20 +2243,7 @@ def hamming_near_duplicates(
     ).select(
         id_col, "_h", F.col("_band.b").alias("_b"), F.col("_band.k").alias("_k")
     )
-    left = banded.select(
-        F.col("_b"), F.col("_k"),
-        F.col(id_col).alias("id_a"), F.col("_h").alias("_ha"),
-    )
-    right = banded.select(
-        F.col("_b"), F.col("_k"),
-        F.col(id_col).alias("id_b"), F.col("_h").alias("_hb"),
-    )
-    cand = (
-        left.join(right, ["_b", "_k"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", "_ha", "_hb")
-        .distinct()
-    )
+    cand = _self_pairs(banded, ["_b", "_k"], id_col, carry=["_h"]).distinct()
     return (
         cand.withColumn(
             "hamming", F.bit_count(F.col("_ha").bitwiseXOR(F.col("_hb")))
@@ -2379,113 +2273,29 @@ def containment_pairs(
     ``(id_a, id_b, n_a, n_b, n_common, containment_a_in_b,
     containment_b_in_a)`` with ``id_a < id_b``.
 
-    Blocking and scale shape are shared with
-    :func:`ngram_jaccard_pairs`: the inverted shingle index generates
-    only pairs with >= 1 common shingle, and ``max_posting_len`` (the
-    stop-shingle cut) bounds per-shingle candidate work at cap^2 so a
-    viral boilerplate phrase can't go cartesian at 100 TB.  The cut
-    applies to the blocking index ONLY: candidate pairs come from the
-    cut index, then ``n_common`` / both containments are computed
-    exactly from the full distinct-shingle arrays per candidate
-    (``array_intersect``) — the cut affects recall, never the measure.
-    All emitted numbers are integers or single ratios of integers —
-    exactly replayable by a SQL oracle.
+    Blocking, the stop-shingle cut and the counts are shared with
+    :func:`ngram_jaccard_pairs` through :func:`_shingle_overlap`: only
+    pairs with >= 1 common shingle are generated, ``max_posting_len``
+    bounds per-shingle candidate work at cap^2 and affects recall,
+    never the measure.  All emitted numbers are integers or single
+    ratios of integers — exactly replayable by a SQL oracle.
 
     NOTE: the candidate-density guard runs an EAGER count-aggregate
     Spark job at call time (shared with the stop-cut via a persisted
     document-frequency frame); ``max_candidate_pairs=None`` keeps the
     plan fully lazy.
 
-    Precondition: ``id_col`` is unique (it is not checked). With
-    ``max_posting_len=None`` ``n_common`` is a COUNT over the posting
-    self-join, so rows sharing an id inflate it and repeat output
-    pairs; deduplicate ids first.
+    Precondition: ``id_col`` is unique, unchecked (see
+    :func:`_shingle_overlap`).
     """
     if not 0.0 < threshold <= 1.0:
         raise ValueError(f"threshold must be in (0, 1], got {threshold}")
     shingled = shingled_df(ensure_parallelism(df), id_col, text_col, k)
-    posting = shingled.select(
-        F.col(id_col), F.explode_outer("shingles").alias("_sh")
-    ).where(F.col("_sh").isNotNull())
-    blocking = _blocked_posting(
-        posting, "_sh", max_posting_len, max_candidate_pairs,
-        "containment_pairs",
-    )
-    a = blocking.alias("a")
-    b = blocking.alias("b")
-    if max_posting_len is None:
-        # exact blocking: |intersection| is a plain count over the
-        # posting self-join (one row per (pair, common shingle) —
-        # shingle arrays are distinct-by-construction), so the
-        # per-pair full-array intersect and the two array-carrying
-        # joins disappear (see _pair_jaccard's count path)
-        common = (
-            a.join(
-                b,
-                (F.col("a._sh") == F.col("b._sh"))
-                & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-            )
-            .groupBy(
-                F.col(f"a.{id_col}").alias("id_a"),
-                F.col(f"b.{id_col}").alias("id_b"),
-            )
-            .agg(F.count(F.lit(1)).cast("long").alias("n_common"))
-        )
-        out = (
-            common.join(
-                shingled.select(
-                    F.col(id_col).alias("id_a"),
-                    F.size("shingles").cast("long").alias("n_a"),
-                ),
-                "id_a",
-            )
-            .join(
-                shingled.select(
-                    F.col(id_col).alias("id_b"),
-                    F.size("shingles").cast("long").alias("n_b"),
-                ),
-                "id_b",
-            )
-        )
-    else:
-        cand = (
-            a.join(
-                b,
-                (F.col("a._sh") == F.col("b._sh"))
-                & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-            )
-            .select(
-                F.col(f"a.{id_col}").alias("id_a"),
-                F.col(f"b.{id_col}").alias("id_b"),
-            )
-            .distinct()
-        )
-        sh_a = shingled.select(
-            F.col(id_col).alias("id_a"), F.col("shingles").alias("_sh_a")
-        )
-        sh_b = shingled.select(
-            F.col(id_col).alias("id_b"), F.col("shingles").alias("_sh_b")
-        )
-        # aggregate barrier over the unique pair keys (see
-        # _pair_jaccard): keeps the threshold filter from being
-        # substituted into the join condition, where it re-evaluated
-        # the full-array intersect per candidate pair.  Singleton
-        # groups, so min() is the value.
-        out = (
-            cand.join(sh_a, "id_a")
-            .join(sh_b, "id_b")
-            .groupBy("id_a", "id_b")
-            .agg(
-                F.min(
-                    F.size(F.array_intersect(F.col("_sh_a"), F.col("_sh_b")))
-                    .cast("long")
-                ).alias("n_common"),
-                F.min(F.size("_sh_a").cast("long")).alias("n_a"),
-                F.min(F.size("_sh_b").cast("long")).alias("n_b"),
-            )
-        )
     out = (
-        out
+        _shingle_overlap(
+            shingled, id_col, max_posting_len, max_candidate_pairs,
+            "containment_pairs",
+        )
         .withColumn(
             "containment_a_in_b",
             F.round(F.col("n_common") / F.col("n_a"), 4),
@@ -2590,19 +2400,7 @@ def containment_sketch_pairs(
         posting, "_h", max_posting_len, max_candidate_pairs,
         "containment_sketch_pairs",
     )
-    pairs = (
-        posting.alias("a")
-        .join(
-            posting.alias("b"),
-            (F.col("a._h") == F.col("b._h"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-        )
-        .distinct()
-    )
+    pairs = _self_pairs(posting, ["_h"], id_col).distinct()
     sa = sketches.select(
         F.col(id_col).alias("id_a"), F.col("_sk").alias("_sa")
     )
@@ -2622,7 +2420,7 @@ def containment_sketch_pairs(
     # aggregate over the unique pair keys is a pushdown barrier — as a
     # plain projection, the threshold filter was substituted into the
     # join condition, re-running the whole merge+estimate arithmetic
-    # per candidate pair (see _pair_jaccard).  Singleton groups, so
+    # per candidate pair (see _shingle_overlap).  Singleton groups, so
     # min() is the value itself.
     joined = (
         pairs.join(sa, "id_a")
@@ -2770,10 +2568,14 @@ def paragraph_dedup(
     id (``%019d#%010d`` over ``(doc id, paragraph index)`` — its
     lexicographic min IS the first occurrence in corpus order for any
     non-negative int64 id, so the survivor rule matches
-    ``method="exact"``); requires an integral, non-negative ``id_col``
-    (non-negativity is enforced by an eager one-row ``min(id)``
-    aggregate over the raw input — column-pruned, no explode —
-    raising with re-mapping guidance before any heavy work runs).  ``method="exact"`` keeps the first
+    ``method="exact"``); requires an integral ``id_col`` and
+    non-negative ids.  The sign is checked in the plan, on the
+    paragraph id itself: a negative id raises only if one of its
+    paragraphs reaches a pid (has at least ``min_tokens`` tokens), and
+    then as a Spark error naming the id, not a ``ValueError`` (the
+    clustering is eager, so it still surfaces during this call).  A row
+    whose paragraphs are all structural never builds a pid and passes
+    through.  ``method="exact"`` keeps the first
     occurrence of every distinct trimmed paragraph (the
     :func:`~dbldatagen_spark.functions.curation.dedup_lines_corpus`
     winner rule at paragraph granularity) — fully replayable in

@@ -286,7 +286,7 @@ def token_vocabulary(
     # explode_outer (here and in the other token/gram explodes): plain
     # explode gets an inferred size(<array>) > 0 filter whose pushdown
     # INLINES the tokenization into a second, pre-exchange evaluation
-    # (see dedup._pair_jaccard for the measured 25x case); the existing
+    # (see dedup._shingle_overlap for the measured 25x case); the existing
     # post-explode predicates already drop the outer variant's NULL rows
     toks = tokens_expr(F.col(text_col))
     return (

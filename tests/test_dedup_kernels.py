@@ -1,9 +1,14 @@
 """Label propagation (``duplicate_components``) and the MinHash band-key
 expressions shared by the LSH dedup operators: results against a
 union-find reference, Spark job budget, release of checkpoints, and
-golden signature/band-key values."""
+golden signature/band-key values.  The pair family on the shared
+``_self_pairs``/``_shingle_overlap`` kernels: golden output digests and
+Exchange counts, golden SimHash values, the banded SimHash search
+against brute force, and cache release in ``minhash_cluster_dedup``."""
 
+import hashlib
 import random
+import re
 
 import pytest
 
@@ -204,3 +209,279 @@ def test_minhash_band_exprs_golden(spark, ansi, num_hashes, bands):
         spark.conf.set("spark.sql.ansi.enabled", prior)
     got = {r["doc_id"]: (list(r["_sig"]), list(r["_keys"])) for r in rows}
     assert got == _GOLDEN[(num_hashes, bands)]
+
+
+# ---------------------------------------------------------------------------
+# The pair family: every operator built on the equi-self-join with
+# id_a < id_b, pinned by an order-insensitive fingerprint of its output and
+# the Exchange count of its executed plan.
+
+_WORDS = [f"{a}{b}" for a in "bcdfghklmnprstvz" for b in ("a", "e", "io", "u")]
+_BOILERPLATE = "all rights reserved by the original publisher"
+
+
+def _pair_docs(spark):
+    """Seeded corpus with planted structure: near-copies (1-2 word edits),
+    exact copies, contained slices, a boilerplate prefix shared by at
+    least 15 docs (above a posting cut of 5; three of them are
+    boilerplate plus one word, so their pairs block only through the
+    cut postings) and texts shorter than k words."""
+    rng = random.Random(17)
+    texts = [
+        " ".join(rng.choice(_WORDS) for _ in range(rng.randint(12, 30)))
+        for _ in range(40)
+    ]
+    texts[:12] = [f"{_BOILERPLATE} {t}" for t in texts[:12]]
+    for src in rng.sample(range(40), 15):
+        words = texts[src].split()
+        for _ in range(rng.randint(1, 2)):
+            words[rng.randrange(len(words))] = rng.choice(_WORDS)
+        texts.append(" ".join(words))
+    texts += [texts[i] for i in rng.sample(range(40), 3)]
+    for src in rng.sample(range(40), 6):
+        words = texts[src].split()
+        lo = rng.randrange(len(words) - 8)
+        texts.append(" ".join(words[lo:lo + rng.randint(8, 12)]))
+    texts += [f"{_BOILERPLATE} {rng.choice(_WORDS)}" for _ in range(3)]
+    texts += ["hello world", "hello world", "solo"]
+    ids = rng.sample(range(1, 10_000), len(texts))
+    return spark.createDataFrame(list(zip(ids, texts)), "doc_id long, text string")
+
+
+def _pair_vectors(spark):
+    """64-dim float vectors: 45 random, 12 perturbed copies, 2 exact
+    copies and one zero vector."""
+    rng = random.Random(23)
+    vecs = [[rng.gauss(0.0, 1.0) for _ in range(64)] for _ in range(45)]
+    vecs += [
+        [x + rng.gauss(0.0, 0.05) for x in vecs[i]] for i in rng.sample(range(45), 12)
+    ]
+    vecs += [list(vecs[i]) for i in rng.sample(range(45), 2)]
+    vecs.append([0.0] * 64)
+    ids = rng.sample(range(1, 10_000), len(vecs))
+    return spark.createDataFrame(
+        list(zip(ids, vecs)), "vec_id long, embedding array<float>"
+    )
+
+
+def _pair_names(spark):
+    """Customer names with planted typos and case/space variants."""
+    rng = random.Random(29)
+    first = ["maria", "john", "mario", "joan", "robert", "roberta", "anna",
+             "annabel", "peter", "petra", "michael", "michelle"]
+    last = ["smith", "smyth", "jones", "johnson", "garcia", "garcias",
+            "miller", "muller", "brown", "browne"]
+    names = [f"{rng.choice(first)} {rng.choice(last)}" for _ in range(50)]
+    for src in rng.sample(range(50), 15):
+        chars = list(names[src])
+        for _ in range(rng.randint(1, 3)):
+            chars[rng.randrange(4, len(chars))] = rng.choice("aeiouxyz")
+        names.append("".join(chars))
+    names += [f"  {n.upper()} " for n in rng.sample(names[:50], 5)]
+    ids = rng.sample(range(1, 10_000), len(names))
+    return spark.createDataFrame(list(zip(ids, names)), "cust_id long, name string")
+
+
+def _pair_signatures(spark):
+    """Signed 64-bit signatures: 40 random, 20 copies with 0-5 bits
+    flipped."""
+    rng = random.Random(31)
+
+    def signed(u):
+        return u - (1 << 64) if u >= 1 << 63 else u
+
+    sigs = [rng.getrandbits(64) for _ in range(40)]
+    for src in rng.sample(range(40), 20):
+        s = sigs[src]
+        for bit in rng.sample(range(64), rng.randint(0, 5)):
+            s ^= 1 << bit
+        sigs.append(s)
+    ids = rng.sample(range(1, 10_000), len(sigs))
+    return spark.createDataFrame(
+        [(i, signed(s)) for i, s in zip(ids, sigs)], "id long, sig long"
+    )
+
+
+def _pair_ops(spark):
+    d = dedup_mod
+    docs = _pair_docs(spark)
+    vecs = _pair_vectors(spark)
+    names = _pair_names(spark)
+    sigs = _pair_signatures(spark)
+    ops = {}
+    for cut in (None, 1000, 5):
+        ops[f"jaccard_cut{cut}"] = lambda cut=cut: d.ngram_jaccard_pairs(
+            docs, "doc_id", "text", threshold=0.3, max_posting_len=cut
+        )
+        ops[f"containment_cut{cut}"] = lambda cut=cut: d.containment_pairs(
+            docs, "doc_id", "text", threshold=0.5, max_posting_len=cut
+        )
+    ops["containment_sketch"] = lambda: d.containment_sketch_pairs(
+        docs, "doc_id", "text", sketch_k=8, threshold=0.5
+    )
+    ops["minhash_32_16"] = lambda: d.minhash_near_duplicates(
+        docs, "doc_id", "text", num_hashes=32, bands=16, threshold=0.5
+    )
+    for mode in ("xxhash64", "md5"):
+        ops[f"simhash_{mode}"] = lambda mode=mode: d.simhash_signatures(
+            docs, "doc_id", "text", token_hash=mode
+        )
+    ops["simhash_near_duplicates"] = lambda: d.simhash_near_duplicates(
+        docs, "doc_id", "text"
+    )
+    ops["hamming"] = lambda: d.hamming_near_duplicates(
+        sigs, "id", "sig", max_hamming=3, bands=4
+    )
+    ops["fuzzy"] = lambda: d.fuzzy_match_records(names, "cust_id", "name")
+    ops["semantic"] = lambda: d.semantic_dedup(
+        vecs, "vec_id", "embedding", threshold=0.9, method="lsh", num_planes=4
+    )
+    ops["embedding_bucketed"] = lambda: d.embedding_near_duplicates(
+        vecs, "vec_id", "embedding", threshold=0.9, num_planes=8
+    )
+    return ops
+
+
+_EXCHANGE_NODE = re.compile(r"^[\s:+\-]*(?:\*\(\d+\)\s*)?\w*Exchange\b", re.M)
+
+
+def _fingerprint(df):
+    """``(rows, sha256 prefix)``: an order-insensitive digest of the
+    collected rows."""
+    rows = df.collect()
+    digest = hashlib.sha256(
+        repr(sorted(tuple(r) for r in rows)).encode()
+    ).hexdigest()[:16]
+    return len(rows), digest
+
+
+def _exchanges(df):
+    """Exchange nodes in the executed plan.  Read with adaptive execution
+    off: an adaptive final plan depends on the order in which query
+    stages finish, so its node count is not repeatable."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return len(_EXCHANGE_NODE.findall(plan))
+
+
+# Recorded from the operators' earlier hand-written self-joins: row count,
+# order-insensitive digest and executed-plan Exchange count, identical at
+# 2 and 7 shuffle partitions with ANSI off and on.
+_PAIR_GOLDEN = {
+    "jaccard_cutNone": (29, "48b882a573805c25", 7),
+    "containment_cutNone": (82, "875d195e4bcf653f", 7),
+    "jaccard_cut1000": (29, "48b882a573805c25", 9),
+    "containment_cut1000": (82, "875d195e4bcf653f", 9),
+    "jaccard_cut5": (26, "c3e65a23f04309e0", 9),
+    "containment_cut5": (29, "f03bc9f61c5f0e35", 9),
+    "containment_sketch": (136, "5f269738e172c0f2", 10),
+    "minhash_32_16": (23, "9750de252716d1ea", 7),
+    "simhash_xxhash64": (70, "2e69e6bfa326e9bf", 0),
+    "simhash_md5": (70, "5e37f0dc622eb3c0", 0),
+    "simhash_near_duplicates": (9, "8defeb1ff88a7774", 3),
+    "hamming": (14, "34a0f0e7adcf66e9", 3),
+    "fuzzy": (53, "8663c3ae579c4e1e", 2),
+    "semantic": (60, "8408022a40bb671a", 4),
+    "embedding_bucketed": (15, "e812cdcc58731022", 3),
+}
+
+
+@pytest.mark.parametrize("ansi", ["false", "true"])
+@pytest.mark.parametrize("partitions", ["2", "7"])
+def test_pair_family_golden(spark, partitions, ansi):
+    keys = ("spark.sql.shuffle.partitions", "spark.sql.ansi.enabled",
+            "spark.sql.adaptive.enabled")
+    prior = {k: spark.conf.get(k) for k in keys}
+    spark.conf.set("spark.sql.shuffle.partitions", partitions)
+    spark.conf.set("spark.sql.ansi.enabled", ansi)
+    got = {}
+    try:
+        for name, op in _pair_ops(spark).items():
+            # cached frames from an earlier op carry size statistics that
+            # can change join planning; start each op from an empty cache
+            spark.catalog.clearCache()
+            spark.conf.set("spark.sql.adaptive.enabled", "false")
+            df = op()
+            got[name] = (*_fingerprint(df), _exchanges(df))
+            spark.conf.set("spark.sql.adaptive.enabled", "true")
+            assert _fingerprint(op()) == got[name][:2], name
+    finally:
+        spark.catalog.clearCache()
+        for k, v in prior.items():
+            spark.conf.set(k, v)
+    assert got == _PAIR_GOLDEN
+
+
+_SIMHASH_TEXTS = [
+    "the quick brown fox jumps over the lazy dog",
+    "Hello   World",
+    "a",
+    "",
+    "lorem ipsum dolor sit amet consectetur adipiscing elit sed do",
+]
+_SIMHASH_GOLDEN = {
+    "xxhash64": [1649482817916862672, 4828021670264516882,
+                 -8582455328737087284, -7444071767201028348,
+                 364538773478920972],
+    "md5": [71287435741409892, 419978266733191168, 57446577476672362,
+            955282973525019424, 897360378449667610],
+}
+
+
+@pytest.mark.parametrize("ansi", ["false", "true"])
+@pytest.mark.parametrize("token_hash", sorted(_SIMHASH_GOLDEN))
+def test_simhash_signatures_golden(spark, token_hash, ansi):
+    df = spark.createDataFrame(
+        list(enumerate(_SIMHASH_TEXTS)), "doc_id long, text string"
+    )
+    prior = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", ansi)
+    try:
+        rows = dedup_mod.simhash_signatures(
+            df, "doc_id", "text", token_hash=token_hash
+        ).collect()
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prior)
+    got = [s for _, s in sorted((r["doc_id"], r["simhash"]) for r in rows)]
+    assert got == _SIMHASH_GOLDEN[token_hash]
+
+
+def test_simhash_near_duplicates_matches_brute_force(spark):
+    """Four 16-bit bands: by pigeonhole every pair within 3 bits shares a
+    band, so the banded join finds exactly the all-pairs answer; at 4
+    bits that guarantee is gone and the operator refuses."""
+    from pyspark.sql import functions as F
+
+    docs = _pair_docs(spark)
+    sigs = dedup_mod.simhash_signatures(docs, "doc_id", "text")
+    a = sigs.select(F.col("doc_id").alias("id_a"), F.col("simhash").alias("_a"))
+    b = sigs.select(F.col("doc_id").alias("id_b"), F.col("simhash").alias("_b"))
+    everything = a.crossJoin(b).where(F.col("id_a") < F.col("id_b")).select(
+        "id_a", "id_b", F.bit_count(F.col("_a").bitwiseXOR(F.col("_b"))).alias("h")
+    )
+    for max_hamming in range(4):
+        want = {
+            tuple(r) for r in everything.where(F.col("h") <= max_hamming).collect()
+        }
+        got = {
+            tuple(r)
+            for r in dedup_mod.simhash_near_duplicates(
+                docs, "doc_id", "text", max_hamming=max_hamming
+            ).collect()
+        }
+        assert got == want, max_hamming
+    assert {h for _, _, h in want} - {0}  # near pairs, not only exact copies
+    with pytest.raises(ValueError, match="pigeonhole"):
+        dedup_mod.simhash_near_duplicates(docs, "doc_id", "text", max_hamming=4)
+
+
+def test_minhash_cluster_dedup_releases_caches_on_error(spark, monkeypatch):
+    def failing(pairs, *args):
+        pairs.count()  # materializes the shingle-hash and bucket caches
+        raise RuntimeError("propagation failed")
+
+    monkeypatch.setattr(dedup_mod, "_propagate_components", failing)
+    docs = _pair_docs(spark)
+    before = _persisted_ids(spark)
+    with pytest.raises(RuntimeError, match="propagation failed"):
+        dedup_mod.minhash_cluster_dedup(docs, "doc_id", "text")
+    assert _persisted_ids(spark) - before == set()

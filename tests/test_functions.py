@@ -7922,6 +7922,26 @@ class TestParagraphDedup:
             df, "doc_id", "text", method="exact"
         ).count() == 2
 
+    def test_minhash_negative_id_below_min_tokens_passes(self, spark):
+        from dbldatagen_spark.functions import paragraph_dedup
+
+        # the negative-id check rides the paragraph id, so a row whose
+        # paragraphs are all structural (below min_tokens) never builds
+        # one and passes through untouched
+        dup = "some body of text here"
+        df = spark.createDataFrame(
+            [(-5, "hi\n\nyo"), (1, f"{dup}\n\nhi"), (2, dup)],
+            "doc_id long, text string",
+        )
+        out = {r["doc_id"]: r for r in paragraph_dedup(
+            df, "doc_id", "text", method="minhash", min_tokens=2
+        ).collect()}
+        assert out[-5]["deduped_text"] == "hi\n\nyo"
+        assert out[-5]["n_paragraphs_removed"] == 0
+        assert out[1]["n_paragraphs_removed"] == 0
+        assert out[2]["deduped_text"] == ""
+        assert out[2]["n_paragraphs_removed"] == 1
+
     def test_minhash_13_digit_ids_keep_corpus_order(self, spark):
         from dbldatagen_spark.functions import paragraph_dedup
 
