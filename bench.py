@@ -139,20 +139,15 @@ def _bench_generate(spark) -> None:
 
 
 def main() -> None:
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
     import __spark_entry__ as entrymod
+    from dbldatagen_spark.session import tool_session
 
-    spark = (
-        SparkSession.builder.master(f"local[{CPUS}]")
-        .appName("dbldatagen_spark-bench")
-        .config("spark.sql.shuffle.partitions", CPUS)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
-        .getOrCreate()
+    spark = tool_session(
+        "dbldatagen_spark-bench",
+        int(CPUS),
+        os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
     )
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -308,21 +303,15 @@ def main() -> None:
     # blessed.
     noop_timings: dict[str, float] = {}
     if os.environ.get("SPARK_GRAFT_NOOP_COMPANIONS") == "1":
-        def _noop_best(fn, runs: int = 3) -> float:
-            fn()  # untimed compile/JIT warmup
-            best = float("inf")
-            for _ in range(runs):
-                t0 = time.perf_counter()
-                fn()
-                best = min(best, time.perf_counter() - t0)
-            return round(best, 3)
+        from scripts.measure import best_of
 
         for name in headline:
             if name not in qs:
                 continue
-            noop_timings[f"{name}__noop"] = _noop_best(
+            noop_timings[f"{name}__noop"] = best_of(
                 lambda name=name: qs[name](spark, SF_DIR)
-                .write.format("noop").mode("overwrite").save()
+                .write.format("noop").mode("overwrite").save(),
+                3,
             )
 
     # contention heuristic: each query's first timed run comes AFTER its own

@@ -961,6 +961,15 @@ def calibration_report(
     as a broadcast one-row frame; no eager job at construction —
     r16); the cumulative window runs over the ``n_bins``-row report
     frame, never the corpus.
+
+    Errors: bad ``n_bins``/``lo``/``hi`` and missing columns raise
+    ``ValueError`` at construction.  With the auto range, an input with
+    no valid (finite score, non-NULL label) rows raises at ACTION time,
+    as a Spark error (``pyspark.errors.SparkRuntimeException`` from an
+    in-plan ``raise_error``), not a ``ValueError``: construction runs
+    no job, and the raise fires when ``bin_lo``/``bin_hi`` are
+    evaluated — a consumer that reads only the count columns gets the
+    all-zero report instead.
     """
     if n_bins < 1 or n_bins > 4096:
         raise ValueError(f"n_bins must be in [1, 4096], got {n_bins}")

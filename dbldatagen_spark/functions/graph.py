@@ -50,9 +50,10 @@ def pagerank(
       weight ``w`` carries ``(damped div W) * w +
       ((damped mod W) * w) div W`` — algebraically exactly
       ``floor(damped * w / W)`` but computed without the 128-bit
-      intermediate, so int64 replays it (an EAGER one-row aggregate
-      validates ``max(W) * max(w) < 2^62`` up front and raises with
-      re-scaling guidance instead of overflowing silently);
+      intermediate, so int64 replays it (a one-row aggregate riding
+      iteration 1's plan checks ``max(W) * max(w) < 2^62`` and raises
+      with re-scaling guidance instead of overflowing silently — see
+      Errors below);
       ``u' = base + sum(shares arriving at the node)`` with
       ``base = ((scale div N) * (1_000_000 - damping_ppm)) div
       1_000_000``.
@@ -80,6 +81,13 @@ def pagerank(
     contract) so plan depth stays constant across iterations.
     Driver cost: one count job up front plus one materializing action
     per iteration.
+
+    Errors: invalid ``damping_ppm``/``iterations``/``scale`` raise
+    ``ValueError`` before any Spark work.  The weighted headroom guard
+    is an in-plan ``raise_error``: it fires while iteration 1's
+    checkpoint materializes, which is still inside this call (every
+    iteration checkpoints eagerly), and surfaces as a Spark error
+    (``pyspark.errors.SparkRuntimeException``), not a ``ValueError``.
     """
     if not 0 <= damping_ppm <= 1_000_000:
         raise ValueError(

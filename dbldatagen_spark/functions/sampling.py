@@ -1006,6 +1006,17 @@ def authority_weighted_sample(
     at the default pagerank scale of 1e12 the product tops out near
     1e18, inside int64; rescale rank units before calling if you
     carry larger units.
+
+    Errors: bad ppm bounds, ``hash_mode`` or ``level``, missing columns
+    and clashing output columns raise ``ValueError`` at construction.
+    The duplicate-node-key and int64-headroom guards are in-plan
+    ``raise_error`` calls: construction runs no Spark job, and they
+    raise at ACTION time as Spark errors
+    (``pyspark.errors.SparkRuntimeException``), not ``ValueError``.  The
+    duplicate-key guard gates the join key, so any action over the
+    output fires it, whatever columns it keeps; the headroom guard
+    fires when ``<prefix>_keep_ppm`` (or ``<prefix>_keep``) is
+    evaluated.
     """
     if not 0 <= base_ppm <= max_ppm <= 1_000_000:
         raise ValueError(

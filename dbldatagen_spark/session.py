@@ -1,5 +1,6 @@
 """Tuned SparkSession factory: the configs this engine assumes at scale,
-in one place.
+in one place — plus :func:`tool_session`, the plain local session the
+repository's scripts, benchmark and tests share.
 
 Nothing here is required — every operator works on a stock session — but
 these are the settings the 100 TB deployment should start from, and
@@ -9,6 +10,7 @@ buried in docs.
 
 from __future__ import annotations
 
+import os
 from typing import Any, Dict, Optional
 
 #: Configs keyed by why they matter.
@@ -22,7 +24,9 @@ RECOMMENDED_CONFIGS: Dict[str, str] = {
     # join keys into the big side's scan (shuffle-join complement to
     # static partition pruning)
     "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
-    "spark.sql.optimizer.runtimeFilter.semiJoinReduction.enabled": "true",
+    # (runtimeFilter.semiJoinReduction is deliberately absent: on Spark
+    # 4.1.2 setting it alone makes a plain
+    # ``spark.range(1000).selectExpr("sum(id)").collect()`` hang)
     # Arrow transfer for the pandas-UDF surfaces (templates, Faker,
     # multimodal, k-means/PCA partials)
     "spark.sql.execution.arrow.pyspark.enabled": "true",
@@ -70,3 +74,30 @@ def tuned_session(
     return tuned_builder(
         app_name, master, shuffle_partitions, **overrides
     ).getOrCreate()
+
+
+def tool_session(
+    app_name: str,
+    cpus: Optional[int] = None,
+    driver_memory: Optional[str] = None,
+):
+    """The plain local session the repository's tools and tests run on:
+    ``local[cpus]`` with ``spark.sql.shuffle.partitions = cpus``, UTC,
+    AQE on and the UI off.  ``cpus`` defaults to ``$SPARK_GRAFT_CPUS``,
+    else ``os.cpu_count()``.  Unlike :func:`tuned_session` it sets none of
+    :data:`RECOMMENDED_CONFIGS` beyond those, so measurements stay
+    comparable with the stock-session history."""
+    from pyspark.sql import SparkSession
+
+    cpus = int(cpus or os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
+    b = (
+        SparkSession.builder.master(f"local[{cpus}]")
+        .appName(app_name)
+        .config("spark.sql.shuffle.partitions", str(cpus))
+        .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.sql.adaptive.enabled", "true")
+        .config("spark.ui.enabled", "false")
+    )
+    if driver_memory:
+        b = b.config("spark.driver.memory", driver_memory)
+    return b.getOrCreate()

@@ -152,9 +152,8 @@ def main() -> int:
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
     only = set(args[1:])
 
-    from pyspark.sql import SparkSession
-
     import __spark_entry__ as entrymod
+    from dbldatagen_spark.session import tool_session
 
     if window_only:
         # --window: exactly the driver's gate — the FIRST 50 queries()
@@ -173,15 +172,7 @@ def main() -> int:
         only = set(names[(idx - 1) * per: idx * per])
         print(f"chunk {idx}/{total}: {len(only)} queries")
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("oracle-check")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = tool_session("oracle-check")
     spark.sparkContext.setLogLevel("ERROR")
     if ansi:
         # standing rotation gate (the round-10 sweep caught two latent

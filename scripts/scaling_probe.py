@@ -38,7 +38,8 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
+
+from measure import best_of
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -59,23 +60,6 @@ VOCAB = [
     "agg", "table", "key", "stream", "filter", "customer", "the",
     "window", "join", "shuffle", "page", "row", "index", "cache",
 ]
-
-
-def _session():
-    from pyspark.sql import SparkSession
-
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    return (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("scaling-probe")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory",
-                os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
-        .getOrCreate()
-    )
 
 
 def generate(spark, out_dir: str) -> None:
@@ -277,19 +261,10 @@ def run(spark, sf1_dir: str, queries=None) -> None:
                 "count(xxhash64(" + ", ".join(df.columns) + "))"
             ).collect()
 
-    def best_of(fn, runs=2):
-        fn()  # untimed codegen/JIT warmup
-        best = float("inf")
-        for _ in range(runs):
-            t0 = time.perf_counter()
-            fn()
-            best = min(best, time.perf_counter() - t0)
-        return round(best, 3)
-
     report = {}
     for name in heavy:
-        t_small = best_of(lambda: qs[name](spark, SF01).collect())
-        t_big = best_of(lambda: qs[name](spark, sf1_dir).collect())
+        t_small = best_of(lambda: qs[name](spark, SF01).collect(), 2)
+        t_big = best_of(lambda: qs[name](spark, sf1_dir).collect(), 2)
         report[name] = {
             "sf0.1_sec": t_small,
             "sf1_sec": t_big,
@@ -313,7 +288,13 @@ def main() -> None:
         queries = [q for q in args[i + 1].split(",") if q]
         del args[i:i + 2]
     mode = args[0] if args else "all"
-    spark = _session()
+    from dbldatagen_spark.session import tool_session
+
+    spark = tool_session(
+        "scaling-probe",
+        int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
+        os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
+    )
     spark.sparkContext.setLogLevel("ERROR")
     if mode in ("gen", "all"):
         print(f"generating sf1 set at {out_dir} ...")

@@ -1,20 +1,14 @@
 import os
 
 import pytest
-from pyspark.sql import SparkSession
+
+from dbldatagen_spark.session import tool_session
 
 
 @pytest.fixture(scope="session")
 def spark():
-    session = (
-        SparkSession.builder.master("local[4]")
-        .appName("dbldatagen_spark-tests")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_TEST_DRIVER_MEM", "4g"))
-        .getOrCreate()
+    session = tool_session(
+        "dbldatagen_spark-tests", 4, os.environ.get("SPARK_TEST_DRIVER_MEM", "4g")
     )
     yield session
     session.stop()

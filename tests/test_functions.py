@@ -1,6 +1,7 @@
 """Pipeline-operator tests over the driver's sf0.001 testdata."""
 
 import pytest
+from pyspark.errors import SparkRuntimeException
 from pyspark.sql import functions as F
 
 SF = "/root/testdata/sf0.001"
@@ -8397,7 +8398,7 @@ class TestPagerankWeighted:
         # raise_error (no dedicated pre-pass aggregate job); the loop
         # is eager via the checkpoint, so it still surfaces from the
         # constructor — as Spark's runtime-exception type now
-        with pytest.raises(Exception, match="headroom"):
+        with pytest.raises(SparkRuntimeException, match="headroom"):
             pagerank(big, "s", "d", weight_col="w", iterations=1)
 
 
@@ -9127,6 +9128,12 @@ class TestAuthorityWeightedSample:
         assert len(tracker.getJobIdsForGroup(None) or []) == before
         with pytest.raises(Exception, match="duplicate"):
             dup.collect()
+        # the int64-headroom guard likewise raises only at the action
+        huge = auth.select("host", F.lit(2**62).alias("rank_units"))
+        over = authority_weighted_sample(
+            docs, "doc_id", "url", huge, base_ppm=0)
+        with pytest.raises(SparkRuntimeException, match="overflows int64"):
+            over.collect()
         # ...but a NULL-keyed rank row is harmless (never joins) and
         # must NOT trip the uniqueness check
         with_null = auth.unionByName(
@@ -9287,10 +9294,13 @@ class TestCalibrationReport:
         # the no-valid-rows contract fires AT ACTION TIME now (r16:
         # the auto range rides the plan instead of an eager min/max
         # scan per call), wrapped in Spark's runtime-exception type
-        with pytest.raises(Exception, match="no valid"):
-            calibration_report(
-                df.where(F.col("score").isNull()), "score", "label"
-            ).collect()
+        empty = calibration_report(
+            df.where(F.col("score").isNull()), "score", "label"
+        )
+        with pytest.raises(SparkRuntimeException, match="no valid"):
+            empty.collect()
+        # only the range-dependent edge columns carry the raise
+        assert {r["n"] for r in empty.select("bin", "n").collect()} == {0}
 
     def test_auto_range_adds_no_job_until_action(self, spark):
         # range auto-detection must be fully lazy: constructing the

@@ -139,6 +139,39 @@ def test_tuned_builder_configs(spark):
     assert opts["spark.sql.shuffle.partitions"] == "7"
     assert opts["spark.sql.ansi.enabled"] == "true"
 
+
+def test_tuned_session_runs_plain_aggregate():
+    """A tuned session must run a plain aggregate: one recommended key
+    made Spark 4.1.2 hang on it.  Runs in its own process (the test
+    session is already up) and fails by timeout instead of hanging."""
+    import os
+    import pathlib
+    import signal
+    import subprocess
+    import sys
+
+    code = (
+        "from dbldatagen_spark import tuned_session\n"
+        "spark = tuned_session(master='local[2]')\n"
+        "print(spark.range(1000).selectExpr('sum(id)').collect()[0][0])\n"
+        "spark.stop()\n"
+    )
+    repo = pathlib.Path(__file__).resolve().parent.parent
+    env = dict(os.environ, PYTHONPATH=str(repo))
+    proc = subprocess.Popen(
+        [sys.executable, "-c", code], cwd=repo, env=env,
+        stdout=subprocess.PIPE, stderr=subprocess.DEVNULL, text=True,
+        start_new_session=True,
+    )
+    try:
+        out, _ = proc.communicate(timeout=90)
+    except subprocess.TimeoutExpired:
+        os.killpg(proc.pid, signal.SIGKILL)  # the JVM child too
+        proc.communicate()
+        pytest.fail("tuned_session hung on spark.range(1000) sum(id)")
+    assert proc.returncode == 0
+    assert out.split()[-1] == "499500"
+
 def test_root_namespace_parity():
     """Every public name the reference exports from its package root
     resolves on this package root too — parsed programmatically from the
