@@ -145,9 +145,11 @@ class CompiledTemplate:
                     parts.append(values.map(pick).to_numpy(dtype=object))
         if not parts:
             return np.full(n, "", dtype=object)
-        out = parts[0].copy()
+        # object `+` keeps each string as it is; a fixed-width unicode copy
+        # would also strip trailing NULs
+        out = parts[0]
         for p in parts[1:]:
-            out = np.char.add(out.astype(str), p.astype(str)).astype(object)
+            out = out + p
         return out
 
 
@@ -369,7 +371,9 @@ def iltext_udf_expr(
 ) -> Column:
     """Ipsum-lorem text: per-row deterministic paragraph/sentence/word counts
     drawn uniformly from the given (min,max) ranges, words from the shared
-    lorem vocabulary. Vectorized per sentence-slot batch."""
+    lorem vocabulary. One pandas UDF expands each Arrow batch of cell seeds
+    through :func:`expand_iltext`, so a row's text depends only on its seed,
+    never on batching or partitioning."""
     p_lo, p_hi = paragraphs
     s_lo, s_hi = sentences
     w_lo, w_hi = words
@@ -384,39 +388,87 @@ def iltext_udf_expr(
     return udf(seed_col.cast("long"))
 
 
+# most words one flattened ILText draw holds; bounds its arrays to a few MiB
+# however long the sentences are
+_ILTEXT_WORD_CHUNK = 1 << 16
+_LOREM_CAP = _WORDS_CAP.tolist()
+
+
+def _iltext_counts(useeds, slots, lo, hi):
+    return (_mix(useeds ^ slots) % np.uint64(hi - lo + 1)).astype(np.int64) + lo
+
+
+def _iltext_sentences(useeds, slots, n_words):
+    """One sentence per row: row *i* takes its words from slots
+    ``slots[i] .. slots[i] + n_words[i] - 1``, drawn in flattened chunks of
+    at most ``_ILTEXT_WORD_CHUNK`` words (a longer row is a chunk alone)."""
+    nw = np.uint64(len(LOREM_WORDS))
+    ends = np.cumsum(n_words)
+    out: List[str] = []
+    lo = 0
+    while lo < len(n_words):
+        base = ends[lo] - n_words[lo]
+        hi = max(lo + 1, int(np.searchsorted(ends, base + _ILTEXT_WORD_CHUNK, "right")))
+        counts = n_words[lo:hi]
+        firsts = ends[lo:hi] - counts - base
+        row = np.repeat(np.arange(hi - lo), counts)
+        k = slots[lo:hi][row] + (np.arange(len(row)) - firsts[row]).astype(np.uint64)
+        idx = (_mix(useeds[lo:hi][row] ^ (k * _C1)) % nw).tolist()
+        tokens = list(map(LOREM_WORDS.__getitem__, idx))
+        for f in firsts[counts > 0].tolist():
+            tokens[f] = _LOREM_CAP[idx[f]]
+        out += [" ".join(tokens[a:b]) + "."
+                for a, b in zip(firsts.tolist(), (firsts + counts).tolist())]
+        lo = hi
+    return out
+
+
 def expand_iltext(useeds, paragraphs, sentences, words):
     """Driver/executor-shared ILText expansion over uint64 seeds — the
     deterministic core behind both the pandas-UDF path and the standalone
-    ``ILText.generateText`` API."""
-    p_lo, p_hi = paragraphs
-    s_lo, s_hi = sentences
-    w_lo, w_hi = words
-    out = []
-    nw = len(_WORDS)
-    for seed in useeds:
-        s = np.uint64(seed)
-        n_par = int(_mix(np.array([s ^ np.uint64(1)]))[0] % np.uint64(p_hi - p_lo + 1)) + p_lo
-        pieces = []
-        slot = 2
-        for _p in range(n_par):
-            n_sent = int(_mix(np.array([s ^ np.uint64(slot)]))[0] % np.uint64(s_hi - s_lo + 1)) + s_lo
-            slot += 1
-            sent_parts = []
-            for _s in range(n_sent):
-                n_words = int(_mix(np.array([s ^ np.uint64(slot)]))[0] % np.uint64(w_hi - w_lo + 1)) + w_lo
-                slot += 1
-                idx = (
-                    _mix(s ^ (np.arange(slot, slot + n_words, dtype=np.uint64)
-                              * np.uint64(0x9E3779B97F4A7C15)))
-                    % np.uint64(nw)
-                ).astype(np.int64)
-                slot += n_words
-                ws = _WORDS[idx]
-                sent = " ".join(ws)
-                sent_parts.append(sent[0].upper() + sent[1:] + ".")
-            pieces.append(" ".join(sent_parts))
-        out.append("\n\n".join(pieces))
-    return out
+    ``ILText.generateText`` API.
+
+    Each row's text is a pure function of its seed ``s``: draw *j* is
+    ``splitmix64(s ^ j)`` for a count and
+    ``splitmix64(s ^ (j * 0x9E3779B97F4A7C15))`` for a word, and the slots
+    *j* are consumed in this order: slot 1 is the paragraph count; then, per
+    paragraph, one sentence-count slot; then, per sentence, one word-count
+    slot followed by ``n_words`` word slots. A count is
+    ``lo + draw % (hi - lo + 1)``, a word ``LOREM_WORDS[draw % len]``.
+
+    The batch is expanded level by level (one draw per paragraph level,
+    sentence level and flattened word run, over the rows still active) with
+    a per-row slot counter; only the string joins run per row.
+    """
+    useeds = np.asarray(useeds, dtype=np.uint64)
+    n = len(useeds)
+    n_par = _iltext_counts(useeds, np.uint64(1), *paragraphs)
+    slot = np.full(n, 2, dtype=np.uint64)
+    texts: List[list] = [[] for _ in range(n)]
+    par_rows = np.arange(n)
+    for p in range(int(n_par.max(initial=0))):
+        par_rows = par_rows[n_par[par_rows] > p]
+        n_sent = _iltext_counts(useeds[par_rows], slot[par_rows], *sentences)
+        slot[par_rows] += np.uint64(1)
+        pieces: List[list] = [[] for _ in range(len(par_rows))]
+        live = np.arange(len(par_rows))
+        for s in range(int(n_sent.max(initial=0))):
+            live = live[n_sent[live] > s]
+            rows = par_rows[live]
+            n_words = _iltext_counts(useeds[rows], slot[rows], *words)
+            slot[rows] += np.uint64(1)
+            sents = _iltext_sentences(useeds[rows], slot[rows], n_words)
+            slot[rows] += n_words.astype(np.uint64)
+            for j, sent in zip(live.tolist(), sents):
+                pieces[j].append(sent)
+        # drop each row's pieces once joined, so the peak stays near one
+        # copy of the output
+        for j, r in enumerate(par_rows.tolist()):
+            texts[r].append(" ".join(pieces[j]))
+            pieces[j] = None
+    for i, paras in enumerate(texts):
+        texts[i] = "\n\n".join(paras)
+    return texts
 
 
 # ---------------------------------------------------------------------------
