@@ -260,10 +260,10 @@ def _gen_range_cycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dbldatagen_spark.plans.spec import RangeColumn
 
     df = spark.range(_GEN_ROWS).withColumnRenamed("id", ROW_ID_COL)
-    expr = range_expr(
-        RangeColumn(100, 200), "int", F.col(ROW_ID_COL), random=False,
-        id_col=F.col(ROW_ID_COL),
-    )
+    expr = F.expr(range_expr(
+        RangeColumn(100, 200), "int", ROW_ID_COL, random=False,
+        id_col=ROW_ID_COL,
+    ))
     return df.select(
         F.col(ROW_ID_COL).alias("row_id"), expr.alias("code")
     )
@@ -275,13 +275,13 @@ def _gen_values_cycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dbldatagen_spark.plans.spec import Uniform
 
     df = spark.range(_GEN_ROWS).withColumnRenamed("id", ROW_ID_COL)
-    expr = values_expr(
+    expr = F.expr(values_expr(
         ["alpha", "beta", "gamma", "delta"],
-        F.col(ROW_ID_COL),
+        ROW_ID_COL,
         Uniform(),
         random=False,
-        id_col=F.col(ROW_ID_COL),
-    )
+        id_col=ROW_ID_COL,
+    ))
     return df.select(F.col(ROW_ID_COL).alias("row_id"), expr.alias("val"))
 
 
@@ -291,12 +291,12 @@ def _gen_date_cycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dbldatagen_spark.plans.spec import DateColumn
 
     df = spark.range(_GEN_ROWS).withColumnRenamed("id", ROW_ID_COL)
-    expr = date_expr(
+    expr = F.expr(date_expr(
         DateColumn("2020-01-01", "2020-12-31"),
-        F.col(ROW_ID_COL),
+        ROW_ID_COL,
         random=False,
-        id_col=F.col(ROW_ID_COL),
-    )
+        id_col=ROW_ID_COL,
+    ))
     # cast to string so the Spark (datetime.date) and DuckDB (Timestamp)
     # pandas representations hash identically on the driver's compare
     return df.select(
@@ -310,13 +310,13 @@ def _gen_timestamp_cycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dbldatagen_spark.plans.spec import TimestampColumn
 
     df = spark.range(_GEN_ROWS).withColumnRenamed("id", ROW_ID_COL)
-    expr = timestamp_expr(
+    expr = F.expr(timestamp_expr(
         TimestampColumn("2022-01-01 00:00:00", "2022-12-31 23:59:59",
                         interval_seconds=3600),
-        F.col(ROW_ID_COL),
+        ROW_ID_COL,
         random=False,
-        id_col=F.col(ROW_ID_COL),
-    )
+        id_col=ROW_ID_COL,
+    ))
     return df.select(F.col(ROW_ID_COL).alias("row_id"), expr.alias("ts"))
 
 

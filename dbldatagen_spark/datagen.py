@@ -25,7 +25,7 @@ import re
 from dataclasses import dataclass, field as dc_field
 from typing import Any, Dict, List, Optional, Sequence, Tuple, Union
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -43,7 +43,16 @@ from dbldatagen_spark.operators.seed import (
     derive_column_seed,
     null_mask,
 )
-from dbldatagen_spark.operators.strings import pattern_expr, uuid_expr, values_expr
+from dbldatagen_spark.operators.sqltext import (
+    Level,
+    bind_column,
+    call,
+    cast,
+    quote,
+    sql_lit,
+    user_sql,
+)
+from dbldatagen_spark.operators.strings import values_expr
 from dbldatagen_spark.plans.spec import (
     Distribution,
     Normal,
@@ -976,31 +985,31 @@ class DataGenerator:
         s = derive_column_seed(self._seed, self.name, name)
         return decorrelate(s, salt) if salt else s
 
-    def _seed_source(self, col: _V0Column, col_seed: int) -> Column:
+    def _seed_source(self, col: _V0Column, col_seed: int) -> str:
         """Random-mode 64-bit seed column for this column."""
         bases = col.base_columns
         if bases == [self.seed_column] or not bases:
-            return cell_seed(col_seed, F.col(self.seed_column))
-        return F.xxhash64(F.lit(col_seed), *[F.col(b) for b in bases])
+            return cell_seed(col_seed, quote(self.seed_column))
+        return call("xxhash64", sql_lit(col_seed), *[quote(b) for b in bases])
 
-    def _index_source(self, col: _V0Column) -> Column:
+    def _index_source(self, col: _V0Column) -> str:
         """Non-random lattice index source: base value (numeric) or its hash."""
         bases = col.base_columns
         if bases == [self.seed_column] or not bases:
-            return F.col(self.seed_column)
+            return quote(self.seed_column)
         if col.base_column_type == "hash" or len(bases) > 1:
-            return F.abs(F.xxhash64(*[F.col(b) for b in bases]))
-        return F.col(bases[0])
+            return call("abs", call("xxhash64", *[quote(b) for b in bases]))
+        return quote(bases[0])
 
     def _is_random(self, col: _V0Column) -> bool:
         return self._default_random if col.random is None else bool(col.random)
 
-    def _value_expr(self, col: _V0Column, salt: int = 0) -> Column:
+    def _value_expr(self, col: _V0Column, salt: int = 0) -> str:
         """The core per-column value expression (pre null-mask, pre alias)."""
         col_seed = self._col_seed(col.name, salt)
         random = self._is_random(col)
         seed_col = (
-            F.xxhash64(F.lit(salt * 0x9E37 + 1), self._seed_source(col, col_seed))
+            call("xxhash64", sql_lit(salt * 0x9E37 + 1), self._seed_source(col, col_seed))
             if salt
             else self._seed_source(col, col_seed)
         )
@@ -1009,27 +1018,28 @@ class DataGenerator:
 
         # 1. explicit SQL expression dominates
         if col.expr is not None:
-            e = F.expr(col.expr)
+            e = user_sql(col.expr)
             if col.col_type not in (None, INFER_DATATYPE) and col.values is None:
-                e = e.cast(_cast_target(dtype))
+                e = cast(e, _cast_target(dtype))
             return e
 
         # 1b. complex types without expr/values yield NULL of that type
         # (reference column_generation_spec.py:1410-1412,1444-1445)
         if _is_complex_type(dtype) and col.values is None:
-            return F.lit(None).cast(dtype)
+            return cast("NULL", dtype)
 
-        # 2. text generators — the base column (default: the seed id
-        # column, matching the reference where every column's default
-        # baseColumn is 'id' and \v substitutes its values) feeds \v/\vN
-        if col.template is not None:
-            base = F.col(col.base_columns[0] if col.base_columns else self.seed_column)
-            return tmod.template_udf_expr(
-                col.template, seed_col, base, col.escape_special_chars
-            )
-        if col.text is not None:
-            base = F.col(col.base_columns[0] if col.base_columns else self.seed_column)
-            return col.text.make_expr(seed_col, base)
+        # 2. text generators — pandas-UDF Columns, bound by name. The base
+        # column (default: the seed id column, matching the reference where
+        # every column's default baseColumn is 'id' and \v substitutes its
+        # values) feeds \v/\vN
+        if col.template is not None or col.text is not None:
+            seed = F.expr(seed_col)
+            base = F.col(quote(col.base_columns[0] if col.base_columns else self.seed_column))
+            if col.template is not None:
+                return bind_column(tmod.template_udf_expr(
+                    col.template, seed, base, col.escape_special_chars
+                ))
+            return bind_column(col.text.make_expr(seed, base))
 
         # 3. value lists (optionally weighted)
         if col.values is not None:
@@ -1039,7 +1049,7 @@ class DataGenerator:
                 random=random, id_col=self._index_source(col),
             )
             if col.col_type not in (None, INFER_DATATYPE):
-                out = out.cast(_cast_target(dtype))
+                out = cast(out, _cast_target(dtype))
             return out
 
         # 4. temporal ranges
@@ -1051,21 +1061,16 @@ class DataGenerator:
             if random:
                 idx = index_expr(seed_col, 2, dist)
             else:
-                idx = F.pmod(self._index_source(col).cast("long"), F.lit(2))
-            return (idx == 1).cast("boolean")
+                idx = call("pmod", cast(self._index_source(col), "BIGINT"), sql_lit(2))
+            return cast(f"({idx} = {sql_lit(1)})", "BOOLEAN")
 
         # 6. numeric / string-from-numeric ranges
         return self._numeric_expr(col, seed_col, random, dtype)
 
     def _temporal_expr(
-        self, col: _V0Column, seed_col: Column, random: bool, dtype: str
-    ) -> Column:
-        from dbldatagen_spark.operators.temporal import (
-            date_expr,
-            parse_date_days,
-            parse_utc_epoch,
-            timestamp_expr,
-        )
+        self, col: _V0Column, seed_col: str, random: bool, dtype: str
+    ) -> str:
+        from dbldatagen_spark.operators.temporal import date_expr, timestamp_expr
         from dbldatagen_spark.plans.spec import DateColumn, TimestampColumn
 
         begin = col.begin if col.begin is not None else (
@@ -1079,8 +1084,8 @@ class DataGenerator:
             # restrict to the first k lattice points: route the draw through
             # pmod(source, k) and take the non-random (index) path
             k = int(col.unique_values)
-            id_col = F.pmod(
-                (seed_col if random else id_col.cast("long")), F.lit(k)
+            id_col = call(
+                "pmod", seed_col if random else cast(id_col, "BIGINT"), sql_lit(k)
             )
             random = False
         if dtype == "date":
@@ -1100,8 +1105,8 @@ class DataGenerator:
         return timestamp_expr(strategy, seed_col, random=random, id_col=id_col)
 
     def _numeric_expr(
-        self, col: _V0Column, seed_col: Column, random: bool, dtype: str
-    ) -> Column:
+        self, col: _V0Column, seed_col: str, random: bool, dtype: str
+    ) -> str:
         # defaults per type (reference nrange.py type-default ranges)
         num_dtype = dtype if dtype not in ("string", "infer") else "long"
         lo = col.min_value
@@ -1109,8 +1114,8 @@ class DataGenerator:
         id_col = self._index_source(col)
         if lo is None and hi is None and col.unique_values is None:
             # identity over base (v0: column = base column value)
-            value = id_col.cast(
-                spark_type_name(num_dtype) if dtype != "string" else "bigint"
+            value = cast(
+                id_col, spark_type_name(num_dtype) if dtype != "string" else "bigint"
             )
             return self._decorate_numeric(col, value, dtype)
         if lo is None:
@@ -1135,46 +1140,45 @@ class DataGenerator:
                 if random:
                     a = _coprime_multiplier(count)
                     b = (self._col_seed(col.name, 77) & _MASK64) % count
-                    id_col = index_expr(
-                        seed_col, k, col.distribution or Uniform()
-                    ) * F.lit(a) + F.lit(b)
+                    idx = index_expr(seed_col, k, col.distribution or Uniform())
+                    id_col = f"({idx} * {sql_lit(a)} + {sql_lit(b)})"
                 else:
-                    id_col = F.pmod(id_col.cast("long"), F.lit(k))
+                    id_col = call("pmod", cast(id_col, "BIGINT"), sql_lit(k))
                 random = False
         elif random and col.step is None and dtype in ("float", "double"):
             strategy = RangeColumn(lo, hi, None, strategy.distribution)  # continuous
             lattice = "double"
         value = range_expr(strategy, lattice, seed_col, random=random, id_col=id_col)
         if dtype not in ("string", "infer"):
-            value = value.cast(spark_type_name(dtype))
+            value = cast(value, spark_type_name(dtype))
         return self._decorate_numeric(col, value, dtype)
 
-    def _decorate_numeric(self, col: _V0Column, value: Column, dtype: str) -> Column:
+    def _decorate_numeric(self, col: _V0Column, value: str, dtype: str) -> str:
         """format / prefix / suffix turn numerics into strings."""
         out = value
         if col.fmt is not None:
-            out = F.format_string(col.fmt, out)
+            out = call("format_string", sql_lit(col.fmt), out)
         if col.prefix is not None or col.suffix is not None:
-            sep = col.text_separator
-            parts: List[Column] = []
+            sep = sql_lit(col.text_separator)
+            parts: List[str] = []
             if col.prefix is not None:
-                parts += [F.lit(col.prefix), F.lit(sep)]
-            parts.append(out.cast("string"))
+                parts += [sql_lit(col.prefix), sep]
+            parts.append(cast(out, "STRING"))
             if col.suffix is not None:
-                parts += [F.lit(sep), F.lit(col.suffix)]
-            out = F.concat(*parts)
+                parts += [sep, sql_lit(col.suffix)]
+            out = call("concat", *parts)
         elif col.fmt is None and dtype == "string" and col.values is None:
-            out = out.cast("string")
+            out = cast(out, "STRING")
         return out
 
-    def _column_exprs(self, col: _V0Column) -> List[Tuple[str, Column]]:
-        """One or many (name, expr) pairs — multi-column / array support."""
+    def _column_exprs(self, col: _V0Column) -> List[Tuple[str, str]]:
+        """One or many (name, SQL text) pairs — multi-column / array support."""
+        seed_id = quote(self.seed_column)
         if col.num_columns is None:
             value = self._value_expr(col)
             if col.percent_nulls:
                 value = null_mask(
-                    value, col.percent_nulls, self._col_seed(col.name, 999),
-                    F.col(self.seed_column),
+                    value, col.percent_nulls, self._col_seed(col.name, 999), seed_id,
                 )
             return [(col.name, value)]
         # replicated columns with decorrelated seeds
@@ -1184,29 +1188,25 @@ class DataGenerator:
             n_min = n_max = int(col.num_columns)
         exprs = [self._value_expr(col, salt=i + 1) for i in range(n_max)]
         if col.struct_type == "array":
-            arr = F.array(*exprs)
+            arr = call("array", *exprs)
             if n_min != n_max:
                 len_seed = self._col_seed(col.name, 555)
-                length = (
-                    F.pmod(
-                        F.xxhash64(F.lit(len_seed), F.col(self.seed_column)),
-                        F.lit(n_max - n_min + 1),
-                    ).cast("int")
-                    + F.lit(n_min)
+                draw = call(
+                    "pmod", call("xxhash64", sql_lit(len_seed), seed_id),
+                    sql_lit(n_max - n_min + 1),
                 )
-                arr = F.slice(arr, F.lit(1), length)
+                length = f"({cast(draw, 'INT')} + {sql_lit(n_min)})"
+                arr = call("slice", arr, sql_lit(1), length)
             if col.percent_nulls:
                 arr = null_mask(
-                    arr, col.percent_nulls, self._col_seed(col.name, 999),
-                    F.col(self.seed_column),
+                    arr, col.percent_nulls, self._col_seed(col.name, 999), seed_id,
                 )
             return [(col.name, arr)]
         out = []
         for i, e in enumerate(exprs):
             if col.percent_nulls:
                 e = null_mask(
-                    e, col.percent_nulls, self._col_seed(col.name, 999 + i),
-                    F.col(self.seed_column),
+                    e, col.percent_nulls, self._col_seed(col.name, 999 + i), seed_id,
                 )
             out.append((f"{col.name}_{i}", e))
         return out
@@ -1276,12 +1276,14 @@ class DataGenerator:
         for c in self._constraints:
             c.prepare(self)
         df = self._base_dataframe(withStreaming, options)
-        for level in self._dependency_levels():
-            exprs: List[Column] = []
+        for columns in self._dependency_levels():
+            level = Level()
             names: set = set()
-            for c in level:
-                for out_name, e in self._column_exprs(c):
-                    exprs.append(e.alias(out_name))
+            for c in columns:
+                with level.binding(c.name):
+                    pairs = self._column_exprs(c)
+                for out_name, text in pairs:
+                    level.add(out_name, text)
                     names.add(out_name)
             # withColumn-replace semantics: a spec that reuses an existing
             # name (notably the seed column — reference
@@ -1289,8 +1291,8 @@ class DataGenerator:
             # prior column instead of producing an ambiguous duplicate. The
             # new expression is still computed against the pre-select frame,
             # so an overriding `id` spec draws from the raw seed.
-            keep = [n for n in df.columns if n not in names]
-            df = df.select(*keep, *exprs)
+            keep = [quote(n) for n in df.columns if n not in names]
+            df = level.apply(df, keep)
         # constraints: transforms then one fused where
         for c in self._constraints:
             df = c.transform(df)
@@ -1314,7 +1316,7 @@ class DataGenerator:
         # twice (withIdOutput + its own spec); keep the first occurrence
         seen: set = set()
         out_cols = [n for n in out_cols if not (n in seen or seen.add(n))]
-        df = df.select(*out_cols)
+        df = df.selectExpr(*[quote(n) for n in out_cols])
         if withTempView:
             df.createOrReplaceTempView(withTempView)
         return df

@@ -6,14 +6,21 @@ Execution model (reference lifecycle
 
 1. seed DataFrame: ``spark.range(rows)`` → rename to ``__synth_row_id`` —
    the *only* source; everything else is column expressions over it;
-2. columns are batched into **select levels** by dependency order
+2. every column compiles to Spark SQL *text* — the builders in
+   ``operators/`` return text, not ``Column`` objects, and Catalyst parses
+   it into the same expression trees the ``Column`` API would build;
+   building text needs no py4j round trip;
+3. columns are batched into **select levels** by dependency order
    (expression columns referencing generated columns, ``seed_from``
-   correlations) — one ``df.select("*", ...)`` per level keeps the lineage
-   shallow (N columns → O(levels) projections, not N ``withColumn`` nodes).
-   The levels come from ``plans.planner.dependency_levels``, the one
-   toposort shared with table ordering and the v0 ``DataGenerator``;
-3. pandas-UDF columns (faker/template text) ride the same levels via
-   ``withColumn``;
+   correlations), and each level is one ``df.selectExpr("*", ...)``
+   (:class:`~dbldatagen_spark.operators.sqltext.Level`), so N columns
+   cost O(levels) projections and about one py4j command each (the item
+   list crosses the gateway element by element). The levels come
+   from ``plans.planner.dependency_levels``, the one toposort shared with
+   table ordering and the v0 ``DataGenerator``. The only ``Column`` pieces
+   — pandas-UDF text columns (faker) and a registered distribution's
+   ``unit_expr`` — are named in one ``select`` below their level and
+   referenced by name from the text; ``CollapseProject`` folds it;
 4. final projection to the declared column order drops the row id.
 
 Nothing here shuffles. The physical plan for any generated table is
@@ -26,10 +33,9 @@ from __future__ import annotations
 import re
 from typing import Callable, Dict, List, Optional
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dbldatagen_spark.operators import seed as seedmod
 from dbldatagen_spark.operators.fk import foreign_key_expr
 from dbldatagen_spark.operators.nested import array_expr, struct_expr
 from dbldatagen_spark.operators.numeric import (
@@ -42,6 +48,14 @@ from dbldatagen_spark.operators.seed import (
     cell_seed,
     derive_column_seed,
     null_mask,
+)
+from dbldatagen_spark.operators.sqltext import (
+    Level,
+    bind_column,
+    cast,
+    quote,
+    sql_lit,
+    user_sql,
 )
 from dbldatagen_spark.operators.strings import pattern_expr, uuid_expr, values_expr
 from dbldatagen_spark.operators.temporal import date_expr, timestamp_expr
@@ -94,16 +108,17 @@ def expression_refs(expr: str, known_columns: set) -> set:
 def build_strategy_expr(
     col: ColumnSpec,
     column_seed: int,
-    id_col: Column,
+    id_col: str,
     *,
     plan: Optional[DataGenPlan] = None,
-) -> Column:
-    """Dispatch one strategy to its builder → unmasked value expression."""
+) -> str:
+    """Dispatch one strategy to its builder → unmasked value expression
+    (SQL text over the row-id text ``id_col``)."""
     st = col.strategy
     dtype = col.effective_dtype
     seed_col = cell_seed(column_seed, id_col)
 
-    def _child(child_spec: ColumnSpec, child_seed: int, child_id: Column) -> Column:
+    def _child(child_spec: ColumnSpec, child_seed: int, child_id: str) -> str:
         inner = build_strategy_expr(
             child_spec,
             child_spec.seed if child_spec.seed is not None else child_seed,
@@ -128,12 +143,12 @@ def build_strategy_expr(
             dtype=col.dtype,
         )
     if isinstance(st, ConstantColumn):
-        value = F.lit(st.value)
+        value = sql_lit(st.value)
         if col.dtype is not None:
-            value = value.cast(spark_type_name(col.dtype))
+            value = cast(value, spark_type_name(col.dtype))
         return value
     if isinstance(st, ExpressionColumn):
-        return F.expr(st.expr)
+        return user_sql(st.expr)
     if isinstance(st, UUIDColumn):
         return uuid_expr(seed_col, column_seed)
     if isinstance(st, PatternColumn):
@@ -158,7 +173,7 @@ def build_strategy_expr(
     if isinstance(st, FakerColumn):
         from dbldatagen_spark.operators.text import faker_pool_expr
 
-        return faker_pool_expr(st, column_seed, id_col)
+        return bind_column(faker_pool_expr(st, column_seed, F.expr(id_col)))
     raise SpecValidationError(f"unknown strategy {st!r}")
 
 
@@ -166,23 +181,23 @@ def build_column_expr(
     col: ColumnSpec,
     table_seed: int,
     table_name: str,
-    id_col: Column,
+    id_col: str,
     *,
     plan: Optional[DataGenPlan] = None,
-) -> Column:
-    """Full column expression: strategy value + null mask, aliased."""
+) -> str:
+    """Full column expression (SQL text): strategy value + null mask."""
     column_seed = (
         col.seed
         if col.seed is not None
         else derive_column_seed(table_seed, table_name, col.name)
     )
-    seed_input = F.col(col.seed_from) if col.seed_from else id_col
+    seed_input = quote(col.seed_from) if col.seed_from else id_col
     value = build_strategy_expr(col, column_seed, seed_input, plan=plan)
     if col.null_fraction:
         # null stream keyed to the row id (not seed_from) so null placement
         # is independent of the correlated source values
         value = null_mask(value, col.null_fraction, column_seed, id_col)
-    return value.alias(col.name)
+    return value
 
 
 def _dependency_levels(table: TableSpec) -> List[List[ColumnSpec]]:
@@ -256,14 +271,15 @@ def generate_table(
             partitions = default_partitions(int(table.rows), default_parts)
         df = spark.range(0, int(table.rows), numPartitions=partitions)
         df = df.withColumnRenamed("id", ROW_ID_COL)
-    id_col = F.col(ROW_ID_COL)
+    id_col = quote(ROW_ID_COL)
     for level_cols in _dependency_levels(table):
-        exprs = [
-            build_column_expr(c, table_seed, table.name, id_col, plan=plan)
-            for c in level_cols
-        ]
-        df = df.select("*", *exprs)
-    return df.select(*[c.name for c in table.columns])
+        level = Level()
+        for c in level_cols:
+            with level.binding(c.name):
+                text = build_column_expr(c, table_seed, table.name, id_col, plan=plan)
+            level.add(c.name, text)
+        df = level.apply(df)
+    return df.selectExpr(*[quote(c.name) for c in table.columns])
 
 
 def generate(

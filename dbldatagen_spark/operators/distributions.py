@@ -9,7 +9,7 @@ Every sampler maps a deterministic 64-bit *seed column* (see
   (:func:`unit_expr`).
 
 All samplers are closed-form inverse-CDF (or Box–Muller) transforms built
-from ``pyspark.sql.functions`` only, so they run inside whole-stage codegen
+as Spark SQL text over built-in functions only, so they run inside whole-stage codegen
 with zero Python — unlike the reference's v0 path which routes
 distributions through nondeterministic pandas UDFs
 (``/root/reference/dbldatagen/distributions/data_distribution.py:5-21``).
@@ -20,7 +20,7 @@ to Beta/Gamma/Pareto via Wilson–Hilferty / truncated-Pareto closed forms so
 *no* distribution needs a UDF.
 
 Determinism note: Box–Muller needs two independent uniforms; the second is
-derived JVM-side as ``xxhash64(lit(salt), seed_col)`` so it remains a pure
+derived JVM-side as ``xxhash64(salt, seed_col)`` so it remains a pure
 function of (column_seed, row_id).
 """
 
@@ -32,6 +32,13 @@ from typing import Sequence
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from dbldatagen_spark.operators.sqltext import (
+    bind_column,
+    call,
+    case_when,
+    cast,
+    sql_lit,
+)
 from dbldatagen_spark.operators.seed import (
     cell_seed,
     decorrelate,
@@ -55,23 +62,36 @@ _TWO_PI = 2.0 * math.pi
 _SECOND_DRAW_SALT = 0x5DEECE66D
 
 
-def _second_uniform(seed_col: Column) -> Column:
+def _second_uniform(seed_col: "str | Column") -> "str | Column":
     """An independent (0,1) uniform derived from the same seed column."""
-    return uniform_fraction_open(F.xxhash64(F.lit(_SECOND_DRAW_SALT), seed_col))
+    if isinstance(seed_col, Column):
+        return uniform_fraction_open(F.xxhash64(F.lit(_SECOND_DRAW_SALT), seed_col))
+    return uniform_fraction_open(call("xxhash64", sql_lit(_SECOND_DRAW_SALT), seed_col))
 
 
-def standard_normal_expr(seed_col: Column) -> Column:
-    """z ~ N(0,1) via Box–Muller: ``sqrt(-2 ln u1) * cos(2π u2)``."""
+def standard_normal_expr(seed_col: "str | Column") -> "str | Column":
+    """z ~ N(0,1) via Box–Muller: ``sqrt(-2 ln u1) * cos(2π u2)``.  SQL text
+    in, SQL text out; a ``Column`` (the copula expressions) yields a
+    ``Column``."""
     u1 = uniform_fraction_open(seed_col)
     u2 = _second_uniform(seed_col)
-    return F.sqrt(F.lit(-2.0) * F.log(u1)) * F.cos(F.lit(_TWO_PI) * u2)
+    if isinstance(seed_col, Column):
+        return F.sqrt(F.lit(-2.0) * F.log(u1)) * F.cos(F.lit(_TWO_PI) * u2)
+    return (
+        f"(sqrt({sql_lit(-2.0)} * ln({u1}))"
+        f" * cos({sql_lit(_TWO_PI)} * {u2}))"
+    )
 
 
-def _clamp(col: Column, lo: Column, hi: Column) -> Column:
-    return F.greatest(lo, F.least(hi, col))
+def _clamp(col: str, lo: str, hi: str) -> str:
+    return call("greatest", lo, call("least", hi, col))
 
 
-def _wilson_hilferty_gamma(z: Column, shape: float, scale: float) -> Column:
+def _unit_clamp(col: str) -> str:
+    return _clamp(col, sql_lit(0.0), sql_lit(1.0))
+
+
+def _wilson_hilferty_gamma(z: str, shape: float, scale: float) -> str:
     """Gamma(k, θ) approximation from one standard normal draw.
 
     Wilson–Hilferty: X ≈ kθ·(1 − 1/(9k) + z·sqrt(1/(9k)))³ — accurate for
@@ -79,12 +99,12 @@ def _wilson_hilferty_gamma(z: Column, shape: float, scale: float) -> Column:
     """
     k = max(shape, 1e-6)
     c = 1.0 / (9.0 * k)
-    body = F.lit(1.0 - c) + z * F.lit(math.sqrt(c))
-    x = F.lit(k * scale) * F.pow(F.greatest(body, F.lit(0.0)), F.lit(3.0))
-    return F.greatest(x, F.lit(0.0))
+    body = f"({sql_lit(1.0 - c)} + ({z} * {sql_lit(math.sqrt(c))}))"
+    cube = call("power", call("greatest", body, sql_lit(0.0)), sql_lit(3.0))
+    return call("greatest", f"({sql_lit(k * scale)} * {cube})", sql_lit(0.0))
 
 
-def unit_expr(seed_col: Column, dist: Distribution) -> Column:
+def unit_expr(seed_col: str, dist: Distribution) -> str:
     """Map seed → double in [0, 1] distributed per ``dist``.
 
     Used for continuous value ranges: ``value = min + unit * span``.
@@ -98,17 +118,17 @@ def unit_expr(seed_col: Column, dist: Distribution) -> Column:
         # auto-center: mean 0.5, std 1/6 => ±3σ spans [0,1]
         mean = 0.5 if dist.mean is None else dist.mean
         std = 1.0 / 6.0 if dist.stddev is None else dist.stddev
-        return _clamp(F.lit(mean) + z * F.lit(std), F.lit(0.0), F.lit(1.0))
+        return _unit_clamp(f"({sql_lit(mean)} + ({z} * {sql_lit(std)}))")
     if isinstance(dist, LogNormal):
         z = standard_normal_expr(seed_col)
-        x = F.exp(F.lit(dist.mu) + z * F.lit(dist.sigma))
+        x = call("exp", f"({sql_lit(dist.mu)} + ({z} * {sql_lit(dist.sigma)}))")
         # normalize so median=exp(mu) lands at 0.1 of the unit range
-        return _clamp(x / F.lit(math.exp(dist.mu) * 10.0), F.lit(0.0), F.lit(1.0))
+        return _unit_clamp(f"({x} / {sql_lit(math.exp(dist.mu) * 10.0)})")
     if isinstance(dist, Exponential):
         u = uniform_fraction_open(seed_col)
-        x = -F.log(F.lit(1.0) - u) / F.lit(dist.rate)
+        x = f"(-ln(({sql_lit(1.0)} - {u})) / {sql_lit(dist.rate)})"
         # mean 1/rate lands at 0.2 of the unit range
-        return _clamp(x * F.lit(dist.rate / 5.0), F.lit(0.0), F.lit(1.0))
+        return _unit_clamp(f"({x} * {sql_lit(dist.rate / 5.0)})")
     if isinstance(dist, Zipf):
         # continuous truncated power-law x^-s on [1, B], linearly mapped to
         # [0,1]. B caps the dynamic range at two decades — without a cap
@@ -117,69 +137,73 @@ def unit_expr(seed_col: Column, dist: Distribution) -> Column:
         B = 100.0
         u = uniform_fraction(seed_col)
         top = B ** (1.0 - s) - 1.0
-        x = F.pow(F.lit(1.0) + u * F.lit(top), F.lit(1.0 / (1.0 - s)))
-        return _clamp((x - F.lit(1.0)) / F.lit(B - 1.0), F.lit(0.0), F.lit(1.0))
+        x = call("power", f"({sql_lit(1.0)} + ({u} * {sql_lit(top)}))",
+                 sql_lit(1.0 / (1.0 - s)))
+        return _unit_clamp(f"(({x} - {sql_lit(1.0)}) / {sql_lit(B - 1.0)})")
     if isinstance(dist, Pareto):
         # continuous truncated Pareto(shape) on [1, B], linear map to [0,1]
         a = dist.shape
         B = 100.0
         u = uniform_fraction(seed_col)
         tail = 1.0 - B ** (-a)
-        x = F.pow(F.lit(1.0) - u * F.lit(tail), F.lit(-1.0 / a))
-        return _clamp((x - F.lit(1.0)) / F.lit(B - 1.0), F.lit(0.0), F.lit(1.0))
+        x = call("power", f"({sql_lit(1.0)} - ({u} * {sql_lit(tail)}))",
+                 sql_lit(-1.0 / a))
+        return _unit_clamp(f"(({x} - {sql_lit(1.0)}) / {sql_lit(B - 1.0)})")
     if isinstance(dist, Gamma):
         z = standard_normal_expr(seed_col)
         x = _wilson_hilferty_gamma(z, dist.shape, dist.scale)
         # mean kθ lands at 0.2 of the unit range
-        return _clamp(
-            x / F.lit(dist.shape * dist.scale * 5.0), F.lit(0.0), F.lit(1.0)
-        )
+        return _unit_clamp(f"({x} / {sql_lit(dist.shape * dist.scale * 5.0)})")
     if isinstance(dist, Beta):
         # Beta(a,b) = G1/(G1+G2) with independent gammas (Wilson–Hilferty)
         z1 = standard_normal_expr(seed_col)
-        z2 = standard_normal_expr(F.xxhash64(F.lit(0x2545F491), seed_col))
+        z2 = standard_normal_expr(call("xxhash64", sql_lit(0x2545F491), seed_col))
         g1 = _wilson_hilferty_gamma(z1, dist.alpha, 1.0)
         g2 = _wilson_hilferty_gamma(z2, dist.beta, 1.0)
-        denom = g1 + g2
-        return F.when(denom > F.lit(0.0), g1 / denom).otherwise(F.lit(0.5))
+        denom = f"({g1} + {g2})"
+        return case_when(f"{denom} > {sql_lit(0.0)}", f"({g1} / {denom})", sql_lit(0.5))
     if isinstance(dist, WeightedValues):
         raise ValueError("WeightedValues applies to value lists, not ranges")
     if hasattr(dist, "unit_expr"):
         # registered custom distribution (register_distribution protocol):
-        # it supplies its own seed -> [0,1] expression
-        return _clamp(dist.unit_expr(seed_col), F.lit(0.0), F.lit(1.0))
+        # it maps a seed Column to its own [0,1] Column, bound by name
+        return _unit_clamp(bind_column(dist.unit_expr(F.expr(seed_col))))
     raise ValueError(f"unsupported distribution: {dist!r}")
 
 
-def index_expr(seed_col: Column, n: int, dist: Distribution) -> Column:
+def _index_clamp(idx: str, n: int) -> str:
+    return _clamp(idx, cast(sql_lit(0), "BIGINT"), cast(sql_lit(n - 1), "BIGINT"))
+
+
+def index_expr(seed_col: str, n: int, dist: Distribution) -> str:
     """Map seed → long index uniform/distributed in ``[0, n)``."""
     if n <= 0:
         raise ValueError(f"index space must be positive, got {n}")
     if n == 1:
-        return F.lit(0).cast("long")
+        return cast(sql_lit(0), "BIGINT")
     if isinstance(dist, Uniform):
-        return F.pmod(seed_col, F.lit(n)).cast("long")
+        return cast(call("pmod", seed_col, sql_lit(n)), "BIGINT")
     if isinstance(dist, Zipf):
         # inverse CDF of the continuous power-law x^-s truncated to [1, n+1]:
         # x = (1 + u·((n+1)^(1−s) − 1))^(1/(1−s)); idx = floor(x) − 1
         s = dist.exponent
         u = uniform_fraction(seed_col)
         top = float((n + 1) ** (1.0 - s) - 1.0)
-        x = F.pow(F.lit(1.0) + u * F.lit(top), F.lit(1.0 / (1.0 - s)))
-        idx = F.floor(x).cast("long") - F.lit(1)
-        return _clamp(idx, F.lit(0).cast("long"), F.lit(n - 1).cast("long"))
+        x = call("power", f"({sql_lit(1.0)} + ({u} * {sql_lit(top)}))",
+                 sql_lit(1.0 / (1.0 - s)))
+        return _index_clamp(f"({cast(call('floor', x), 'BIGINT')} - {sql_lit(1)})", n)
     if isinstance(dist, Pareto):
         # truncated Pareto on [1, n+1]
         a = dist.shape
         u = uniform_fraction(seed_col)
         tail = float(1.0 - (n + 1) ** (-a))
-        x = F.pow(F.lit(1.0) - u * F.lit(tail), F.lit(-1.0 / a))
-        idx = F.floor(x).cast("long") - F.lit(1)
-        return _clamp(idx, F.lit(0).cast("long"), F.lit(n - 1).cast("long"))
+        x = call("power", f"({sql_lit(1.0)} - ({u} * {sql_lit(tail)}))",
+                 sql_lit(-1.0 / a))
+        return _index_clamp(f"({cast(call('floor', x), 'BIGINT')} - {sql_lit(1)})", n)
     # generic: scale the unit sample onto the lattice
     unit = unit_expr(seed_col, _index_space_dist(dist, n))
-    idx = F.floor(unit * F.lit(float(n))).cast("long")
-    return _clamp(idx, F.lit(0).cast("long"), F.lit(n - 1).cast("long"))
+    idx = cast(call("floor", f"({unit} * {sql_lit(float(n))})"), "BIGINT")
+    return _index_clamp(idx, n)
 
 
 def _index_space_dist(dist: Distribution, n: int) -> Distribution:
@@ -188,18 +212,18 @@ def _index_space_dist(dist: Distribution, n: int) -> Distribution:
     return dist
 
 
-def weighted_index_expr(seed_col: Column, weights: Sequence[float]) -> Column:
+def weighted_index_expr(seed_col: str, weights: Sequence[float]) -> str:
     """Index into a value list by relative weights via a cumulative-threshold
-    fold of ``F.when`` (reference ``core/engine/distributions.py:65-102``).
+    fold of ``CASE WHEN`` (reference ``core/engine/distributions.py:65-102``).
 
     Zero-sum weights fall back to uniform.
     """
     total = float(sum(weights))
     n = len(weights)
     if total <= 0.0:
-        return F.pmod(seed_col, F.lit(n)).cast("long")
+        return cast(call("pmod", seed_col, sql_lit(n)), "BIGINT")
     u = uniform_fraction(seed_col)
-    expr: Column = F.lit(n - 1).cast("long")  # default: last bucket
+    expr = cast(sql_lit(n - 1), "BIGINT")  # default: last bucket
     cumulative = 0.0
     conds = []
     for i, w in enumerate(weights[:-1]):
@@ -207,7 +231,7 @@ def weighted_index_expr(seed_col: Column, weights: Sequence[float]) -> Column:
         conds.append((cumulative, i))
     # build nested whens from the last threshold outward
     for threshold, i in reversed(conds):
-        expr = F.when(u < F.lit(threshold), F.lit(i).cast("long")).otherwise(expr)
+        expr = case_when(f"{u} < {sql_lit(threshold)}", cast(sql_lit(i), "BIGINT"), expr)
     return expr
 
 

@@ -17,10 +17,8 @@ per FK cell.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
 from dbldatagen_spark.operators.distributions import index_expr
+from dbldatagen_spark.operators.numeric import sequence_expr
 from dbldatagen_spark.operators.seed import cell_seed, derive_column_seed
 from dbldatagen_spark.operators.strings import pattern_expr, uuid_expr
 from dbldatagen_spark.plans.spec import (
@@ -35,9 +33,9 @@ from dbldatagen_spark.plans.spec import (
 
 
 def reconstruct_pk_expr(
-    parent_pk: ColumnSpec, parent_seed: int, parent_table: str, row_index: Column
-) -> Column:
-    """Re-derive the parent PK value at ``row_index`` (a Column of longs)."""
+    parent_pk: ColumnSpec, parent_seed: int, parent_table: str, row_index: str
+) -> str:
+    """Re-derive the parent PK value at ``row_index`` (SQL text, a long)."""
     strategy = parent_pk.strategy
     col_seed = (
         parent_pk.seed
@@ -45,12 +43,7 @@ def reconstruct_pk_expr(
         else derive_column_seed(parent_seed, parent_table, parent_pk.name)
     )
     if isinstance(strategy, SequenceColumn):
-        value = row_index.cast("long") * F.lit(int(strategy.step)) + F.lit(
-            int(strategy.start)
-        )
-        from dbldatagen_spark.operators.numeric import spark_type_name
-
-        return value.cast(spark_type_name(parent_pk.effective_dtype))
+        return sequence_expr(strategy, row_index, parent_pk.effective_dtype)
     if isinstance(strategy, UUIDColumn):
         return uuid_expr(cell_seed(col_seed, row_index), col_seed)
     if isinstance(strategy, PatternColumn):
@@ -66,10 +59,10 @@ def reconstruct_pk_expr(
 def foreign_key_expr(
     strategy: ForeignKeyColumn,
     column_seed: int,
-    id_col: Column,
+    id_col: str,
     parent: TableSpec,
     parent_seed: int,
-) -> Column:
+) -> str:
     """FK value: sample parent row index with the FK's distribution, then
     reconstruct the parent PK at that index."""
     pk_name = strategy.parent_column

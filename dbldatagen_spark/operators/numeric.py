@@ -1,6 +1,6 @@
 """Numeric column builders: sequences and ranged values.
 
-All builders return a single pure ``Column`` expression over the row-id /
+All builders return one Spark SQL expression (text) over the row-id /
 cell-seed columns (reference semantics:
 ``/root/reference/dbldatagen/core/engine/columns/numeric.py:88-213`` and
 ``core/engine/columns/pk.py:12-27``; implementation original).
@@ -9,7 +9,7 @@ Scale notes:
 
 * integral ranges sample a *lattice index* then apply ``idx*step + min`` —
   two multiplies and an add per cell, fully codegen'd;
-* ``F.pmod`` (not ``%``) everywhere: Spark ``%`` is signed and xxhash64
+* ``pmod`` (not ``%``) everywhere: Spark ``%`` is signed and xxhash64
   seeds are frequently negative (SURVEY §7.3 "negative modulo");
 * values are clamped *before* any narrowing cast so the engine is safe
   under ``spark.sql.ansi.enabled=true`` (no silent overflow, no runtime
@@ -19,14 +19,13 @@ Scale notes:
 from __future__ import annotations
 
 import math
-
-from pyspark.sql import Column
-from pyspark.sql import functions as F
+from typing import Optional
 
 from dbldatagen_spark.operators.distributions import (
     index_expr,
     unit_expr,
 )
+from dbldatagen_spark.operators.sqltext import call, cast, sql_lit
 from dbldatagen_spark.plans.spec import (
     RangeColumn,
     SequenceColumn,
@@ -60,12 +59,13 @@ def spark_type_name(dtype: str) -> str:
     return _SPARK_TYPE[dtype]
 
 
-def sequence_expr(strategy: SequenceColumn, id_col: Column, dtype: str) -> Column:
+def sequence_expr(strategy: SequenceColumn, id_col: str, dtype: str) -> str:
     """``start + row_id * step`` — the reconstructible PK workhorse."""
-    value = id_col.cast("long") * F.lit(int(strategy.step)) + F.lit(
-        int(strategy.start)
+    value = (
+        f"({cast(id_col, 'BIGINT')} * {sql_lit(int(strategy.step))}"
+        f" + {sql_lit(int(strategy.start))})"
     )
-    return value.cast(spark_type_name(dtype))
+    return cast(value, spark_type_name(dtype))
 
 
 def range_count(strategy: RangeColumn, dtype: str) -> int:
@@ -87,9 +87,9 @@ def range_count(strategy: RangeColumn, dtype: str) -> int:
 
 
 def range_expr(
-    strategy: RangeColumn, dtype: str, seed_col: Column, *, random: bool = True,
-    id_col: Column = None,
-) -> Column:
+    strategy: RangeColumn, dtype: str, seed_col: str, *, random: bool = True,
+    id_col: Optional[str] = None,
+) -> str:
     """Ranged value in ``[min_value, max_value]``.
 
     ``random=True`` draws the lattice index from ``seed_col`` through the
@@ -110,41 +110,51 @@ def range_expr(
     raise ValueError(f"range strategy incompatible with dtype {dtype!r}")
 
 
-def _lattice_index(
-    strategy: RangeColumn, count: int, seed_col: Column, random: bool, id_col: Column
-) -> Column:
+def lattice_index(
+    count: int, dist, seed_col: str, random: bool, id_col: Optional[str]
+) -> str:
+    """Index into a ``count``-point lattice: drawn from ``seed_col`` through
+    ``dist`` when ``random``, else cycled by ``pmod(id_col, count)``
+    (``seed_col`` when no ``id_col``)."""
     if not random:
         src = id_col if id_col is not None else seed_col
-        return F.pmod(src.cast("long"), F.lit(count)).cast("long")
-    dist = strategy.distribution
+        return cast(call("pmod", cast(src, "BIGINT"), sql_lit(count)), "BIGINT")
     if isinstance(dist, WeightedValues):
         raise ValueError("WeightedValues is only valid on a values list")
     return index_expr(seed_col, count, dist)
 
 
 def _integral_range(
-    strategy: RangeColumn, dtype: str, seed_col: Column, random: bool, id_col: Column
-) -> Column:
+    strategy: RangeColumn, dtype: str, seed_col: str, random: bool,
+    id_col: Optional[str],
+) -> str:
     count = range_count(strategy, dtype)
-    idx = _lattice_index(strategy, count, seed_col, random, id_col)
-    value = idx * F.lit(int(strategy.step or 1)) + F.lit(int(strategy.min_value))
-    return value.cast(spark_type_name(dtype))
+    idx = lattice_index(count, strategy.distribution, seed_col, random, id_col)
+    value = (
+        f"({idx} * {sql_lit(int(strategy.step or 1))}"
+        f" + {sql_lit(int(strategy.min_value))})"
+    )
+    return cast(value, spark_type_name(dtype))
 
 
 def _fractional_range(
-    strategy: RangeColumn, dtype: str, seed_col: Column, random: bool, id_col: Column
-) -> Column:
+    strategy: RangeColumn, dtype: str, seed_col: str, random: bool,
+    id_col: Optional[str],
+) -> str:
     """float / double / decimal: continuous when random without a step,
     else the ``idx*step + min`` lattice computed in double."""
     lo, hi = float(strategy.min_value), float(strategy.max_value)
     if random and strategy.step is None:
         unit = unit_expr(seed_col, strategy.distribution)
-        value = unit * F.lit(hi - lo) + F.lit(lo)
+        value = f"({unit} * {sql_lit(hi - lo)} + {sql_lit(lo)})"
     else:
         count = range_count(strategy, dtype)
-        idx = _lattice_index(strategy, count, seed_col, random, id_col)
-        value = idx.cast("double") * F.lit(float(strategy.step or 1)) + F.lit(lo)
+        idx = lattice_index(count, strategy.distribution, seed_col, random, id_col)
+        value = (
+            f"({cast(idx, 'DOUBLE')} * {sql_lit(float(strategy.step or 1))}"
+            f" + {sql_lit(lo)})"
+        )
     # a decimal cast rounds HALF_UP at target scale itself (same rule the
     # reference applies via an explicit round, numeric.py:208-212) — an
-    # extra F.round first would double the per-row decimal work
-    return value.cast(spark_type_name(dtype))
+    # extra round first would double the per-row decimal work
+    return cast(value, spark_type_name(dtype))

@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from dbldatagen_spark.operators.sqltext import call, case_when, cast, sql_lit
+
 ROW_ID_COL = "__synth_row_id"
 
 _MASK64 = (1 << 64) - 1
@@ -51,7 +53,7 @@ def derive_column_seed(global_seed: int, table_name: str, column_name: str) -> i
     """Driver-side 64-bit seed for a column, decorrelated across tables and
     columns. Polynomial string hash (·31 over table, ·37 over column) folded
     into the global seed, then one splitmix64 round; wrapped to signed 64
-    for use in ``F.lit`` (Spark has no unsigned long).
+    for use as a BIGINT literal (Spark has no unsigned long).
     """
     h = global_seed & _MASK64
     for ch in table_name:
@@ -67,39 +69,53 @@ def decorrelate(seed: int, salt: int) -> int:
     return _to_signed64(_splitmix64((seed & _MASK64) ^ ((salt * _MIX_A) & _MASK64)))
 
 
-def cell_seed(column_seed: int, id_col: Column) -> Column:
-    """Per-row 64-bit seed, partition-independent: ``xxhash64(seed, id)``."""
-    return F.xxhash64(F.lit(column_seed), id_col)
+def cell_seed(column_seed: int, id_col: "str | Column") -> "str | Column":
+    """Per-row 64-bit seed, partition-independent: ``xxhash64(seed, id)``.
+
+    Like the other seed primitives below it maps SQL text to SQL text; a
+    ``Column`` argument (a registered distribution's ``unit_expr``, the
+    copula and Markov expressions) yields a ``Column``."""
+    if isinstance(id_col, Column):
+        return F.xxhash64(F.lit(column_seed), id_col)
+    return call("xxhash64", sql_lit(column_seed), id_col)
 
 
-def uniform_fraction(seed_col: Column) -> Column:
-    """Map a 64-bit seed column to a double uniform in [0, 1).
+def uniform_fraction(seed_col: "str | Column") -> "str | Column":
+    """Map a 64-bit seed to a double uniform in [0, 1).
 
     Uses ``pmod(seed, 2^53) / 2^53`` so every distinct fraction is exactly
     representable (53-bit mantissa) — same precision argument as reference
     ``core/engine/seed.py:67-76``.
     """
-    return F.pmod(seed_col, F.lit(_FRACTION_DENOM)).cast("double") / F.lit(
-        float(_FRACTION_DENOM)
+    if isinstance(seed_col, Column):
+        return F.pmod(seed_col, F.lit(_FRACTION_DENOM)).cast("double") / F.lit(
+            float(_FRACTION_DENOM)
+        )
+    return (
+        f"({cast(call('pmod', seed_col, sql_lit(_FRACTION_DENOM)), 'DOUBLE')}"
+        f" / {sql_lit(float(_FRACTION_DENOM))})"
     )
 
 
-def uniform_fraction_open(seed_col: Column) -> Column:
+def uniform_fraction_open(seed_col: "str | Column") -> "str | Column":
     """Uniform in (0, 1) — safe for log()/inverse-CDF transforms."""
-    return (
-        F.pmod(seed_col, F.lit(_FRACTION_DENOM - 1)).cast("double") + F.lit(0.5)
-    ) / F.lit(float(_FRACTION_DENOM))
+    if isinstance(seed_col, Column):
+        return (
+            F.pmod(seed_col, F.lit(_FRACTION_DENOM - 1)).cast("double") + F.lit(0.5)
+        ) / F.lit(float(_FRACTION_DENOM))
+    frac = cast(call("pmod", seed_col, sql_lit(_FRACTION_DENOM - 1)), "DOUBLE")
+    return f"(({frac} + {sql_lit(0.5)}) / {sql_lit(float(_FRACTION_DENOM))})"
 
 
 def null_mask(
-    value: Column, null_fraction: float, column_seed: int, id_col: Column
-) -> Column:
+    value: str, null_fraction: float, column_seed: int, id_col: str
+) -> str:
     """Bernoulli null injection decorrelated from the value stream via an
     XOR'd seed (reference ``core/engine/seed.py:79-107``)."""
     if not null_fraction:
         return value
     if null_fraction >= 1.0:
-        return F.lit(None).cast("string") if value is None else F.lit(None)
+        return "NULL"
     null_seed = _to_signed64((column_seed & _MASK64) ^ _NULL_XOR)
     frac = uniform_fraction(cell_seed(null_seed, id_col))
-    return F.when(frac < F.lit(float(null_fraction)), F.lit(None)).otherwise(value)
+    return case_when(f"{frac} < {sql_lit(float(null_fraction))}", "NULL", value)

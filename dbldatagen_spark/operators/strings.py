@@ -1,6 +1,6 @@
 """String-family builders: value lists, patterns, deterministic UUIDs.
 
-All pure Catalyst expressions (reference semantics:
+All pure Catalyst expressions, built as Spark SQL text (reference semantics:
 ``/root/reference/dbldatagen/core/engine/columns/string.py:24-246`` and
 ``core/engine/columns/uuid.py:15-58``; implementation original).
 """
@@ -12,14 +12,12 @@ from dataclasses import dataclass
 from itertools import accumulate
 from typing import List, Optional, Sequence, Union
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
 from dbldatagen_spark.operators.distributions import (
     index_expr,
     weighted_index_expr,
 )
 from dbldatagen_spark.operators.seed import decorrelate
+from dbldatagen_spark.operators.sqltext import call, case_when, cast, sql_lit
 
 _ALPHA = "abcdefghijklmnopqrstuvwxyz"
 _ALPHA_UPPER = _ALPHA.upper()
@@ -76,19 +74,24 @@ def parse_pattern(pattern: str) -> List[_Token]:
     return tokens
 
 
-def _alpha_chars(seed_col: Column, column_seed: int, salt: int, width: int,
-                 alphabet: str) -> Column:
+def _alpha_chars(seed_col: str, column_seed: int, salt: int, width: int,
+                 alphabet: str) -> str:
     """``width`` independent alphabet characters via per-position decorrelated
-    hashes; each char is ``substring(alphabet, pmod(h, len)+1, 1)``."""
+    hashes; each char is ``substr(alphabet, pmod(h, len)+1, 1)``."""
+    letters = call("substring", sql_lit(alphabet), sql_lit(1), sql_lit(len(alphabet)))
     parts = []
     for i in range(width):
-        h = F.xxhash64(F.lit(decorrelate(column_seed, salt * 1000 + i)), seed_col)
-        idx = F.pmod(h, F.lit(len(alphabet))).cast("int") + F.lit(1)
-        parts.append(F.substring(F.lit(alphabet), 1, len(alphabet)).substr(idx, F.lit(1)))
-    return F.concat(*parts) if len(parts) > 1 else parts[0]
+        h = call("xxhash64", sql_lit(decorrelate(column_seed, salt * 1000 + i)), seed_col)
+        idx = f"({cast(call('pmod', h, sql_lit(len(alphabet))), 'INT')} + {sql_lit(1)})"
+        parts.append(call("substr", letters, idx, sql_lit(1)))
+    return call("concat", *parts) if len(parts) > 1 else parts[0]
 
 
-def uuid_expr(seed_col: Column, column_seed: int) -> Column:
+def _hex16(h: str) -> str:
+    return call("lpad", call("lower", call("hex", h)), sql_lit(16), sql_lit("0"))
+
+
+def uuid_expr(seed_col: str, column_seed: int) -> str:
     """Deterministic UUID-shaped string (8-4-4-4-12 hex; not RFC-4122) from
     two 64-bit hash draws.
 
@@ -97,25 +100,26 @@ def uuid_expr(seed_col: Column, column_seed: int) -> Column:
     bit-field chunks with ``%x`` but ~3x faster at 10M rows: two
     hex renders + five substrings beat five Java ``format_string``
     invocations per row."""
-    h1 = seed_col
-    h2 = F.xxhash64(F.lit(decorrelate(column_seed, 0xBEEF)), seed_col)
-    x1 = F.lpad(F.lower(F.hex(h1)), 16, "0")
-    x2 = F.lpad(F.lower(F.hex(h2)), 16, "0")
-    return F.concat(
-        F.substring(x1, 1, 8), F.lit("-"),
-        F.substring(x1, 9, 4), F.lit("-"),
-        F.substring(x1, 13, 4), F.lit("-"),
-        F.substring(x2, 1, 4), F.lit("-"),
-        F.substring(x2, 5, 12),
+    x1 = _hex16(seed_col)
+    x2 = _hex16(call("xxhash64", sql_lit(decorrelate(column_seed, 0xBEEF)), seed_col))
+    dash = sql_lit("-")
+
+    def cut(x: str, pos: int, length: int) -> str:
+        return call("substring", x, sql_lit(pos), sql_lit(length))
+
+    return call(
+        "concat",
+        cut(x1, 1, 8), dash, cut(x1, 9, 4), dash, cut(x1, 13, 4), dash,
+        cut(x2, 1, 4), dash, cut(x2, 5, 12),
     )
 
 
 def pattern_expr(
     pattern_or_tokens: Union[str, Sequence[_Token]],
-    seed_col: Column,
-    id_col: Column,
+    seed_col: str,
+    id_col: str,
     column_seed: int,
-) -> Column:
+) -> str:
     """Compile a pattern template into one concat expression.
 
     Each placeholder draws from its own decorrelated seed stream (salted by
@@ -126,49 +130,46 @@ def pattern_expr(
         if isinstance(pattern_or_tokens, str)
         else list(pattern_or_tokens)
     )
-    parts: List[Column] = []
+
+    def draw(salt: int) -> str:
+        return call("xxhash64", sql_lit(decorrelate(column_seed, salt)), seed_col)
+
+    parts: List[str] = []
     for pos, t in enumerate(tokens):
         if t.kind == "literal":
-            parts.append(F.lit(t.text))
+            parts.append(sql_lit(t.text))
         elif t.kind == "seq":
-            seq = id_col.cast("long") + F.lit(1)
+            seq = cast(f"({cast(id_col, 'BIGINT')} + {sql_lit(1)})", "STRING")
             if t.width:
-                parts.append(F.lpad(seq.cast("string"), t.width, "0"))
+                parts.append(call("lpad", seq, sql_lit(t.width), sql_lit("0")))
             else:
-                parts.append(seq.cast("string"))
+                parts.append(seq)
         elif t.kind == "uuid":
-            h = F.xxhash64(F.lit(decorrelate(column_seed, pos + 7)), seed_col)
-            parts.append(uuid_expr(h, decorrelate(column_seed, pos + 7)))
+            parts.append(uuid_expr(draw(pos + 7), decorrelate(column_seed, pos + 7)))
         elif t.kind == "digit":
-            h = F.xxhash64(F.lit(decorrelate(column_seed, pos + 101)), seed_col)
-            modulus = 10**t.width
-            parts.append(
-                F.lpad(F.pmod(h, F.lit(modulus)).cast("string"), t.width, "0")
-            )
+            digits = cast(call("pmod", draw(pos + 101), sql_lit(10**t.width)), "STRING")
+            parts.append(call("lpad", digits, sql_lit(t.width), sql_lit("0")))
         elif t.kind == "hex":
-            h = F.xxhash64(F.lit(decorrelate(column_seed, pos + 211)), seed_col)
-            modulus = 16**t.width
-            parts.append(
-                F.lower(F.lpad(F.hex(F.pmod(h, F.lit(modulus))), t.width, "0"))
-            )
+            digits = call("hex", call("pmod", draw(pos + 211), sql_lit(16**t.width)))
+            parts.append(call("lower", call("lpad", digits, sql_lit(t.width), sql_lit("0"))))
         elif t.kind == "alpha":
             parts.append(
                 _alpha_chars(seed_col, column_seed, pos + 307, t.width, _ALPHA_UPPER)
             )
         else:  # pragma: no cover
             raise ValueError(f"unknown token {t.kind}")
-    return F.concat(*parts) if len(parts) > 1 else parts[0]
+    return call("concat", *parts) if len(parts) > 1 else parts[0]
 
 
 def values_expr(
     values: Sequence,
-    seed_col: Column,
+    seed_col: str,
     distribution,
     *,
     random: bool = True,
-    id_col: Column = None,
+    id_col: Optional[str] = None,
     dtype: Optional[str] = None,
-) -> Column:
+) -> str:
     """Pick from an explicit value list.
 
     ``random=True`` draws the index from ``seed_col`` through the
@@ -183,26 +184,27 @@ def values_expr(
     from dbldatagen_spark.plans.spec import WeightedValues
 
     n = len(values)
-    src = id_col if id_col is not None else seed_col
+    src = cast(id_col if id_col is not None else seed_col, "BIGINT")
     if random and isinstance(distribution, WeightedValues):
         idx = weighted_index_expr(seed_col, distribution.weights)
     elif random:
         idx = index_expr(seed_col, n, distribution)
     elif isinstance(distribution, WeightedValues):
-        slot = F.pmod(src.cast("long"), F.lit(1000))
+        slot = call("pmod", src, sql_lit(1000))
         total = sum(distribution.weights)
         cdf = accumulate(w / total for w in distribution.weights[:-1])
-        idx = F.lit(n - 1).cast("long")
+        idx = cast(sql_lit(n - 1), "BIGINT")
         for i, share in reversed(list(enumerate(cdf))):
-            idx = F.when(
-                slot < F.lit(int(round(share * 1000))), F.lit(i).cast("long")
-            ).otherwise(idx)
+            idx = case_when(
+                f"{slot} < {sql_lit(int(round(share * 1000)))}",
+                cast(sql_lit(i), "BIGINT"), idx,
+            )
     else:
-        idx = F.pmod(src.cast("long"), F.lit(n))
-    arr = F.array(*[F.lit(v) for v in values])
-    out = F.element_at(arr, idx.cast("int") + F.lit(1))
+        idx = call("pmod", src, sql_lit(n))
+    arr = call("array", *[sql_lit(v) for v in values])
+    out = call("element_at", arr, f"({cast(idx, 'INT')} + {sql_lit(1)})")
     if dtype is not None and dtype not in ("infer",):
         from dbldatagen_spark.operators.numeric import spark_type_name
 
-        out = out.cast(spark_type_name(dtype))
+        out = cast(out, spark_type_name(dtype))
     return out

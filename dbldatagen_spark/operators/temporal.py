@@ -10,11 +10,10 @@ independent of the Spark session timezone (reference
 from __future__ import annotations
 
 import datetime as _dt
+from typing import Optional
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
-from dbldatagen_spark.operators.distributions import index_expr
+from dbldatagen_spark.operators.numeric import lattice_index
+from dbldatagen_spark.operators.sqltext import call, cast, sql_lit
 from dbldatagen_spark.plans.spec import DateColumn, TimestampColumn
 
 _EPOCH = _dt.date(1970, 1, 1)
@@ -66,9 +65,9 @@ def parse_date_days(value) -> int:
 
 
 def timestamp_expr(
-    strategy: TimestampColumn, seed_col: Column, *, random: bool = True,
-    id_col: Column = None,
-) -> Column:
+    strategy: TimestampColumn, seed_col: str, *, random: bool = True,
+    id_col: Optional[str] = None,
+) -> str:
     """Timestamp on the ``interval_seconds`` lattice within inclusive bounds.
 
     ``timestamp_seconds`` interprets its argument as UTC epoch, which keeps
@@ -78,28 +77,19 @@ def timestamp_expr(
     end = parse_utc_epoch(strategy.end)
     step = int(strategy.interval_seconds)
     count = (end - start) // step + 1
-    if random:
-        idx = index_expr(seed_col, count, strategy.distribution)
-    else:
-        src = id_col if id_col is not None else seed_col
-        idx = F.pmod(src.cast("long"), F.lit(count)).cast("long")
-    epoch = idx * F.lit(step) + F.lit(start)
-    return F.timestamp_seconds(epoch)
+    idx = lattice_index(count, strategy.distribution, seed_col, random, id_col)
+    return call("timestamp_seconds", f"({idx} * {sql_lit(step)} + {sql_lit(start)})")
 
 
 def date_expr(
-    strategy: DateColumn, seed_col: Column, *, random: bool = True,
-    id_col: Column = None,
-) -> Column:
+    strategy: DateColumn, seed_col: str, *, random: bool = True,
+    id_col: Optional[str] = None,
+) -> str:
     """Date on the ``interval_days`` lattice within inclusive bounds."""
     start = parse_date_days(strategy.start)
     end = parse_date_days(strategy.end)
     step = int(strategy.interval_days)
     count = (end - start) // step + 1
-    if random:
-        idx = index_expr(seed_col, count, strategy.distribution)
-    else:
-        src = id_col if id_col is not None else seed_col
-        idx = F.pmod(src.cast("long"), F.lit(count)).cast("long")
-    days = (idx * F.lit(step) + F.lit(start)).cast("int")
-    return F.date_add(F.lit("1970-01-01").cast("date"), days)
+    idx = lattice_index(count, strategy.distribution, seed_col, random, id_col)
+    days = cast(f"({idx} * {sql_lit(step)} + {sql_lit(start)})", "INT")
+    return call("date_add", cast(sql_lit("1970-01-01"), "DATE"), days)

@@ -273,7 +273,15 @@ def register_distribution(name: str, cls: type = None):
     A custom class participates in continuous value ranges by exposing
     ``unit_expr(self, seed_col) -> Column`` mapping the 64-bit cell-seed
     column to a double in [0, 1] — pure Spark expressions, so the engine's
-    no-UDF / partition-independence guarantees carry over. Usable directly
+    no-UDF / partition-independence guarantees carry over.  This is one of
+    the two ``Column`` boundaries of the engine (pandas-UDF text columns
+    are the other): the built-in builders emit Spark SQL text, which
+    Catalyst parses into the same trees as the ``Column`` API, so the
+    engine passes ``seed_col`` in as a ``Column``, names the returned
+    ``Column`` in a projection below the level and references that name
+    from the text (``CollapseProject`` folds it back in).  The seed
+    primitives in :mod:`dbldatagen_spark.operators.seed` accept a
+    ``Column`` for this use. Usable directly
     (``register_distribution("tri", Tri)``) or as a decorator
     (``@register_distribution("tri")``).
     """

@@ -2,9 +2,11 @@
 
 Each ``__spark_entry__.queries()`` entry yields one line of JSON with
 
-- ``construction_s``, ``eager_jobs``: wall time of the query function
-  and the Spark jobs it fired before any action (counted through a
-  per-query job group and ``statusTracker``);
+- ``construction_s``, ``eager_jobs``, ``construction_py4j``: wall time
+  of the query function, the Spark jobs it fired before any action
+  (counted through a per-query job group and ``statusTracker``) and the
+  py4j commands it sent to the JVM (memory-management commands
+  excluded);
 - ``rows``: row count of one ``collect()`` of that DataFrame, after
   which its executed (post-AQE) plan is walked for ``shuffle_bytes``,
   ``shuffle_records``, ``spill_bytes`` and ``exchanges`` (bytes and
@@ -52,6 +54,31 @@ FEATURES = {
     "sort_merge_joins": r"SortMergeJoin",
     "py_udf_nodes": r"BatchEvalPython|ArrowEvalPython|MapInPandas|FlatMapGroupsInPandas",
 }
+
+
+class Py4jCount:
+    """Counts the py4j commands sent through the session's gateway client
+    while the ``with`` block runs (memory-management commands excluded)."""
+
+    def __init__(self, spark):
+        self.client = spark.sparkContext._gateway._gateway_client
+        self.count = 0
+
+    def __enter__(self):
+        from py4j.protocol import MEMORY_COMMAND_NAME
+
+        self.send = send = self.client.send_command
+
+        def counting_send(command, *args, **kwargs):
+            if not command.startswith(MEMORY_COMMAND_NAME):
+                self.count += 1
+            return send(command, *args, **kwargs)
+
+        self.client.send_command = counting_send
+        return self
+
+    def __exit__(self, *exc):
+        self.client.send_command = self.send
 
 
 def best_of(fn, runs: int) -> float:
@@ -147,9 +174,11 @@ def measure(spark, name: str, fn, sf_dir: str, runs: int = 1, plans_dir=None) ->
         group = f"measure-{name}-{uuid.uuid4().hex}"
         sc.setJobGroup(group, f"{name}: construction")
         try:
-            t0 = time.perf_counter()
-            df = fn(spark, sf_dir)
-            rec["construction_s"] = round(time.perf_counter() - t0, 3)
+            with Py4jCount(spark) as sent:
+                t0 = time.perf_counter()
+                df = fn(spark, sf_dir)
+                rec["construction_s"] = round(time.perf_counter() - t0, 3)
+            rec["construction_py4j"] = sent.count
         finally:
             sc._jsc.clearJobGroup()
         # job events reach the status store through the async listener bus

@@ -1,0 +1,153 @@
+"""Driver-side construction cost and the contracts the SQL-text builders
+keep.
+
+Generation builders emit Spark SQL text and each dependency level is one
+``selectExpr``, so building a plan sends few py4j commands.  The counts
+below wrap the gateway client's ``send_command`` for the duration of one
+build (memory-management commands excluded); the bounds leave headroom
+over the measured 114 (star) and 336 (v0 text, of which the four
+pandas-UDF columns are most) while catching any return to one ``F.*``
+call per node (4,557 and 917 before the change).
+"""
+
+import contextlib
+
+import pytest
+from py4j.protocol import MEMORY_COMMAND_NAME
+from pyspark.errors import ParseException
+
+import dbldatagen_spark as dg
+from dbldatagen_spark.generator import generate_table
+
+
+@contextlib.contextmanager
+def count_py4j(spark):
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    sent = [0]
+
+    def counting_send(command, *args, **kwargs):
+        if not command.startswith(MEMORY_COMMAND_NAME):
+            sent[0] += 1
+        return send(command, *args, **kwargs)
+
+    client.send_command = counting_send
+    try:
+        yield sent
+    finally:
+        client.send_command = send
+
+
+def star_plan(seed=7):
+    C = dg.ColumnSpec
+    customers = dg.TableSpec("customers", 20_000, [
+        C("customer_id", dg.PatternColumn("CUST-{seq:8}")),
+        C("email", dg.PatternColumn("user{digit:6}@{alpha:5}.example")),
+        C("tier", dg.ValuesColumn(["gold", "silver", "bronze"], dg.WeightedValues([1, 3, 6]))),
+        C("signup", dg.DateColumn("2015-01-01", "2024-12-31")),
+    ], primary_key="customer_id")
+    products = dg.TableSpec("products", 5_000, [
+        C("product_id", dg.SequenceColumn(start=1)),
+        C("sku", dg.PatternColumn("SKU-{hex:6}")),
+        C("price", dg.RangeColumn(1.0, 500.0), dtype="decimal(10,2)"),
+    ], primary_key="product_id")
+    cols = [
+        C("order_id", dg.SequenceColumn(start=1)),
+        C("customer_id", dg.ForeignKeyColumn("customers.customer_id")),
+        C("product_id", dg.ForeignKeyColumn("products.product_id", dg.Zipf(1.2))),
+        C("qty", dg.RangeColumn(1, 20, distribution=dg.Zipf(1.5)), dtype="int"),
+        C("amount", dg.RangeColumn(0.0, 1000.0, distribution=dg.Normal(500.0, 150.0)),
+          dtype="double", nullable=True, null_fraction=0.05),
+        C("status", dg.ValuesColumn(["new", "paid", "shipped", "returned"],
+                                    dg.WeightedValues([3, 5, 2, 1]))),
+        C("code", dg.PatternColumn("ORD-{digit:6}-{alpha:2}")),
+        C("ordered_at", dg.TimestampColumn("2024-01-01 00:00:00", "2024-12-31 23:59:59")),
+        C("ship_date", dg.DateColumn("2024-01-01", "2025-01-31")),
+        C("total", dg.ExpressionColumn("qty * amount")),
+    ]
+    cols += [C(f"f{i}", dg.RangeColumn(0, 10 ** (i % 5 + 2)), dtype="int",
+               nullable=True, null_fraction=0.05) for i in range(10)]
+    orders = dg.TableSpec("orders", 200_000, cols)
+    return dg.DataGenPlan([customers, products, orders], seed=seed)
+
+
+def text_generator(spark):
+    gen = dg.DataGenerator(spark, name="text", rows=30_000, partitions=4, randomSeed=7)
+    for name, template in (("phone", "ddd-ddd-dddd"), ("email", r"\w.\w@\w.com"),
+                           ("code", "KKKK-dddd|AAAA-Dddd")):
+        gen.withColumn(name, "string", template=template)
+    gen.withColumn("body", "string", text=dg.ILText(paragraphs=1, sentences=(1, 3),
+                                                     words=(4, 8)))
+    gen.withColumn("qty", "int", minValue=1, maxValue=100, random=True)
+    gen.withColumn("price", "double", minValue=1.0, maxValue=500.0, random=True)
+    gen.withColumn("status", "string", values=["new", "paid", "shipped"],
+                   weights=[2, 3, 4], random=True)
+    gen.withConstraint(dg.PositiveValues("qty"))
+    return gen
+
+
+def test_star_generate_sends_few_py4j_commands(spark):
+    plan = star_plan()
+    dg.generate(spark, plan)  # warm: first-use class loading is not construction
+    with count_py4j(spark) as sent:
+        tables = dg.generate(spark, plan)
+    assert sent[0] <= 250, sent[0]
+    assert tables["orders"].columns[-1] == "f9"
+
+
+def test_v0_text_build_sends_few_py4j_commands(spark):
+    text_generator(spark).build()
+    with count_py4j(spark) as sent:
+        df = text_generator(spark).build()
+    assert sent[0] <= 460, sent[0]
+    assert df.columns == ["phone", "email", "code", "body", "qty", "price", "status"]
+
+
+def _expression_table(expr):
+    return dg.TableSpec("t", 5, [
+        dg.ColumnSpec("q", dg.SequenceColumn()),
+        dg.ColumnSpec("e", dg.ExpressionColumn(expr)),
+    ])
+
+
+@pytest.mark.parametrize("expr", [
+    "q * 2 -- doubled", "q * 2 AS doubled", "q * 2 doubled",
+    "/* twice */ q * 2 -- doubled\n", "(q) * 2 AS `we``ird` -- alias and comment",
+])
+def test_user_sql_keeps_expr_contract(spark, expr):
+    """As over ``F.expr``: a trailing comment works and a user alias is
+    replaced by the column's own name."""
+    df = generate_table(spark, _expression_table(expr))
+    assert df.columns == ["q", "e"]
+    assert [(r.q, r.e) for r in df.collect()] == [(q, 2 * q) for q in range(1, 6)]
+
+
+@pytest.mark.parametrize("expr", ["q + 1) * (2", "q, q", "(q", "'open", "q /* open"])
+def test_malformed_expression_raises_parse_exception(spark, expr):
+    with pytest.raises(ParseException):
+        generate_table(spark, _expression_table(expr))
+
+
+def test_v0_expr_with_trailing_comment_builds(spark):
+    df = (dg.DataGenerator(spark, rows=4, partitions=2)
+          .withColumn("a", "int", minValue=1, maxValue=4)
+          .withColumn("b", "int", expr="a * 10 -- tens")
+          .build())
+    assert sorted((r.a, r.b) for r in df.collect()) == [(a, 10 * a) for a in range(1, 5)]
+
+
+@pytest.mark.parametrize("name", ["a.b", "we`ird", "a b", "select"])
+def test_v0_names_that_need_quoting_build(spark, name):
+    """Column names are backquoted in generated SQL, so a dot or a backtick
+    in a v0 name no longer breaks the build; the name survives as is, also
+    as a base column and under a null mask."""
+    df = (dg.DataGenerator(spark, rows=20, partitions=2)
+          .withColumn(name, "int", minValue=0, maxValue=9, random=True)
+          .withColumn("t", "string", template=r"\v-\w", baseColumn=name,
+                      percentNulls=0.1)
+          .withColumn("v", "int", baseColumn=name, minValue=0, maxValue=3)
+          .build())
+    assert df.columns == [name, "t", "v"]
+    rows = df.collect()
+    assert all(0 <= r[name] <= 9 for r in rows)
+    assert all(r["t"] is None or r["t"].startswith(f"{r[name]}-") for r in rows)

@@ -161,8 +161,8 @@ class TestBuilders:
 
         df = spark.range(9).withColumnRenamed("id", ROW_ID_COL)
         out = df.select(
-            values_expr(["a", "b", "c"], F.col(ROW_ID_COL), Uniform(), random=False,
-                        id_col=F.col(ROW_ID_COL)).alias("v")
+            F.expr(values_expr(["a", "b", "c"], ROW_ID_COL, Uniform(), random=False,
+                               id_col=ROW_ID_COL)).alias("v")
         )
         assert [r.v for r in out.collect()] == ["a", "b", "c"] * 3
 

@@ -8,7 +8,8 @@ import pytest
 from test_functions import SF
 
 FIELDS = {
-    "query", "construction_s", "eager_jobs", "rows", "collect_s", "noop_s",
+    "query", "construction_s", "construction_py4j", "eager_jobs", "rows",
+    "collect_s", "noop_s",
     "sink_share", "shuffles", "broadcasts", "sort_merge_joins",
     "py_udf_nodes", "codegen_fallbacks", "shuffle_bytes", "shuffle_records",
     "spill_bytes", "exchanges",
@@ -28,6 +29,11 @@ def measure():
     return mod
 
 
+# gen_sequence compiles to SQL text: 15 py4j commands (107 when every
+# node was an F.* call)
+MAX_CONSTRUCTION_PY4J = {"gen_sequence": 40}
+
+
 @pytest.mark.parametrize(
     "name,shuffled", [("dedup_minhash_lsh", True), ("gen_sequence", False)]
 )
@@ -40,5 +46,8 @@ def test_record(spark, measure, name, shuffled):
     assert rec["rows"] == len(fn(spark, SF).collect())
     assert (rec["shuffles"] >= 1) if shuffled else (rec["shuffles"] == 0)
     assert isinstance(rec["eager_jobs"], int) and rec["eager_jobs"] >= 0
+    assert isinstance(rec["construction_py4j"], int) and rec["construction_py4j"] > 0
+    if name in MAX_CONSTRUCTION_PY4J:
+        assert rec["construction_py4j"] <= MAX_CONSTRUCTION_PY4J[name], rec
     assert rec["shuffle_records"] == sum(e["records"] for e in rec["exchanges"])
     assert 0 < rec["noop_s"] and 0 < rec["collect_s"]
