@@ -1276,23 +1276,29 @@ class DataGenerator:
         for c in self._constraints:
             c.prepare(self)
         df = self._base_dataframe(withStreaming, options)
+        # the frame's column names, tracked here instead of read back from
+        # the JVM (a schema round trip per level)
+        current = [self.seed_column]
+        if withStreaming:
+            current.append("_source_timestamp")
         for columns in self._dependency_levels():
             level = Level()
-            names: set = set()
+            added: List[str] = []
             for c in columns:
                 with level.binding(c.name):
                     pairs = self._column_exprs(c)
                 for out_name, text in pairs:
                     level.add(out_name, text)
-                    names.add(out_name)
+                    added.append(out_name)
             # withColumn-replace semantics: a spec that reuses an existing
             # name (notably the seed column — reference
             # data_generator.py:1043-1044 warns and overrides) replaces the
             # prior column instead of producing an ambiguous duplicate. The
             # new expression is still computed against the pre-select frame,
             # so an overriding `id` spec draws from the raw seed.
-            keep = [quote(n) for n in df.columns if n not in names]
-            df = level.apply(df, keep)
+            keep = [n for n in current if n not in added]
+            df = level.apply(df, [quote(n) for n in keep])
+            current = keep + added
         # constraints: transforms then one fused where
         for c in self._constraints:
             df = c.transform(df)

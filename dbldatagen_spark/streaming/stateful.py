@@ -1,42 +1,42 @@
-"""Streaming sessionization: native session windows + a custom-state
-operator.
+"""Stateful streaming operators: Spark's native session windows, and eight
+custom per-key folds that run through one keyed-state kernel.
 
-Two paths, per the engine's operator policy (prefer built-in composition,
-drop to ``applyInPandasWithState`` only for semantics Spark cannot
-express):
+:func:`session_window_agg` is Spark's native ``session_window``: state,
+late data and spill are Spark's problem, which is what you want at scale.
+The other operators need a per-key fold Spark cannot express (a session
+event cap, dedup across all micro-batches, a CDC view, a token bucket,
+ewma/cusum/holt recurrences, transition counts). Each one is a
+``step`` function run by :func:`_keyed_fold`, the module's only
+``applyInPandasWithState`` call. The kernel's contract:
 
-* :func:`session_window_agg` — Spark's native ``session_window`` (gap-based
-  event-time windows). Works identically over a batch DataFrame (no
-  watermark) and a stream (watermark + append mode); state management,
-  late-data handling, and spill are Spark's problem, which is exactly
-  what you want at scale.
-* :func:`sessionize_with_state` — ``applyInPandasWithState`` with explicit
-  per-user state, for session semantics the native operator cannot
-  express (here: sessions also close after a max-events cap, a common
-  bot-detection rule). Demonstrates the full custom-stateful plumbing:
-  state schema, event-time timeout, emission on both rollover and
-  timeout.
+* ``keyed`` has a ``key`` column; the kernel groups by it, in append mode.
+* Per (key, micro-batch) it calls ``step(key, rows, state)`` with the key
+  value, the batch's rows sorted by ``sort_cols``, and the stored state
+  tuple (``None`` when the key has none).
+* ``step`` returns ``(new_state, out)``. A ``new_state`` of ``None``
+  removes the key's state, the very tuple ``step`` was given leaves it
+  untouched, and any other tuple replaces it. ``out`` lists output row
+  tuples in ``out_fields`` order, with timestamps as epoch microseconds.
+* With ``expiry`` the groups use an event-time timeout: each state update
+  sets it to ``expiry(new_state)`` (epoch milliseconds), and when it
+  fires ``step`` runs with ``rows=None``. Only sessionize uses it.
+* A call with no output rows yields no frame. Otherwise it yields one
+  frame with typed numpy columns; strings and arrays stay object columns.
+
+Each operator keeps its validation, its batch twin (the same result on a
+batch frame, which every streaming operator here must match), the select
+that builds ``keyed``, and its ``step``.
 """
 
 from __future__ import annotations
 
-from typing import Iterable, Tuple
+from typing import Tuple
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (
-    ArrayType,
-    BooleanType,
-    DoubleType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-    TimestampType,
-)
+from pyspark.sql.streaming.state import GroupStateTimeout
 
 
 def session_window_agg(
@@ -72,42 +72,85 @@ def session_window_agg(
 
 def _batch_rows(pdfs, sort_cols):
     """One sorted frame from a state fn's chunk iterator, skipping the
-    pd.concat copy in the common single-chunk case.  Every state fn
-    here is called once per (group, micro-batch) — at sf0.1 that is
-    thousands of calls per batch, so per-call pandas overhead is the
-    operators' hot path (guide §4.5: amortize per-call work)."""
+    pd.concat copy in the common single-chunk case.  The state fn is
+    called once per (group, micro-batch) — at sf0.1 that is thousands of
+    calls per batch, so per-call pandas overhead is the operators' hot
+    path (guide §4.5: amortize per-call work)."""
     chunks = list(pdfs)
     rows = chunks[0] if len(chunks) == 1 else pd.concat(chunks)
     return rows.sort_values(sort_cols)
 
 
-def _i64(values) -> np.ndarray:
-    return np.asarray(values, dtype="int64")
+_NUMPY_DTYPES = {"bigint": "int64", "double": "float64", "boolean": "bool"}
 
 
-def _f64(values) -> np.ndarray:
-    return np.asarray(values, dtype="float64")
+def _column(sql_type, values):
+    """One output column. Typed numpy columns, not object ones that pandas
+    coerces and copies per group call (measured 8x cheaper per call)."""
+    if sql_type == "timestamp":
+        micros = np.asarray(values, dtype="int64")
+        return micros.astype("datetime64[us]").astype("datetime64[ns]")
+    dtype = _NUMPY_DTYPES.get(sql_type)
+    return list(values) if dtype is None else np.asarray(values, dtype=dtype)
 
 
-_STATE_SCHEMA = StructType(
-    [
-        StructField("session_start", LongType()),  # epoch micros
-        StructField("last_ts", LongType()),
-        StructField("n_events", LongType()),
-        StructField("value_sum", DoubleType()),
-    ]
-)
+def _keyed_fold(keyed, sort_cols, out_fields, state_ddl, step, *, expiry=None):
+    """Run ``step`` per key and micro-batch over ``keyed``; see the module
+    docstring for the contract. ``out_fields`` is a list of
+    ``(name, SQL type)`` and ``state_ddl`` a DDL schema string."""
 
-_OUTPUT_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("session_start", TimestampType()),
-        StructField("session_end", TimestampType()),
-        StructField("n_events", LongType()),
-        StructField("value_sum", DoubleType()),
-        StructField("closed_by", LongType()),  # 0=gap rollover, 1=cap, 2=timeout
-    ]
-)
+    def _fn(key, pdfs, state):
+        old = state.get if state.exists else None
+        rows = None if state.hasTimedOut else _batch_rows(pdfs, sort_cols)
+        new, out = step(key[0], rows, old)
+        if new is None:
+            if old is not None:
+                state.remove()
+        elif new is not old:
+            state.update(new)
+            if expiry is not None:
+                state.setTimeoutTimestamp(expiry(new))
+        if out:
+            yield pd.DataFrame(
+                {n: _column(t, c) for (n, t), c in zip(out_fields, zip(*out))},
+                copy=False,
+            )
+
+    return keyed.groupBy("key").applyInPandasWithState(
+        _fn,
+        ", ".join(f"{n} {t}" for n, t in out_fields),
+        state_ddl,
+        "append",
+        GroupStateTimeout.NoTimeout
+        if expiry is None
+        else GroupStateTimeout.EventTimeTimeout,
+    )
+
+
+_SERIES_ORDER = ["_t", "o"]
+_SERIES_FIELDS = [("key", "bigint"), ("o", "bigint"), ("value", "double")]
+
+
+def _series(df, key_col, ts_col, order_col, value):
+    """The ``(key, _t, o, value)`` frame of a per-key series fold; its
+    rows fold in ``_SERIES_ORDER`` within a batch."""
+    return df.select(
+        F.col(key_col).cast("long").alias("key"),
+        F.col(ts_col).cast("timestamp").alias("_t"),
+        F.col(order_col).cast("long").alias("o"),
+        value,
+    )
+
+
+def _series_out(df, key_col, order_col, value_col, *stats):
+    """A batch twin's ``(key, o, value, *stats)`` projection, the columns
+    of ``_SERIES_FIELDS`` plus the fold's statistics."""
+    return df.select(
+        F.col(key_col).cast("long").alias("key"),
+        F.col(order_col).cast("long").alias("o"),
+        F.col(value_col).cast("double").alias("value"),
+        *stats,
+    )
 
 
 def sessionize_with_state(
@@ -122,65 +165,24 @@ def sessionize_with_state(
     native ``session_window`` cannot express).
 
     Expects columns ``user_id``, ``ts``, ``value``. Emits one row per
-    closed session. State is one fixed-size row per active user —
-    per-partition memory is bounded by active users, not events, and
-    Spark's state store handles checkpointing/recovery.
+    closed session; ``closed_by`` is 0 on a gap rollover, 1 on the cap and
+    2 when the event-time timeout (last event + gap) passes the
+    watermark. State is one fixed-size row per active user — per-partition
+    memory is bounded by active users, not events, and Spark's state
+    store handles checkpointing/recovery.
     """
     gap_us = gap_minutes * 60 * 1_000_000
 
-    def _mk_out(out):
-        # typed numpy columnar construction, one frame per yield: the
-        # untyped tuple-list + .assign path built object-dtype columns
-        # pandas had to coerce and copy PER GROUP CALL (~1.5 ms each;
-        # 3k state calls per micro-batch pair at sf0.1 made frame
-        # construction the operator's hot path — measured 8x cheaper
-        # this way, 0.14 ms/call)
-        cols = list(zip(*out))
-        return pd.DataFrame(
-            {
-                "user_id": _i64(cols[0]),
-                "session_start": _i64(cols[1])
-                .astype("datetime64[us]").astype("datetime64[ns]"),
-                "session_end": _i64(cols[2])
-                .astype("datetime64[us]").astype("datetime64[ns]"),
-                "n_events": _i64(cols[3]),
-                "value_sum": _f64(cols[4]),
-                "closed_by": _i64(cols[5]),
-            },
-            copy=False,
-        )
-
-    def _fn(
-        key: Tuple[int], pdfs: Iterable[pd.DataFrame], state: GroupState
-    ) -> Iterable[pd.DataFrame]:
-        (user,) = key
+    def step(user, rows, state):
+        if rows is None:  # timed out: the open session closes
+            return None, [(user, *state, 2)]
+        start, last, n, vsum = state or (None, None, 0, 0.0)
         out = []
-
-        if state.hasTimedOut:
-            if state.exists:
-                start, last, n, vsum = state.get
-                out.append((user, start, last, n, vsum, 2))
-                state.remove()
-            if out:
-                yield _mk_out(out)
-            return
-
-        if state.exists:
-            start, last, n, vsum = state.get
-        else:
-            start = last = None
-            n, vsum = 0, 0.0
-
-        rows = _batch_rows(pdfs, "ts")
-        # vectorize the per-row timestamp conversion ONCE per batch (the
-        # pd.Timestamp(...).value path constructed an object per event);
-        # the session state machine itself is inherently sequential
-        ts_us_arr = (
-            rows["ts"].astype("datetime64[ns]").astype("int64") // 1000
-        ).tolist()
-        val_arr = rows["value"].astype("float64").tolist()
-        for t_us, value in zip(ts_us_arr, val_arr):
-            v = value if value == value else 0.0  # NaN-safe
+        # vectorize the per-row timestamp conversion ONCE per batch; the
+        # session state machine itself is inherently sequential
+        ts_us = rows["ts"].astype("datetime64[ns]").astype("int64") // 1000
+        for t_us, v in zip(ts_us.tolist(), rows["value"].astype("float64").tolist()):
+            v = v if v == v else 0.0  # NaN-safe
             if start is None:
                 start, last, n, vsum = t_us, t_us, 1, v
             elif t_us - last > gap_us:
@@ -190,33 +192,20 @@ def sessionize_with_state(
                 last, n, vsum = t_us, n + 1, vsum + v
             if n >= max_events:
                 out.append((user, start, last, n, vsum, 1))
-                start = last = None
-                n, vsum = 0, 0.0
-
-        if start is not None:
-            state.update((start, last, n, vsum))
-            state.setTimeoutTimestamp(last // 1000 + gap_minutes * 60 * 1000)
-        elif state.exists:
-            state.remove()
-
-        if out:
-            yield _mk_out(out)
+                start, last, n, vsum = None, None, 0, 0.0
+        return (None if start is None else (start, last, n, vsum)), out
 
     src = events.withWatermark("ts", watermark) if events.isStreaming else events
-    return (
-        src.select("user_id", "ts", "value")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _fn,
-            outputStructType=_OUTPUT_SCHEMA,
-            stateStructType=_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
+    return _keyed_fold(
+        src.selectExpr("user_id AS key", "ts", "value"),
+        "ts",
+        [("user_id", "bigint"), ("session_start", "timestamp"),
+         ("session_end", "timestamp"), ("n_events", "bigint"),
+         ("value_sum", "double"), ("closed_by", "bigint")],
+        "session_start bigint, last_ts bigint, n_events bigint, value_sum double",
+        step,
+        expiry=lambda s: s[1] // 1000 + gap_minutes * 60 * 1000,
     )
-
-
-_DEDUP_STATE_SCHEMA = StructType([StructField("first_seen_us", LongType())])
 
 
 def global_dedup_with_state(
@@ -247,67 +236,33 @@ def global_dedup_with_state(
     if normalize:
         content = normalize_text_expr(content)
     keyed = df.select(
-        F.sha2(content, 256).alias("_content_key"),
+        F.sha2(content, 256).alias("key"),
         F.col(id_col).alias("doc_id"),
         F.col(ts_col).alias("_ts"),
     )
 
     if not df.isStreaming:
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("_content_key").orderBy("_ts", "doc_id")
+        w = Window.partitionBy("key").orderBy("_ts", "doc_id")
         return (
             keyed.withColumn("_rn", F.row_number().over(w))
             .where(F.col("_rn") == 1)
             .select("doc_id", F.col("_ts").alias("first_seen_ts"))
         )
 
-    out_schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("first_seen_ts", TimestampType()),
-        ]
-    )
-
-    def _fn(
-        key: Tuple[str], pdfs: Iterable[pd.DataFrame], state: GroupState
-    ) -> Iterable[pd.DataFrame]:
-        if state.exists:
-            # content already emitted in an earlier batch: yield nothing
-            # (an empty all-NA frame would also work but trips pandas
-            # concat dtype warnings in the Arrow serializer)
-            return
-        rows = _batch_rows(pdfs, ["_ts", "doc_id"])
+    def step(_key, rows, state):
+        if state is not None:
+            return state, []  # content already emitted in an earlier batch
         first = rows.iloc[0]
-        t_us = int(pd.Timestamp(first["_ts"]).value // 1000)
-        state.update((t_us,))
-        yield pd.DataFrame(
-            {
-                "doc_id": _i64([int(first["doc_id"])]),
-                "first_seen_ts": np.asarray(
-                    [pd.Timestamp(first["_ts"]).to_datetime64()],
-                    dtype="datetime64[ns]",
-                ),
-            },
-            copy=False,
-        )
+        t_us = pd.Timestamp(first["_ts"]).value // 1000
+        return (t_us,), [(first["doc_id"], t_us)]
 
-    return keyed.groupBy("_content_key").applyInPandasWithState(
-        _fn,
-        outputStructType=out_schema,
-        stateStructType=_DEDUP_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _keyed_fold(
+        keyed,
+        ["_ts", "doc_id"],
+        [("doc_id", "bigint"), ("first_seen_ts", "timestamp")],
+        "first_seen_us bigint",
+        step,
     )
-
-
-_CDC_STATE_SCHEMA = StructType(
-    [
-        StructField("seq", LongType()),
-        StructField("alive", LongType()),
-        StructField("payload", StringType()),
-    ]
-)
 
 
 def cdc_latest_with_state(
@@ -328,9 +283,10 @@ def cdc_latest_with_state(
 
     Emits ``(key, seq, alive, payload)`` rows; the LAST emission per key
     (highest seq) is the current state, and equals the batch
-    ``apply_cdc`` result on the same prefix of the log. Out-of-order
-    arrivals across batches are handled: a batch whose max sequence is
-    behind the state is ignored (no emission).
+    ``apply_cdc`` result on the same prefix of the log, a NULL payload
+    (the usual tombstone) included. Out-of-order arrivals across batches
+    are handled: a batch whose max sequence is behind the state is
+    ignored (no emission).
 
     ``payload_col`` should be a single (pre-serialized — e.g. ``to_json``
     of the tracked columns) string so state stays one fixed-size row per
@@ -346,8 +302,6 @@ def cdc_latest_with_state(
     dels = list(delete_ops)
 
     if not df.isStreaming:
-        from pyspark.sql import Window
-
         w = Window.partitionBy("key").orderBy(F.col("seq").desc())
         return (
             keyed.withColumn("_rn", F.row_number().over(w))
@@ -364,47 +318,22 @@ def cdc_latest_with_state(
             )
         )
 
-    out_schema = StructType(
-        [
-            StructField("key", LongType()),
-            StructField("seq", LongType()),
-            StructField("alive", LongType()),
-            StructField("payload", StringType()),
-        ]
-    )
-
-    def _fn(
-        key: Tuple[int], pdfs: Iterable[pd.DataFrame], state: GroupState
-    ) -> Iterable[pd.DataFrame]:
-        rows = _batch_rows(pdfs, "seq")
+    def step(key, rows, state):
         last = rows.iloc[-1]
-        new_seq = int(last["seq"])
-        if state.exists and state.get[0] >= new_seq:
-            return  # stale/redelivered batch: state already newer
-        alive = 0 if str(last["_op"]) in dels else 1
-        payload = "" if last["payload"] is None else str(last["payload"])
-        state.update((new_seq, alive, payload))
-        yield pd.DataFrame(
-            {
-                "key": _i64([int(key[0])]),
-                "seq": _i64([new_seq]),
-                "alive": _i64([alive]),
-                "payload": [payload],
-            }
-        )
+        seq = int(last["seq"])
+        if state is not None and state[0] >= seq:
+            return state, []  # stale/redelivered batch: state already newer
+        new = (seq, 0 if str(last["_op"]) in dels else 1, last["payload"])
+        return new, [(key, *new)]
 
-    return keyed.groupBy("key").applyInPandasWithState(
-        _fn,
-        outputStructType=out_schema,
-        stateStructType=_CDC_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _keyed_fold(
+        keyed,
+        "seq",
+        [("key", "bigint"), ("seq", "bigint"), ("alive", "bigint"),
+         ("payload", "string")],
+        "seq bigint, alive bigint, payload string",
+        step,
     )
-
-
-_RATE_STATE_SCHEMA = StructType(
-    [StructField("admitted", ArrayType(LongType()))]
-)
 
 
 def rate_limit_with_state(
@@ -446,53 +375,28 @@ def rate_limit_with_state(
         ).cast("long").alias("_e"),
         F.col(order_col).cast("long").alias("o"),
     )
-
-    out_schema = StructType(
-        [
-            StructField("key", LongType()),
-            StructField("o", LongType()),
-            StructField("allowed", LongType()),
-        ]
-    )
-
     win = int(window_seconds)
     cap = int(max_events)
 
-    def _fn(
-        key: Tuple[int], pdfs: Iterable[pd.DataFrame], state: GroupState
-    ) -> Iterable[pd.DataFrame]:
-        admitted = list(state.get[0]) if state.exists else []
-        rows = _batch_rows(pdfs, ["_e", "o"])
-        orders, flags = [], []
+    def step(key, rows, state):
+        admitted = list(state[0]) if state else []
+        out = []
         for e, o in zip(rows["_e"], rows["o"]):
             e = int(e)
             admitted = [a for a in admitted if a > e - win]
             ok = len(admitted) < cap
             if ok:
                 admitted.append(e)
-            orders.append(int(o))
-            flags.append(1 if ok else 0)
-        state.update((admitted,))
-        if orders:
-            yield pd.DataFrame(
-                {
-                    "key": np.full(len(orders), int(key[0]), dtype="int64"),
-                    "o": _i64(orders),
-                    "allowed": _i64(flags),
-                },
-                copy=False,
-            )
+            out.append((key, int(o), int(ok)))
+        return (admitted,), out
 
-    return keyed.groupBy("key").applyInPandasWithState(
-        _fn,
-        outputStructType=out_schema,
-        stateStructType=_RATE_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _keyed_fold(
+        keyed,
+        ["_e", "o"],
+        [("key", "bigint"), ("o", "bigint"), ("allowed", "bigint")],
+        "admitted array<bigint>",
+        step,
     )
-
-
-_EWMA_STATE_SCHEMA = StructType([StructField("last", DoubleType())])
 
 
 def ewma_with_state(
@@ -524,71 +428,31 @@ def ewma_with_state(
     if not df.isStreaming:
         from dbldatagen_spark.functions.timeseries import ewma
 
-        return ewma(
-            df, key_col, ts_col, value_col, alpha=alpha, order_col=order_col
-        ).select(
-            F.col(key_col).cast("long").alias("key"),
-            F.col(order_col).cast("long").alias("o"),
-            F.col(value_col).cast("double").alias("value"),
-            F.col("ewma"),
+        return _series_out(
+            ewma(df, key_col, ts_col, value_col, alpha=alpha, order_col=order_col),
+            key_col, order_col, value_col, "ewma",
         )
-
-    keyed = df.select(
-        F.col(key_col).cast("long").alias("key"),
-        F.col(ts_col).cast("timestamp").alias("_t"),
-        F.col(order_col).cast("long").alias("o"),
-        F.col(value_col).cast("double").alias("v"),
-    )
-
-    out_schema = StructType(
-        [
-            StructField("key", LongType()),
-            StructField("o", LongType()),
-            StructField("value", DoubleType()),
-            StructField("ewma", DoubleType()),
-        ]
-    )
     a = float(alpha)
 
-    def _fn(
-        key: Tuple[int], pdfs: Iterable[pd.DataFrame], state: GroupState
-    ) -> Iterable[pd.DataFrame]:
-        last = float(state.get[0]) if state.exists else None
-        rows = _batch_rows(pdfs, ["_t", "o"])
-        orders, vals, smoothed = [], [], []
+    def step(key, rows, state):
+        last = state[0] if state else None
+        out = []
         for o, v in zip(rows["o"], rows["v"]):
             if pd.isna(v):
                 continue
             v = float(v)
             last = v if last is None else a * v + (1.0 - a) * last
-            orders.append(int(o))
-            vals.append(v)
-            smoothed.append(last)
-        if last is not None:
-            state.update((last,))
-        if orders:
-            yield pd.DataFrame(
-                {
-                    "key": np.full(len(orders), int(key[0]), dtype="int64"),
-                    "o": _i64(orders),
-                    "value": _f64(vals),
-                    "ewma": _f64(smoothed),
-                },
-                copy=False,
-            )
+            out.append((key, int(o), v, last))
+        return (None if last is None else (last,)), out
 
-    return keyed.groupBy("key").applyInPandasWithState(
-        _fn,
-        outputStructType=out_schema,
-        stateStructType=_EWMA_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _keyed_fold(
+        _series(df, key_col, ts_col, order_col,
+                F.col(value_col).cast("double").alias("v")),
+        _SERIES_ORDER,
+        _SERIES_FIELDS + [("ewma", "double")],
+        "last double",
+        step,
     )
-
-
-_CUSUM_STATE_SCHEMA = StructType(
-    [StructField("sp", DoubleType()), StructField("sn", DoubleType())]
-)
 
 
 def cusum_with_state(
@@ -623,52 +487,22 @@ def cusum_with_state(
     if not df.isStreaming:
         from dbldatagen_spark.functions.timeseries import cusum_flags
 
-        return cusum_flags(
-            df,
-            key_col,
-            ts_col,
-            value_col,
-            drift=drift,
-            threshold=threshold,
-            target=target,
-            order_col=order_col,
-            reset_on_alarm=reset_on_alarm,
-        ).select(
-            F.col(key_col).cast("long").alias("key"),
-            F.col(order_col).cast("long").alias("o"),
-            F.col(value_col).cast("double").alias("value"),
-            F.col("cusum_pos"),
-            F.col("cusum_neg"),
-            F.col("alarm"),
+        return _series_out(
+            cusum_flags(
+                df, key_col, ts_col, value_col,
+                drift=drift, threshold=threshold, target=target,
+                order_col=order_col, reset_on_alarm=reset_on_alarm,
+            ),
+            key_col, order_col, value_col, "cusum_pos", "cusum_neg", "alarm",
         )
-
-    keyed = df.select(
-        F.col(key_col).cast("long").alias("key"),
-        F.col(ts_col).cast("timestamp").alias("_t"),
-        F.col(order_col).cast("long").alias("o"),
-        F.col(value_col).cast("double").alias("v"),
-    )
-    out_schema = StructType(
-        [
-            StructField("key", LongType()),
-            StructField("o", LongType()),
-            StructField("value", DoubleType()),
-            StructField("cusum_pos", DoubleType()),
-            StructField("cusum_neg", DoubleType()),
-            StructField("alarm", BooleanType()),
-        ]
-    )
     d = float(drift)
     h = float(threshold)
     mu = float(target)
     reset = bool(reset_on_alarm)
 
-    def _fn(
-        key: Tuple[int], pdfs: Iterable[pd.DataFrame], state: GroupState
-    ) -> Iterable[pd.DataFrame]:
-        sp, sn = state.get if state.exists else (0.0, 0.0)
-        rows = _batch_rows(pdfs, ["_t", "o"])
-        orders, vals, rps, rns, alarms = [], [], [], [], []
+    def step(key, rows, state):
+        sp, sn = state or (0.0, 0.0)
+        out = []
         for o, v in zip(rows["o"], rows["v"]):
             if pd.isna(v):
                 continue
@@ -677,40 +511,18 @@ def cusum_with_state(
             rn = max(0.0, sn + (mu - v - d))
             alarm = rp > h or rn > h
             sp, sn = (0.0, 0.0) if (reset and alarm) else (rp, rn)
-            orders.append(int(o))
-            vals.append(v)
-            rps.append(rp)
-            rns.append(rn)
-            alarms.append(alarm)
-        state.update((float(sp), float(sn)))
-        if orders:
-            yield pd.DataFrame(
-                {
-                    "key": np.full(len(orders), int(key[0]), dtype="int64"),
-                    "o": _i64(orders),
-                    "value": _f64(vals),
-                    "cusum_pos": _f64(rps),
-                    "cusum_neg": _f64(rns),
-                    "alarm": np.asarray(alarms, dtype=bool),
-                },
-                copy=False,
-            )
+            out.append((key, int(o), v, rp, rn, alarm))
+        return (float(sp), float(sn)), out
 
-    return keyed.groupBy("key").applyInPandasWithState(
-        _fn,
-        outputStructType=out_schema,
-        stateStructType=_CUSUM_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _keyed_fold(
+        _series(df, key_col, ts_col, order_col,
+                F.col(value_col).cast("double").alias("v")),
+        _SERIES_ORDER,
+        _SERIES_FIELDS + [("cusum_pos", "double"), ("cusum_neg", "double"),
+                          ("alarm", "boolean")],
+        "sp double, sn double",
+        step,
     )
-
-
-_TRANSITION_STATE_SCHEMA = StructType(
-    [
-        StructField("last", LongType()),
-        StructField("counts", ArrayType(LongType())),
-    ]
-)
 
 
 def transition_counts_with_state(
@@ -771,58 +583,27 @@ def transition_counts_with_state(
                 F.col("behavior"), lambda x: F.round(x * n).cast("long")
             ).alias("counts"),
         )
-
-    keyed = df.select(
-        F.col(key_col).cast("long").alias("key"),
-        F.col(ts_col).cast("timestamp").alias("_t"),
-        F.col(order_col).cast("long").alias("o"),
-        F.col(state_col).cast("string").alias("s"),
-    )
-    out_schema = StructType(
-        [
-            StructField("key", LongType()),
-            StructField("n_transitions", LongType()),
-            StructField("counts", ArrayType(LongType())),
-        ]
-    )
     idx = {s: i for i, s in enumerate(states)}
 
-    def _fn(
-        key: Tuple[int], pdfs: Iterable[pd.DataFrame], state: GroupState
-    ) -> Iterable[pd.DataFrame]:
-        if state.exists:
-            last, counts = int(state.get[0]), list(state.get[1])
-        else:
-            last, counts = -1, [0] * (k * k)
-        rows = _batch_rows(pdfs, ["_t", "o"])
+    def step(key, rows, state):
+        last, counts = (state[0], list(state[1])) if state else (-1, [0] * (k * k))
         for s in rows["s"]:
             cur = idx.get(s, -1)
             if last >= 0 and cur >= 0:
                 counts[last * k + cur] += 1
             last = cur  # out-of-vocab sets -1: breaks the chain, as batch
-        state.update((last, counts))
         n = sum(counts)
-        if n:
-            yield pd.DataFrame(
-                {
-                    "key": _i64([int(key[0])]),
-                    "n_transitions": _i64([n]),
-                    "counts": [counts],
-                }
-            )
+        return (last, counts), ([(key, n, counts)] if n else [])
 
-    return keyed.groupBy("key").applyInPandasWithState(
-        _fn,
-        outputStructType=out_schema,
-        stateStructType=_TRANSITION_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _keyed_fold(
+        _series(df, key_col, ts_col, order_col,
+                F.col(state_col).cast("string").alias("s")),
+        _SERIES_ORDER,
+        [("key", "bigint"), ("n_transitions", "bigint"),
+         ("counts", "array<bigint>")],
+        "last bigint, counts array<bigint>",
+        step,
     )
-
-
-_HOLT_STATE_SCHEMA = StructType(
-    [StructField("l", DoubleType()), StructField("b", DoubleType())]
-)
 
 
 def holt_with_state(
@@ -855,78 +636,37 @@ def holt_with_state(
     if not df.isStreaming:
         from dbldatagen_spark.functions.timeseries import holt_linear
 
-        return holt_linear(
-            df, key_col, ts_col, value_col,
-            alpha=alpha, beta=beta, order_col=order_col,
-        ).select(
-            F.col(key_col).cast("long").alias("key"),
-            F.col(order_col).cast("long").alias("o"),
-            F.col(value_col).cast("double").alias("value"),
-            F.col("level"),
-            F.col("trend"),
+        return _series_out(
+            holt_linear(
+                df, key_col, ts_col, value_col,
+                alpha=alpha, beta=beta, order_col=order_col,
+            ),
+            key_col, order_col, value_col, "level", "trend",
         )
-
-    keyed = df.select(
-        F.col(key_col).cast("long").alias("key"),
-        F.col(ts_col).cast("timestamp").alias("_t"),
-        F.col(order_col).cast("long").alias("o"),
-        F.col(value_col).cast("double").alias("v"),
-    )
-
-    out_schema = StructType(
-        [
-            StructField("key", LongType()),
-            StructField("o", LongType()),
-            StructField("value", DoubleType()),
-            StructField("level", DoubleType()),
-            StructField("trend", DoubleType()),
-        ]
-    )
     a = float(alpha)
     bt = float(beta)
 
-    def _fn(
-        key: Tuple[int], pdfs: Iterable[pd.DataFrame], state: GroupState
-    ) -> Iterable[pd.DataFrame]:
-        if state.exists:
-            lvl, trd = float(state.get[0]), float(state.get[1])
-            have = True
-        else:
-            lvl, trd, have = 0.0, 0.0, False
-        rows = _batch_rows(pdfs, ["_t", "o"])
-        orders, vals, levels, trends = [], [], [], []
+    def step(key, rows, state):
+        lvl, trd = state or (None, 0.0)
+        out = []
         for o, v in zip(rows["o"], rows["v"]):
             if pd.isna(v):
                 continue
             v = float(v)
-            if not have:
-                lvl, trd, have = v, 0.0, True
+            if lvl is None:
+                lvl, trd = v, 0.0
             else:
                 l_new = a * v + (1.0 - a) * (lvl + trd)
                 trd = bt * (l_new - lvl) + (1.0 - bt) * trd
                 lvl = l_new
-            orders.append(int(o))
-            vals.append(v)
-            levels.append(lvl)
-            trends.append(trd)
-        if have:
-            state.update((lvl, trd))
-        if orders:
-            yield pd.DataFrame(
-                {
-                    "key": np.full(len(orders), int(key[0]), dtype="int64"),
-                    "o": _i64(orders),
-                    "value": _f64(vals),
-                    "level": _f64(levels),
-                    "trend": _f64(trends),
-                },
-                copy=False,
-            )
+            out.append((key, int(o), v, lvl, trd))
+        return (None if lvl is None else (lvl, trd)), out
 
-    return keyed.groupBy("key").applyInPandasWithState(
-        _fn,
-        outputStructType=out_schema,
-        stateStructType=_HOLT_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _keyed_fold(
+        _series(df, key_col, ts_col, order_col,
+                F.col(value_col).cast("double").alias("v")),
+        _SERIES_ORDER,
+        _SERIES_FIELDS + [("level", "double"), ("trend", "double")],
+        "l double, b double",
+        step,
     )

@@ -38,11 +38,13 @@ from __future__ import annotations
 
 import hashlib
 import math
+import os
 import sys
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",

@@ -1070,3 +1070,147 @@ def test_hll_sink_merge_equals_whole_input(spark, events, tmp_path):
     parts = {p.name for p in pathlib.Path(tmp_path / "state").iterdir()
              if p.is_dir()}
     assert {"batch_id=0", "batch_id=1"} <= parts
+
+
+def _ordered_stream(spark, tmp_path, frames):
+    """One parquet file per frame, mtimes in list order, read back as a
+    stream of one micro-batch per file."""
+    import glob
+    import os
+    import time
+
+    src = str(tmp_path / "src")
+    now = time.time()
+    seen: list = []
+    for i, frame in enumerate(frames):
+        frame.coalesce(1).write.mode("append").parquet(src)
+        for f in sorted(glob.glob(f"{src}/*.parquet")):
+            if f not in seen:
+                os.utime(f, (now + 1000 * i, now + 1000 * i))
+                seen.append(f)
+    return (
+        spark.readStream.schema(frames[0].schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+    )
+
+
+def _drain(spark, df, tmp_path):
+    """Run ``df`` to a parquet sink with availableNow; return the output."""
+    q = (
+        df.writeStream.format("parquet")
+        .option("path", str(tmp_path / "out"))
+        .option("checkpointLocation", str(tmp_path / "ck"))
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    return spark.read.parquet(str(tmp_path / "out"))
+
+
+def test_cdc_latest_with_state_stream_keeps_null_payload(spark, tmp_path):
+    """A tombstone usually has no payload: the stream must emit NULL, as
+    the batch twin does, not an empty string."""
+    from dbldatagen_spark.streaming.stateful import cdc_latest_with_state
+
+    schema = "k long, seq long, op string, p string"
+    first = spark.createDataFrame([(1, 1, "I", "a"), (2, 3, "I", "c")], schema)
+    second = spark.createDataFrame(
+        [(1, 2, "U", "b"), (2, 4, "D", None), (3, 5, "I", None)], schema
+    )
+    kw = dict(op_col="op", payload_col="p")
+    batch = {
+        r.key: (r.seq, r.alive, r.payload)
+        for r in cdc_latest_with_state(first.union(second), "k", "seq", **kw)
+        .collect()
+    }
+    assert batch == {1: (2, 1, "b"), 2: (4, 0, None), 3: (5, 1, None)}
+    stream = _ordered_stream(spark, tmp_path, [first, second])
+    emissions = _drain(
+        spark, cdc_latest_with_state(stream, "k", "seq", **kw), tmp_path
+    )
+    last = {}
+    for r in emissions.orderBy("seq").collect():
+        last[r.key] = (r.seq, r.alive, r.payload)
+    assert last == batch
+
+
+def test_sessionize_with_state_event_time_timeout(spark, tmp_path):
+    """A later micro-batch moves the watermark past user 1's open session
+    (last event + gap), so it closes by timeout (closed_by=2); user 2's
+    session is still open and emits nothing."""
+    import datetime as dt
+
+    t0 = dt.datetime(2024, 1, 1)
+    schema = "user_id long, ts timestamp, value double"
+    first = spark.createDataFrame(
+        [(1, t0 + dt.timedelta(minutes=i), 1.0) for i in range(3)], schema
+    )
+    second = spark.createDataFrame(
+        [(2, t0 + dt.timedelta(hours=5, minutes=i), 1.0) for i in range(2)],
+        schema,
+    )
+    from dbldatagen_spark.streaming.stateful import sessionize_with_state
+
+    stream = _ordered_stream(spark, tmp_path, [first, second])
+    got = _drain(
+        spark, sessionize_with_state(stream, gap_minutes=30), tmp_path
+    ).collect()
+    assert [tuple(r) for r in got] == [
+        (1, t0, t0 + dt.timedelta(minutes=2), 3, 3.0, 2)
+    ]
+
+
+# Streaming output schemas of the eight keyed-state operators (all fields
+# nullable, array elements too), as recorded before the operators shared
+# one kernel.
+_STATEFUL_SCHEMAS = {
+    "sessionize": "struct<user_id:bigint,session_start:timestamp,"
+    "session_end:timestamp,n_events:bigint,value_sum:double,closed_by:bigint>",
+    "global_dedup": "struct<doc_id:bigint,first_seen_ts:timestamp>",
+    "cdc": "struct<key:bigint,seq:bigint,alive:bigint,payload:string>",
+    "rate_limit": "struct<key:bigint,o:bigint,allowed:bigint>",
+    "ewma": "struct<key:bigint,o:bigint,value:double,ewma:double>",
+    "cusum": "struct<key:bigint,o:bigint,value:double,cusum_pos:double,"
+    "cusum_neg:double,alarm:boolean>",
+    "transition": "struct<key:bigint,n_transitions:bigint,counts:array<bigint>>",
+    "holt": "struct<key:bigint,o:bigint,value:double,level:double,trend:double>",
+}
+
+
+def test_stateful_stream_output_schemas(spark):
+    from pyspark.sql.types import ArrayType
+
+    from dbldatagen_spark.streaming import stateful as st
+
+    s = spark.readStream.format("rate").load().selectExpr(
+        "value AS user_id", "timestamp AS ts", "CAST(value AS double) AS value",
+        "value AS event_id", "CAST(value AS string) AS event_type",
+        "CAST(value AS string) AS text", "value AS doc_id", "value AS seq",
+        "'U' AS op", "CAST(value AS string) AS payload",
+    )
+    series = dict(order_col="event_id")
+    outs = {
+        "sessionize": st.sessionize_with_state(s),
+        "global_dedup": st.global_dedup_with_state(s, "doc_id", "text"),
+        "cdc": st.cdc_latest_with_state(s, "user_id", "seq"),
+        "rate_limit": st.rate_limit_with_state(
+            s, "user_id", "ts", max_events=3, window_seconds=10, **series),
+        "ewma": st.ewma_with_state(
+            s, "user_id", "ts", "value", alpha=0.5, **series),
+        "cusum": st.cusum_with_state(
+            s, "user_id", "ts", "value", drift=0.1, threshold=1.0,
+            target=0.0, **series),
+        "transition": st.transition_counts_with_state(
+            s, "user_id", "ts", "event_type", states=["a", "b"], **series),
+        "holt": st.holt_with_state(
+            s, "user_id", "ts", "value", alpha=0.5, beta=0.5, **series),
+    }
+    for name, df in outs.items():
+        assert df.isStreaming, name
+        assert df.schema.simpleString() == _STATEFUL_SCHEMAS[name], name
+        for f in df.schema.fields:
+            assert f.nullable, (name, f.name)
+            if isinstance(f.dataType, ArrayType):
+                assert f.dataType.containsNull, (name, f.name)
