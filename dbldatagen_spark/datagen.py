@@ -1295,9 +1295,15 @@ class DataGenerator:
             # data_generator.py:1043-1044 warns and overrides) replaces the
             # prior column instead of producing an ambiguous duplicate. The
             # new expression is still computed against the pre-select frame,
-            # so an overriding `id` spec draws from the raw seed.
+            # so an overriding `id` spec draws from the raw seed. A level
+            # that replaces nothing keeps `*`: py4j sends a list one item
+            # per command, so naming every carried column per level would
+            # make a chain of levels quadratic in commands.
             keep = [n for n in current if n not in added]
-            df = level.apply(df, [quote(n) for n in keep])
+            if len(keep) == len(current):
+                df = level.apply(df)
+            else:
+                df = level.apply(df, [quote(n) for n in keep])
             current = keep + added
         # constraints: transforms then one fused where
         for c in self._constraints:

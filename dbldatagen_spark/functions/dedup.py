@@ -31,6 +31,7 @@ from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from dbldatagen_spark.functions import _materialize
 from dbldatagen_spark.functions._parallel import ensure_parallelism
 
 # Fixed 64-bit odd constant: the i-th minhash permutation is xxhash64
@@ -186,8 +187,9 @@ def _blocked_posting(
     what the cut then reads back — without it the full posting shuffle
     would run twice, once for the estimate and once for the cut.  On
     the guard's raise path the frame is unpersisted before the error
-    propagates; on the healthy path it stays cached for the caller's
-    pair job and is then LRU-evictable (pass
+    propagates; on the healthy path the returned plan reads it, and
+    the cache entry stays until ``spark.catalog.clearCache()`` —
+    dropping the result does not free it (pass
     ``max_candidate_pairs=None`` to skip both the eager job and the
     cache).  Returns the blocking posting frame (cut applied when
     requested).
@@ -1312,69 +1314,13 @@ def duplicate_components(
     materialized, and the persisted edges on every path; only the
     returned frame's checkpoint stays.
 
-    Checkpointing: the default ``localCheckpoint`` writes to executor
-    block storage — fast, but lost if an executor dies (a real risk on
-    preemptible/spot fleets). Pass ``checkpoint_dir`` (an HDFS/object-store
-    path) to use *reliable* checkpointing for long-running production runs;
-    the per-iteration write cost buys restartable lineage. The session's
-    previous checkpoint dir is restored on return; if the session had
-    NONE, the override is cleared again (a JVM-level
-    ``setCheckpointDir(null)`` — the Scala setter wraps its argument in
-    ``Option``, so null un-sets it; the Python wrapper rejects ``None``,
-    which is why the raw JVM handle is used). Either way the call leaves
-    no session-level side effect. Per-iteration checkpoint files are reclaimed by
-    the ContextCleaner when ``spark.cleaner.referenceTracking
-    .cleanCheckpoints=true``; otherwise they accumulate under
-    ``checkpoint_dir`` and the caller owns deleting them.
+    Checkpointing: ``checkpoint_dir=None`` takes ``localCheckpoint``s;
+    a path takes reliable checkpoints under it for the duration of the
+    call, scoped as :func:`~dbldatagen_spark.functions._materialize
+    .checkpoint_dir` describes (no session-level side effect remains).
     """
-    spark = pairs.sparkSession
-
-    prev_checkpoint_dir: Optional[str] = None
-    had_prev_checkpoint_dir = False
-    if checkpoint_dir is not None:
-        sc = spark.sparkContext
-        prev_read_ok = True
-        try:
-            prev = sc._jsc.sc().getCheckpointDir()
-            had_prev_checkpoint_dir = prev.isDefined()
-            prev_checkpoint_dir = prev.get() if prev.isDefined() else None
-        except Exception:
-            # could not READ the prior state: restore nothing on exit
-            # (clearing would destroy a dir the session may have had)
-            prev_read_ok = False
-            prev_checkpoint_dir = None
-        sc.setCheckpointDir(checkpoint_dir)
-
-    try:
-        return _propagate_components(
-            pairs, id_a, id_b, max_iterations, checkpoint_dir is not None
-        )
-    finally:
-        if checkpoint_dir is not None:
-            if had_prev_checkpoint_dir and prev_checkpoint_dir is not None:
-                if prev_checkpoint_dir != checkpoint_dir:
-                    spark.sparkContext.setCheckpointDir(prev_checkpoint_dir)
-            elif prev_read_ok and not had_prev_checkpoint_dir:
-                # the session had NO checkpoint dir before this call;
-                # clear the override so no session-level side effect
-                # survives (Scala's setter wraps its argument in
-                # Option, so a JVM-level null un-sets it)
-                try:
-                    spark.sparkContext._jsc.sc().setCheckpointDir(None)
-                except Exception:
-                    pass
-
-
-def _checkpoint(df: DataFrame, reliable: bool) -> DataFrame:
-    return df.checkpoint() if reliable else df.localCheckpoint()
-
-
-def _release_checkpoint(df: DataFrame) -> None:
-    """Drop the blocks of an eager ``localCheckpoint`` (a no-op for a
-    reliable checkpoint, whose RDD is not persisted).
-    ``DataFrame.unpersist`` cannot: the blocks belong to the RDD under
-    the frame's ``LogicalRDD``, not to the cache manager."""
-    df._jdf.queryExecution().logical().rdd().unpersist(False)
+    with _materialize.checkpoint_dir(pairs.sparkSession, checkpoint_dir) as reliable:
+        return _propagate_components(pairs, id_a, id_b, max_iterations, reliable)
 
 
 def _propagate_components(
@@ -1384,8 +1330,7 @@ def _propagate_components(
     max_iterations: int,
     reliable: bool,
 ) -> DataFrame:
-    """Min-label propagation loop of :func:`duplicate_components` (split
-    out so the checkpoint-dir save/restore wraps all eager checkpoints)."""
+    """Min-label propagation loop of :func:`duplicate_components`."""
     edges = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
     # no distinct: a duplicate edge cannot change a min
     edges = edges.union(
@@ -1394,7 +1339,7 @@ def _propagate_components(
     labels = None
     try:
         # the first neighbor-min hop doubles as the vertex scan
-        labels = _checkpoint(
+        labels = _materialize.checkpoint(
             edges.groupBy("src")
             .agg(F.min("dst").alias("_nbr_min"))
             .select(
@@ -1430,8 +1375,8 @@ def _propagate_components(
                 F.least("x.component", "y.component").alias("component"),
                 F.col("x._prev").alias("_prev"),
             )
-            jumped = _checkpoint(jumped, reliable)
-            _release_checkpoint(labels)
+            jumped = _materialize.checkpoint(jumped, reliable)
+            _materialize.release(labels)
             labels = jumped
             # the convergence probe is a limit-1 scan of the blocks the
             # checkpoint just materialized
@@ -1441,7 +1386,7 @@ def _propagate_components(
         return labels.select("vertex", "component")
     except BaseException:
         if labels is not None:
-            _release_checkpoint(labels)
+            _materialize.release(labels)
         raise
     finally:
         edges.unpersist()
@@ -1554,10 +1499,11 @@ def cross_corpus_near_duplicates(
 
     Caching: with ``verify=True`` each side's shingle-hash frame feeds both
     the band join and the exact-Jaccard verification join, so it is
-    ``persist()``-ed. The cached blocks live as long as the returned plan
-    references them — once the caller drops the result, Spark's
-    ``ContextCleaner`` (reference tracking is on by default) unpersists
-    them. With ``verify=False`` each side is read once and nothing is
+    ``persist()``-ed, and the returned plan reads both cache entries.
+    They outlive the result: the session's cache manager holds them,
+    so dropping the result does not free them (the ``ContextCleaner``
+    never sees them unreferenced); ``spark.catalog.clearCache()`` does.
+    With ``verify=False`` each side is read once and nothing is
     cached.
     """
     if num_hashes % bands != 0:

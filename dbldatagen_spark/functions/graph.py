@@ -14,6 +14,8 @@ from typing import Optional
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from dbldatagen_spark.functions import _materialize
+
 
 def pagerank(
     edges: DataFrame,
@@ -74,11 +76,13 @@ def pagerank(
     map-side-combined integer sum aggregates arriving shares per
     destination — longs move, never payloads; a hub's fan-out is
     map-side row emission and its fan-in partially aggregates, so hot
-    nodes never buffer.  Each iteration's frame is checkpointed
-    (``localCheckpoint`` by default; pass ``checkpoint_dir`` for
-    reliable checkpointing on preemptible fleets — the
-    :func:`~dbldatagen_spark.functions.dedup.duplicate_components`
-    contract) so plan depth stays constant across iterations.
+    nodes never buffer.  Each iteration's frame is checkpointed so
+    plan depth stays constant across iterations: ``localCheckpoint``
+    by default, reliable under ``checkpoint_dir`` as
+    :func:`~dbldatagen_spark.functions._materialize.checkpoint_dir`
+    scopes it.  A superseded round is released once the next is
+    materialized, and the edge and node checkpoints on return; only
+    the returned frame's checkpoint stays.
     Driver cost: one count job up front plus one materializing action
     per iteration.
 
@@ -128,159 +132,137 @@ def pagerank(
             .groupBy("_s", "_d")
             .agg(F.sum("_w").alias("_w"))
         )
-    spark = edges.sparkSession
-    prev_dir: Optional[str] = None
-    had_prev_dir = False
-    if checkpoint_dir is not None:
-        sc = spark.sparkContext
-        prev_read_ok = True
+    # eager checkpoints the returned frame does not read, released when
+    # the call ends, exceptions included
+    held = []
+    with _materialize.checkpoint_dir(edges.sparkSession, checkpoint_dir) as reliable:
         try:
-            prev = sc._jsc.sc().getCheckpointDir()
-            had_prev_dir = prev.isDefined()
-            prev_dir = prev.get() if prev.isDefined() else None
-        except Exception:
-            # could not READ the prior state: restore nothing on exit
-            # (clearing would destroy a dir the session may have had)
-            prev_read_ok = False
-            prev_dir = None
-        sc.setCheckpointDir(checkpoint_dir)
-
-        def _checkpoint(df: DataFrame) -> DataFrame:
-            return df.checkpoint()
-    else:
-
-        def _checkpoint(df: DataFrame) -> DataFrame:
-            return df.localCheckpoint()
-
-    try:
-        # checkpoint e FIRST and derive nodes from the truncated
-        # lineage: defining nodes from the raw plan would re-execute
-        # the entire upstream (e.g. host_authority's corpus scan)
-        # twice more during nodes' own materialization, and the
-        # duplicated expression trees in the fused stages can push
-        # generated methods past the JVM's 64 KB codegen limit
-        e = _checkpoint(e)
-        nodes = _checkpoint(
-            e.select(F.col("_s").alias("node"))
-            .unionByName(e.select(F.col("_d").alias("node")))
-            .distinct()
-        )
-        n = nodes.count()
-        if n == 0:
-            return nodes.select(
-                F.col("node"),
-                F.lit(0).cast("long").alias("rank_units"),
-                F.lit(0.0).alias("rank"),
+            # checkpoint e FIRST and derive nodes from the truncated
+            # lineage: defining nodes from the raw plan would re-execute
+            # the entire upstream (e.g. host_authority's corpus scan)
+            # twice more during nodes' own materialization, and the
+            # duplicated expression trees in the fused stages can push
+            # generated methods past the JVM's 64 KB codegen limit
+            e = _materialize.checkpoint(e, reliable)
+            held.append(e)
+            nodes = _materialize.checkpoint(
+                e.select(F.col("_s").alias("node"))
+                .unionByName(e.select(F.col("_d").alias("node")))
+                .distinct(),
+                reliable,
             )
-        init_u = scale // n
-        base = (init_u * (1_000_000 - damping_ppm)) // 1_000_000
-        if weight_col is None:
-            outdeg = e.groupBy("_s").agg(
-                F.count(F.lit(1)).cast("long").alias("_deg")
-            )
-        else:
-            outdeg = e.groupBy("_s").agg(
-                F.sum("_w").cast("long").alias("_deg")
-            )
-            # the split share formula's second term is
-            # (damped mod W) * w with (damped mod W) < W, so int64
-            # safety needs max(W) * max(w) < 2^62.  The one-row
-            # max aggregate rides iteration 1's own job as a lazy
-            # broadcast-crossJoin (r16; was an eager join+aggregate
-            # over the full edge set at construction), raising via
-            # raise_error with the same conservative firing
-            # condition, int64-safely rearranged: mw * w >= 2^62
-            # <=> mw > (2^62 - 1) div w (w >= 1 — the edge filter
-            # already dropped non-positive weights; NULL mw means an
-            # empty edge set, where the WHEN falls through exactly
-            # like the old `mw is None` skip)
-            mxf = e.join(outdeg, "_s").agg(
-                F.max("_deg").alias("_mw"), F.max("_w").alias("_xw")
-            )
-            headroom_msg = F.concat_ws(
-                "",
-                F.lit("pagerank: max out-weight "),
-                F.col("_mw").cast("string"),
-                F.lit(" x max edge weight "),
-                F.col("_xw").cast("string"),
-                F.lit(
-                    " leaves no int64 headroom for the weighted share"
-                    " — divide the weights by a common factor (ranks"
-                    " depend only on weight RATIOS per source) or"
-                    " drop weight_col"
-                ),
-            )
-        ranks = nodes.select("node", F.lit(init_u).cast("long").alias("_u"))
-        if weight_col is None:
-            share_expr = F.expr(
-                f"(_u * {damping_ppm}) div 1000000 div _deg"
-            )
-            share_cols = [F.col("_s")]
-        else:
-            share_expr = F.expr(
-                f"(_u * {damping_ppm}) div 1000000"
-            )
-            share_cols = [F.col("_s"), F.col("_deg")]
-        for it in range(iterations):
-            damped_per_src = ranks.join(
-                outdeg, ranks["node"] == outdeg["_s"]
-            ).select(*share_cols, share_expr.alias("_share"))
+            held.append(nodes)
+            n = nodes.count()
+            if n == 0:
+                held.pop()  # the result reads nodes
+                return nodes.select(
+                    F.col("node"),
+                    F.lit(0).cast("long").alias("rank_units"),
+                    F.lit(0.0).alias("rank"),
+                )
+            init_u = scale // n
+            base = (init_u * (1_000_000 - damping_ppm)) // 1_000_000
             if weight_col is None:
-                contribs = damped_per_src.join(e, "_s").select(
-                    F.col("_d"), F.col("_share")
+                outdeg = e.groupBy("_s").agg(
+                    F.count(F.lit(1)).cast("long").alias("_deg")
                 )
             else:
-                # exact floor(damped * w / W) without int128:
-                # (damped div W) * w + ((damped mod W) * w) div W
-                split_share = F.expr(
-                    "(_share div _deg) * _w"
-                    " + ((_share % _deg) * _w) div _deg"
+                outdeg = e.groupBy("_s").agg(
+                    F.sum("_w").cast("long").alias("_deg")
                 )
-                joined = damped_per_src.join(e, "_s")
-                if it == 0:
-                    # the headroom guard fires once, from iteration
-                    # 1's own materializing action (the loop is eager
-                    # per-iteration via the checkpoint), instead of a
-                    # dedicated pre-pass job
-                    joined = joined.crossJoin(F.broadcast(mxf))
-                    split_share = F.when(
-                        F.col("_mw")
-                        > F.expr(f"{2**62 - 1}L div _xw"),
-                        F.raise_error(headroom_msg).cast("long"),
-                    ).otherwise(split_share)
-                contribs = joined.select(
-                    F.col("_d"), split_share.alias("_share")
+                # the split share formula's second term is
+                # (damped mod W) * w with (damped mod W) < W, so int64
+                # safety needs max(W) * max(w) < 2^62.  The one-row
+                # max aggregate rides iteration 1's own job as a lazy
+                # broadcast-crossJoin (r16; was an eager join+aggregate
+                # over the full edge set at construction), raising via
+                # raise_error with the same conservative firing
+                # condition, int64-safely rearranged: mw * w >= 2^62
+                # <=> mw > (2^62 - 1) div w (w >= 1 — the edge filter
+                # already dropped non-positive weights; NULL mw means an
+                # empty edge set, where the WHEN falls through exactly
+                # like the old `mw is None` skip)
+                mxf = e.join(outdeg, "_s").agg(
+                    F.max("_deg").alias("_mw"), F.max("_w").alias("_xw")
                 )
-            shares = contribs.groupBy(F.col("_d").alias("node")).agg(
-                F.sum("_share").cast("long").alias("_in")
+                headroom_msg = F.concat_ws(
+                    "",
+                    F.lit("pagerank: max out-weight "),
+                    F.col("_mw").cast("string"),
+                    F.lit(" x max edge weight "),
+                    F.col("_xw").cast("string"),
+                    F.lit(
+                        " leaves no int64 headroom for the weighted share"
+                        " — divide the weights by a common factor (ranks"
+                        " depend only on weight RATIOS per source) or"
+                        " drop weight_col"
+                    ),
+                )
+            ranks = nodes.select("node", F.lit(init_u).cast("long").alias("_u"))
+            if weight_col is None:
+                share_expr = F.expr(
+                    f"(_u * {damping_ppm}) div 1000000 div _deg"
+                )
+                share_cols = [F.col("_s")]
+            else:
+                share_expr = F.expr(
+                    f"(_u * {damping_ppm}) div 1000000"
+                )
+                share_cols = [F.col("_s"), F.col("_deg")]
+            for it in range(iterations):
+                damped_per_src = ranks.join(
+                    outdeg, ranks["node"] == outdeg["_s"]
+                ).select(*share_cols, share_expr.alias("_share"))
+                if weight_col is None:
+                    contribs = damped_per_src.join(e, "_s").select(
+                        F.col("_d"), F.col("_share")
+                    )
+                else:
+                    # exact floor(damped * w / W) without int128:
+                    # (damped div W) * w + ((damped mod W) * w) div W
+                    split_share = F.expr(
+                        "(_share div _deg) * _w"
+                        " + ((_share % _deg) * _w) div _deg"
+                    )
+                    joined = damped_per_src.join(e, "_s")
+                    if it == 0:
+                        # the headroom guard fires once, from iteration
+                        # 1's own materializing action (the loop is eager
+                        # per-iteration via the checkpoint), instead of a
+                        # dedicated pre-pass job
+                        joined = joined.crossJoin(F.broadcast(mxf))
+                        split_share = F.when(
+                            F.col("_mw")
+                            > F.expr(f"{2**62 - 1}L div _xw"),
+                            F.raise_error(headroom_msg).cast("long"),
+                        ).otherwise(split_share)
+                    contribs = joined.select(
+                        F.col("_d"), split_share.alias("_share")
+                    )
+                shares = contribs.groupBy(F.col("_d").alias("node")).agg(
+                    F.sum("_share").cast("long").alias("_in")
+                )
+                ranks = _materialize.checkpoint(
+                    nodes.join(shares, "node", "left").select(
+                        "node",
+                        (
+                            F.lit(base) + F.coalesce(F.col("_in"), F.lit(0))
+                        ).cast("long").alias("_u"),
+                    ),
+                    reliable,
+                )
+                held.append(ranks)
+                if it:  # this round is materialized: drop the one before
+                    _materialize.release(held.pop(-2))
+            held.pop()  # the result reads the last round
+            return ranks.select(
+                "node",
+                F.col("_u").alias("rank_units"),
+                (F.col("_u").cast("double") / F.lit(float(scale))).alias("rank"),
             )
-            ranks = _checkpoint(
-                nodes.join(shares, "node", "left").select(
-                    "node",
-                    (
-                        F.lit(base) + F.coalesce(F.col("_in"), F.lit(0))
-                    ).cast("long").alias("_u"),
-                )
-            )
-        return ranks.select(
-            "node",
-            F.col("_u").alias("rank_units"),
-            (F.col("_u").cast("double") / F.lit(float(scale))).alias("rank"),
-        )
-    finally:
-        if checkpoint_dir is not None:
-            if had_prev_dir and prev_dir is not None:
-                spark.sparkContext.setCheckpointDir(prev_dir)
-            elif prev_read_ok and not had_prev_dir:
-                # the session had NO checkpoint dir before this call;
-                # leaving ours set would be a lasting session-level
-                # side effect.  The Scala setter wraps its argument in
-                # Option(...), so a JVM-level null clears it (the
-                # Python wrapper rejects None, hence _jsc).
-                try:
-                    spark.sparkContext._jsc.sc().setCheckpointDir(None)
-                except Exception:
-                    pass
+        finally:
+            for df in held:
+                _materialize.release(df)
 
 
 def host_authority(

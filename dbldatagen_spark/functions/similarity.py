@@ -1510,11 +1510,10 @@ def ivfpq_tune_nprobe(
         # probed-cells-only ivfpq_topk job per (query, n_probe) pair.
         # `exact` (n_queries x k ids, tiny) feeds BOTH the driver-side
         # collect below and the returned frame's with_cell branch, so
-        # it stays persisted for the returned frame's lifetime —
-        # unpersisting before the caller's action would recompute the
-        # exact-top-k corpus scan (MEMORY_AND_DISK default; LRU
-        # eviction reclaims it, lineage recovers it — the
-        # _blocked_posting precedent in dedup.py)
+        # it stays persisted — unpersisting before the caller's action
+        # would recompute the exact-top-k corpus scan.  The cache entry
+        # outlives the returned frame until spark.catalog.clearCache()
+        # (the _blocked_posting precedent in dedup.py)
         exact = exact.persist()
         ex_ids: dict = {}
         for r in exact.collect():

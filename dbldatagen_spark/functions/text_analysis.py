@@ -10,6 +10,7 @@ from typing import Dict, List, Optional, Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from dbldatagen_spark.functions import _materialize
 from dbldatagen_spark.functions._parallel import ensure_parallelism
 
 # Compact stopword lists for the n-gram/stopword-hit language heuristic.
@@ -1316,66 +1317,74 @@ def bpe_train(
 
     ``checkpoint_every`` bounds lineage growth: the symbols DataFrame
     is ``localCheckpoint``-ed every N merges so the plan doesn't
-    deepen linearly with merges."""
+    deepen linearly with merges.  Each checkpoint is released once the
+    next is taken, and the last one on return: the merges are plain
+    tuples, so no block outlives the call."""
     if num_merges < 1:
         raise ValueError(f"num_merges must be >= 1, got {num_merges}")
     chars = F.transform(
         F.sequence(F.lit(1), F.length("word")),
         lambda i: F.col("word").substr(i, F.lit(1)),
     )
-    state = (
+    # ckpt: the checkpoint the current state reads
+    state = ckpt = (
         _bpe_words(df, text_col, max_word_len)
         .select(chars.alias("syms"), "word_n")
         .localCheckpoint()
     )
     merges: List[tuple] = []
-    for step in range(num_merges):
-        # single-symbol words have no pairs; sequence(1, 0) would DESCEND
-        # ([1, 0]) and index past the array, so filter them first
-        pairs = state.where(F.size("syms") > 1).select(
-            F.explode(
-                F.transform(
-                    F.sequence(F.lit(1), F.size("syms") - 1),
-                    lambda i: F.struct(
-                        F.element_at("syms", i).alias("l"),
-                        F.element_at("syms", i + F.lit(1)).alias("r"),
-                    ),
-                )
-            ).alias("p"),
-            "word_n",
-        )
-        best = (
-            pairs.groupBy(
-                F.col("p").getField("l").alias("l"),
-                F.col("p").getField("r").alias("r"),
+    try:
+        for step in range(num_merges):
+            # single-symbol words have no pairs; sequence(1, 0) would DESCEND
+            # ([1, 0]) and index past the array, so filter them first
+            pairs = state.where(F.size("syms") > 1).select(
+                F.explode(
+                    F.transform(
+                        F.sequence(F.lit(1), F.size("syms") - 1),
+                        lambda i: F.struct(
+                            F.element_at("syms", i).alias("l"),
+                            F.element_at("syms", i + F.lit(1)).alias("r"),
+                        ),
+                    )
+                ).alias("p"),
+                "word_n",
             )
-            .agg(F.sum("word_n").alias("n"))
-            .orderBy(F.col("n").desc(), F.col("l"), F.col("r"))
-            .limit(1)
-            .collect()
-        )
-        if not best:
-            break
-        l, r, n = best[0]["l"], best[0]["r"], int(best[0]["n"])
-        merges.append((l, r, n))
-        joined = l + r
-        # leftmost-first greedy merge: fold symbols into a new array,
-        # joining when the accumulated tail is `l` and the next is `r`
-        merged = F.aggregate(
-            F.col("syms"),
-            F.array().cast("array<string>"),
-            lambda acc, s: F.when(
-                (F.size(acc) > 0)
-                & (F.element_at(acc, -1) == F.lit(l))
-                & (s == F.lit(r)),
-                F.concat(
-                    F.slice(acc, 1, F.size(acc) - 1), F.array(F.lit(joined))
-                ),
-            ).otherwise(F.concat(acc, F.array(s))),
-        )
-        state = state.select(merged.alias("syms"), "word_n")
-        if (step + 1) % checkpoint_every == 0:
-            state = state.localCheckpoint()
+            best = (
+                pairs.groupBy(
+                    F.col("p").getField("l").alias("l"),
+                    F.col("p").getField("r").alias("r"),
+                )
+                .agg(F.sum("word_n").alias("n"))
+                .orderBy(F.col("n").desc(), F.col("l"), F.col("r"))
+                .limit(1)
+                .collect()
+            )
+            if not best:
+                break
+            l, r, n = best[0]["l"], best[0]["r"], int(best[0]["n"])
+            merges.append((l, r, n))
+            joined = l + r
+            # leftmost-first greedy merge: fold symbols into a new array,
+            # joining when the accumulated tail is `l` and the next is `r`
+            merged = F.aggregate(
+                F.col("syms"),
+                F.array().cast("array<string>"),
+                lambda acc, s: F.when(
+                    (F.size(acc) > 0)
+                    & (F.element_at(acc, -1) == F.lit(l))
+                    & (s == F.lit(r)),
+                    F.concat(
+                        F.slice(acc, 1, F.size(acc) - 1), F.array(F.lit(joined))
+                    ),
+                ).otherwise(F.concat(acc, F.array(s))),
+            )
+            state = state.select(merged.alias("syms"), "word_n")
+            if (step + 1) % checkpoint_every == 0:
+                state = state.localCheckpoint()
+                _materialize.release(ckpt)
+                ckpt = state
+    finally:
+        _materialize.release(ckpt)
     return merges
 
 

@@ -11,6 +11,9 @@ Each ``__spark_entry__.queries()`` entry yields one line of JSON with
   which its executed (post-AQE) plan is walked for ``shuffle_bytes``,
   ``shuffle_records``, ``spill_bytes`` and ``exchanges`` (bytes and
   records written per shuffle exchange, in plan order);
+- ``persisted_rdds``: the persistent RDDs (cache entries and local
+  checkpoints) that construction and that ``collect()`` added to the
+  session, read before the timed rebuilds: what a call leaves held;
 - ``collect_s``, ``noop_s``, ``sink_share``: rebuild-and-run timings
   with ``collect()`` and with the noop sink (one untimed warmup, then
   the best of ``--runs``; ``--runs 0`` skips them), so a slow query
@@ -166,11 +169,17 @@ def executed_metrics(df) -> dict:
     }
 
 
+def persisted_ids(sc) -> set:
+    """Ids of the RDDs the session holds persisted."""
+    return {int(i) for i in sc._jsc.getPersistentRDDs().keySet().toArray()}
+
+
 def measure(spark, name: str, fn, sf_dir: str, runs: int = 1, plans_dir=None) -> dict:
     """The JSON record of one registry query (see the module docstring)."""
     rec: dict = {"query": name}
     try:
         sc = spark.sparkContext
+        held = persisted_ids(sc)
         group = f"measure-{name}-{uuid.uuid4().hex}"
         sc.setJobGroup(group, f"{name}: construction")
         try:
@@ -189,6 +198,7 @@ def measure(spark, name: str, fn, sf_dir: str, runs: int = 1, plans_dir=None) ->
             with open(os.path.join(plans_dir, f"{name}.txt"), "w") as f:
                 f.write(_explain(spark, df, "formatted"))
         rec["rows"] = len(df.collect())
+        rec["persisted_rdds"] = len(persisted_ids(sc) - held)
         rec.update(executed_metrics(df))
         if runs > 0:
             rec["collect_s"] = best_of(lambda: fn(spark, sf_dir).collect(), runs)

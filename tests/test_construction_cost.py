@@ -106,17 +106,22 @@ def test_v0_text_build_sends_few_py4j_commands(spark):
     assert df.columns == ["phone", "email", "code", "body", "qty", "price", "status"]
 
 
+def chained_generator(spark, levels):
+    """``levels`` single-column dependency levels: ``c{i} = c{i-1} + 1``."""
+    gen = dg.DataGenerator(spark, rows=10, partitions=2)
+    gen.withColumn("c0", "int", minValue=0, maxValue=9, random=True)
+    for i in range(1, levels):
+        gen.withColumn(f"c{i}", "int", expr=f"c{i - 1} + 1")
+    return gen
+
+
 def test_v0_chained_build_reads_no_schema(spark):
     """A chain of 12 dependency levels is 12 ``selectExpr`` plus the output
     one. The columns each level carries over are tracked on the driver,
     so the build fetches no schema (a ``schema`` and a ``json`` command
     per level before)."""
     def chain():
-        gen = dg.DataGenerator(spark, rows=10, partitions=2)
-        gen.withColumn("c0", "int", minValue=0, maxValue=9, random=True)
-        for i in range(1, 12):
-            gen.withColumn(f"c{i}", "int", expr=f"c{i - 1} + 1")
-        return gen
+        return chained_generator(spark, 12)
 
     names = [f"c{i}" for i in range(12)]
     chain().build()
@@ -131,6 +136,20 @@ def test_v0_chained_build_reads_no_schema(spark):
         options={"rowsPerSecond": 10, "includeSourceTimestamp": True},
     )
     assert stream.columns == ["_source_timestamp"] + names
+
+
+def test_v0_chained_build_is_linear_in_py4j_commands(spark):
+    """A level that replaces no column carries the others over as ``*``,
+    one list item, instead of naming each one: py4j sends a list one
+    ``add`` per item, so 42 chained levels sent 1,572 commands (987 of
+    them ``add``) when every level named its carried columns; 711
+    (126 ``add``) now."""
+    chained_generator(spark, 42).build()
+    with count_py4j(spark) as sent:
+        df = chained_generator(spark, 42).build()
+    assert len(sent) <= 900, len(sent)
+    assert sent.count("add") <= 4 * 42, sent.count("add")
+    assert all(r[i] == r[0] + i for r in df.collect() for i in range(42))
 
 
 def _expression_table(expr):

@@ -12,6 +12,7 @@ import re
 
 import pytest
 
+from dbldatagen_spark.functions import _materialize
 from dbldatagen_spark.functions import dedup as dedup_mod
 from dbldatagen_spark.functions.dedup import duplicate_components
 
@@ -130,7 +131,7 @@ def test_duplicate_components_releases_round_checkpoints(spark):
 
 def test_duplicate_components_releases_on_error(spark, monkeypatch):
     calls = []
-    real = dedup_mod._checkpoint
+    real = _materialize.checkpoint
 
     def failing(df, reliable):
         calls.append(1)
@@ -138,7 +139,7 @@ def test_duplicate_components_releases_on_error(spark, monkeypatch):
             raise RuntimeError("checkpoint failed")
         return real(df, reliable)
 
-    monkeypatch.setattr(dedup_mod, "_checkpoint", failing)
+    monkeypatch.setattr(_materialize, "checkpoint", failing)
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(40)], "id_a long, id_b long"
     )

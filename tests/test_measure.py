@@ -12,7 +12,7 @@ FIELDS = {
     "collect_s", "noop_s",
     "sink_share", "shuffles", "broadcasts", "sort_merge_joins",
     "py_udf_nodes", "codegen_fallbacks", "shuffle_bytes", "shuffle_records",
-    "spill_bytes", "exchanges",
+    "spill_bytes", "exchanges", "persisted_rdds",
 }
 
 
@@ -41,6 +41,9 @@ def test_record(spark, measure, name, shuffled):
     import __spark_entry__ as entrymod
 
     fn = entrymod.queries()[name]
+    # a cache entry left by an earlier build of the same plan would
+    # serve this one, which then adds none
+    spark.catalog.clearCache()
     rec = measure.measure(spark, name, fn, SF, runs=1)
     assert set(rec) == FIELDS, rec
     assert rec["rows"] == len(fn(spark, SF).collect())
@@ -51,3 +54,5 @@ def test_record(spark, measure, name, shuffled):
         assert rec["construction_py4j"] <= MAX_CONSTRUCTION_PY4J[name], rec
     assert rec["shuffle_records"] == sum(e["records"] for e in rec["exchanges"])
     assert 0 < rec["noop_s"] and 0 < rec["collect_s"]
+    # minhash_near_duplicates caches the shingle hashes its result reads
+    assert (rec["persisted_rdds"] >= 1) if shuffled else (rec["persisted_rdds"] == 0)
