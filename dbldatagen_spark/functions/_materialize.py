@@ -20,12 +20,13 @@ def checkpoint_dir(spark: SparkSession, path: Optional[str]) -> Iterator[bool]:
     their executor (a real risk on preemptible/spot fleets).  A
     ``path`` (HDFS/object store) buys restartable lineage for one file
     write per round.  On exit, exceptions included, the session's prior
-    dir is set again (Spark's setter creates a fresh subdirectory under
-    whatever it is given); a session that had none is cleared through
-    the JVM setter, which wraps its argument in ``Option`` so a null
-    un-sets it.  When the prior dir cannot be read, nothing is restored:
-    clearing could drop a dir the session had.  Files under ``path``
-    are reclaimed by the ``ContextCleaner`` only with
+    checkpoint dir is put back as it was: the saved JVM ``Option`` goes
+    back through the field setter, so a session that had none has none
+    again, and one that had a dir keeps that exact path (Spark's
+    ``setCheckpointDir`` would nest a fresh UUID subdirectory under it
+    on every call).  When the prior dir cannot be read, nothing is
+    restored.  Files under ``path`` are reclaimed by the
+    ``ContextCleaner`` only with
     ``spark.cleaner.referenceTracking.cleanCheckpoints=true``; otherwise
     the caller deletes them."""
     if path is None:
@@ -34,16 +35,15 @@ def checkpoint_dir(spark: SparkSession, path: Optional[str]) -> Iterator[bool]:
     jsc = spark.sparkContext._jsc.sc()
     try:
         prev = jsc.getCheckpointDir()
-        prior, readable = (prev.get() if prev.isDefined() else None), True
     except Exception:
-        prior, readable = None, False
+        prev = None
     jsc.setCheckpointDir(path)
     try:
         yield True
     finally:
-        if readable:
+        if prev is not None:
             with contextlib.suppress(Exception):
-                jsc.setCheckpointDir(prior)
+                getattr(jsc, "checkpointDir_$eq")(prev)
 
 
 def checkpoint(df: DataFrame, reliable: bool) -> DataFrame:

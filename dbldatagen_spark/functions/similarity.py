@@ -439,6 +439,119 @@ def embedding_pca(
     return projected, components, explained
 
 
+def _nearest(sub: np.ndarray, c: np.ndarray) -> np.ndarray:
+    """Squared euclidean distance from every row of ``sub`` to every
+    codeword of ``c``: a rows x codewords matrix, vectorized as
+    ``|x|^2 - 2 x.c + |c|^2``."""
+    return (
+        (sub * sub).sum(axis=1)[:, None]
+        - 2.0 * sub @ c.T
+        + (c * c).sum(axis=1)[None, :]
+    )
+
+
+def _seed_vectors(
+    df: DataFrame, vec_col: str, k: int, id_col: Optional[str]
+) -> np.ndarray:
+    """The Lloyd seed draw: the ``(k, d)`` vectors with the smallest
+    ``id_col`` values (first k rows if no id column) — reproducible
+    across runs and partitionings, unlike random sampling."""
+    # Without an id column the seed draw is first-k-rows (fast but not
+    # partition-stable); pass id_col for deterministic output.
+    seed_df = df.select(
+        *([F.col(id_col)] if id_col else []), F.col(vec_col)
+    )
+    if id_col:
+        seed_df = seed_df.orderBy(F.col(id_col))
+    seed_rows = seed_df.limit(k).collect()
+    if len(seed_rows) < k:
+        raise ValueError(f"need at least k={k} rows, got {len(seed_rows)}")
+    return np.vstack([np.asarray(r[vec_col], dtype=float) for r in seed_rows])
+
+
+def _lloyd(df: DataFrame, vec_col: str, codebooks, max_iter: int, tol: float):
+    """Distributed Lloyd iterations over ``m`` contiguous subspaces at
+    once, from ``codebooks`` of shape ``(m, k, dsub)``: returns the
+    trained codebooks and the per-iteration inertia summed across
+    subspaces (non-increasing).  Empty cells keep their codeword.
+
+    Scale shape: ALL ``m`` subspaces train in ONE fused ``mapInPandas``
+    pass per iteration (the corpus scans once per iteration, not once
+    per subspace); each partition emits ``m x k`` partial rows of
+    ``(count, component-sum, inertia)`` with vectorized numpy (the
+    codebooks ride along in the closure — k·d floats), so driver
+    traffic per iteration is O(partitions * k * d) — independent of
+    row count, the same tree-aggregate shape as
+    :func:`embedding_moments`."""
+    import pandas as pd
+
+    codebooks = np.array(codebooks, dtype=float)
+    m, k, dsub = codebooks.shape
+    # every iteration scans the projected vectors: persist them for the
+    # fit's duration so upstream work (scan, casts, derived vector
+    # arithmetic) runs once, not once per iteration (guide §5).
+    # MEMORY_AND_DISK by default — an oversized corpus spills rather
+    # than OOMs; released in the finally below.
+    vecs = df.select(F.col(vec_col)).persist()
+
+    inertia_history = []
+    prev = None
+    try:
+        for _ in range(max_iter):
+            cents = codebooks.copy()
+
+            def partial(batches, _c=cents):
+                counts = np.zeros((m, k))
+                sums = np.zeros((m, k, dsub))
+                inertia = np.zeros(m)
+                for pdf in batches:
+                    if len(pdf) == 0:
+                        continue
+                    mat = np.vstack(pdf.iloc[:, 0].to_numpy()).astype(np.float64)
+                    for s in range(m):
+                        sub = mat[:, s * dsub:(s + 1) * dsub]
+                        d2 = _nearest(sub, _c[s])
+                        cell = d2.argmin(axis=1)
+                        inertia[s] += float(
+                            d2[np.arange(len(sub)), cell].sum()
+                        )
+                        np.add.at(counts[s], cell, 1)
+                        np.add.at(sums[s], cell, sub)
+                yield pd.DataFrame(
+                    {
+                        "sub": np.repeat(range(m), k),
+                        "cell": list(range(k)) * m,
+                        "n": counts.reshape(-1).astype("int64"),
+                        "s": [row.tolist() for row in sums.reshape(m * k, dsub)],
+                        "inertia": [
+                            inertia[i] if j == 0 else 0.0
+                            for i in range(m)
+                            for j in range(k)
+                        ],
+                    }
+                )
+
+            parts = vecs.mapInPandas(
+                partial, "sub int, cell int, n long, s array<double>, inertia double"
+            ).collect()
+            counts = np.zeros((m, k))
+            sums = np.zeros((m, k, dsub))
+            inertia = 0.0
+            for r in parts:
+                counts[r["sub"], r["cell"]] += r["n"]
+                sums[r["sub"], r["cell"]] += np.asarray(r["s"])
+                inertia += r["inertia"]
+            inertia_history.append(inertia)
+            nonempty = counts > 0
+            codebooks[nonempty] = sums[nonempty] / counts[nonempty][:, None]
+            if prev is not None and prev - inertia <= tol * max(prev, 1.0):
+                break
+            prev = inertia
+    finally:
+        vecs.unpersist()
+    return codebooks, inertia_history
+
+
 def kmeans_fit(
     df: DataFrame,
     vec_col: str,
@@ -456,89 +569,18 @@ def kmeans_fit(
     values (first k rows if no id column) — reproducible across runs
     and partitionings, unlike random sampling.
 
-    Scale shape per iteration: one ``mapInPandas`` pass computes each
-    partition's per-cell (count, component-sum, inertia) partials with
-    vectorized numpy (centroids ride along in the closure — k·d floats);
-    the driver reduces ``partitions x k`` small rows and updates. Total
-    driver traffic per iteration is O(partitions · k · d) — independent
-    of row count, the same tree-aggregate shape as
-    :func:`embedding_moments`. Empty cells keep their previous centroid.
+    This is the one-subspace case of :func:`pq_train`'s loop: one
+    ``mapInPandas`` pass per iteration computes each partition's
+    per-cell (count, component-sum, inertia) partials, and the driver
+    reduces ``partitions x k`` small rows and updates — driver traffic
+    O(partitions · k · d) per iteration, independent of row count.
+    Empty cells keep their previous centroid.
     """
-    import pandas as pd
-
     if k < 1:
         raise ValueError("k must be >= 1")
-    # Without an id column the seed draw is first-k-rows (fast but not
-    # partition-stable); pass id_col for deterministic output.
-    seed_df = df.select(
-        *([F.col(id_col)] if id_col else []), F.col(vec_col)
-    )
-    if id_col:
-        seed_df = seed_df.orderBy(F.col(id_col))
-    seed_rows = seed_df.limit(k).collect()
-    if len(seed_rows) < k:
-        raise ValueError(f"need at least k={k} rows, got {len(seed_rows)}")
-    centroids = np.vstack([np.asarray(r[vec_col], dtype=float) for r in seed_rows])
-    d = centroids.shape[1]
-    # every Lloyd iteration scans the projected vectors: persist them
-    # for the fit's duration so upstream work (scan, casts, derived
-    # vector arithmetic) runs once, not once per iteration (guide §5).
-    # MEMORY_AND_DISK by default — an oversized corpus spills rather
-    # than OOMs; released in the finally below.
-    vecs = df.select(F.col(vec_col)).persist()
-
-    inertia_history = []
-    prev = None
-    try:
-        for _ in range(max_iter):
-            cents = centroids.copy()
-
-            def partial(batches, _c=cents):
-                counts = np.zeros(k)
-                sums = np.zeros((k, d))
-                inertia = 0.0
-                for pdf in batches:
-                    if len(pdf) == 0:
-                        continue
-                    mat = np.vstack(pdf.iloc[:, 0].to_numpy()).astype(np.float64)
-                    # squared euclidean distance to every centroid, vectorized
-                    d2 = (
-                        (mat * mat).sum(axis=1)[:, None]
-                        - 2.0 * mat @ _c.T
-                        + (_c * _c).sum(axis=1)[None, :]
-                    )
-                    cell = d2.argmin(axis=1)
-                    inertia += float(d2[np.arange(len(mat)), cell].sum())
-                    np.add.at(counts, cell, 1)
-                    np.add.at(sums, cell, mat)
-                yield pd.DataFrame(
-                    {
-                        "cell": range(k),
-                        "n": counts.astype("int64"),
-                        "s": [row.tolist() for row in sums],
-                        "inertia": [inertia] + [0.0] * (k - 1),
-                    }
-                )
-
-            parts = vecs.mapInPandas(
-                partial, "cell int, n long, s array<double>, inertia double"
-            ).collect()
-            counts = np.zeros(k)
-            sums = np.zeros((k, d))
-            inertia = 0.0
-            for r in parts:
-                counts[r["cell"]] += r["n"]
-                sums[r["cell"]] += np.asarray(r["s"])
-                inertia += r["inertia"]
-            inertia_history.append(inertia)
-            nonempty = counts > 0
-            centroids[nonempty] = sums[nonempty] / counts[nonempty, None]
-            if prev is not None and prev - inertia <= tol * max(prev, 1.0):
-                break
-            prev = inertia
-    finally:
-        vecs.unpersist()
-    return centroids, inertia_history
+    seeds = _seed_vectors(df, vec_col, k, id_col)
+    centroids, inertia_history = _lloyd(df, vec_col, seeds[None], max_iter, tol)
+    return centroids[0], inertia_history
 
 
 def kmeans_assign(
@@ -561,13 +603,8 @@ def kmeans_assign(
             if len(pdf) == 0:
                 continue
             mat = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
-            d2 = (
-                (mat * mat).sum(axis=1)[:, None]
-                - 2.0 * mat @ cents.T
-                + (cents * cents).sum(axis=1)[None, :]
-            )
             pdf = pdf.copy()
-            pdf[out_col] = d2.argmin(axis=1).astype("int32")
+            pdf[out_col] = _nearest(mat, cents).argmin(axis=1).astype("int32")
             yield pdf
 
     from pyspark.sql.types import IntegerType, StructField, StructType
@@ -623,96 +660,16 @@ def pq_train(
 
     Scale shape: ALL ``m`` subspaces train in ONE fused ``mapInPandas``
     pass per Lloyd iteration (the corpus scans once per iteration, not
-    once per subspace); each partition emits ``m x k`` partial rows of
-    ``(count, component-sum, inertia)``, so driver traffic per
-    iteration is O(partitions * m * k * d/m) = O(partitions * k * d) —
-    independent of row count, the :func:`kmeans_fit` bound.
+    once per subspace); driver traffic per iteration is
+    O(partitions * k * d) — independent of row count, the
+    :func:`kmeans_fit` bound.
     """
-    import pandas as pd
-
     dsub = _pq_validate(df, vec_col, m, k)
-    # Without an id column the seed draw is first-k-rows (fast but not
-    # partition-stable); pass id_col for deterministic output.
-    seed_df = df.select(
-        *([F.col(id_col)] if id_col else []), F.col(vec_col)
-    )
-    if id_col:
-        seed_df = seed_df.orderBy(F.col(id_col))
-    seed_rows = seed_df.limit(k).collect()
-    if len(seed_rows) < k:
-        raise ValueError(f"need at least k={k} rows, got {len(seed_rows)}")
-    seeds = np.vstack(
-        [np.asarray(r[vec_col], dtype=float) for r in seed_rows]
-    )
+    seeds = _seed_vectors(df, vec_col, k, id_col)
     # (m, k, dsub): subspace s seeds from the same k rows' s-th slice
-    codebooks = np.stack(
-        [seeds[:, s * dsub:(s + 1) * dsub].copy() for s in range(m)]
+    return _lloyd(
+        df, vec_col, seeds.reshape(k, m, dsub).transpose(1, 0, 2), max_iter, tol
     )
-    # persist for the fit's duration — one upstream execution instead of
-    # one per Lloyd iteration (guide §5); released in the finally below
-    vecs = df.select(F.col(vec_col)).persist()
-
-    inertia_history = []
-    prev = None
-    try:
-        for _ in range(max_iter):
-            cents = codebooks.copy()
-
-            def partial(batches, _c=cents):
-                counts = np.zeros((m, k))
-                sums = np.zeros((m, k, dsub))
-                inertia = np.zeros(m)
-                for pdf in batches:
-                    if len(pdf) == 0:
-                        continue
-                    mat = np.vstack(pdf.iloc[:, 0].to_numpy()).astype(np.float64)
-                    for s in range(m):
-                        sub = mat[:, s * dsub:(s + 1) * dsub]
-                        c = _c[s]
-                        d2 = (
-                            (sub * sub).sum(axis=1)[:, None]
-                            - 2.0 * sub @ c.T
-                            + (c * c).sum(axis=1)[None, :]
-                        )
-                        cell = d2.argmin(axis=1)
-                        inertia[s] += float(
-                            d2[np.arange(len(sub)), cell].sum()
-                        )
-                        np.add.at(counts[s], cell, 1)
-                        np.add.at(sums[s], cell, sub)
-                yield pd.DataFrame(
-                    {
-                        "sub": np.repeat(range(m), k),
-                        "cell": list(range(k)) * m,
-                        "n": counts.reshape(-1).astype("int64"),
-                        "s": [row.tolist() for row in sums.reshape(m * k, dsub)],
-                        "inertia": [
-                            inertia[i] if j == 0 else 0.0
-                            for i in range(m)
-                            for j in range(k)
-                        ],
-                    }
-                )
-
-            parts = vecs.mapInPandas(
-                partial, "sub int, cell int, n long, s array<double>, inertia double"
-            ).collect()
-            counts = np.zeros((m, k))
-            sums = np.zeros((m, k, dsub))
-            inertia = 0.0
-            for r in parts:
-                counts[r["sub"], r["cell"]] += r["n"]
-                sums[r["sub"], r["cell"]] += np.asarray(r["s"])
-                inertia += r["inertia"]
-            inertia_history.append(inertia)
-            nonempty = counts > 0
-            codebooks[nonempty] = sums[nonempty] / counts[nonempty][:, None]
-            if prev is not None and prev - inertia <= tol * max(prev, 1.0):
-                break
-            prev = inertia
-    finally:
-        vecs.unpersist()
-    return codebooks, inertia_history
 
 
 def pq_encode(
@@ -746,13 +703,7 @@ def pq_encode(
             codes = np.empty((len(mat), m), dtype="int32")
             for s in range(m):
                 sub = mat[:, s * dsub:(s + 1) * dsub]
-                c = cb[s]
-                d2 = (
-                    (sub * sub).sum(axis=1)[:, None]
-                    - 2.0 * sub @ c.T
-                    + (c * c).sum(axis=1)[None, :]
-                )
-                codes[:, s] = d2.argmin(axis=1)
+                codes[:, s] = _nearest(sub, cb[s]).argmin(axis=1)
             pdf = pdf.copy()
             pdf[out_col] = [row.tolist() for row in codes]
             yield pdf
@@ -885,13 +836,7 @@ def pq_reconstruction_report(
             n += len(mat)
             for s in range(m):
                 sub = mat[:, s * dsub:(s + 1) * dsub]
-                c = cb[s]
-                d2 = (
-                    (sub * sub).sum(axis=1)[:, None]
-                    - 2.0 * sub @ c.T
-                    + (c * c).sum(axis=1)[None, :]
-                )
-                err[s] += float(d2.min(axis=1).sum())
+                err[s] += float(_nearest(sub, cb[s]).min(axis=1).sum())
                 comp_sum[s] += sub.sum(axis=0)
                 comp_sq[s] += float((sub * sub).sum())
         yield pd.DataFrame(
@@ -997,8 +942,9 @@ def ivfpq_build(
             lambda a, b: a - b,
         ).alias("_res"),
     )
-    # pq_train executes the residual frame eagerly 1 + max_iter times
-    # (the seed draw plus one fused pass per Lloyd iteration), and each
+    # pq_train executes the residual frame eagerly 2 + max_iter times
+    # (the width sample, the seed draw and one fused pass per Lloyd
+    # iteration), and each
     # execution re-runs kmeans_assign's Python pass and the residual
     # arithmetic from the scan up.  Persist it for the training
     # duration so that upstream runs once (guide §5: cache when

@@ -252,25 +252,19 @@ def generate_table(
     *,
     seed: Optional[int] = None,
     plan: Optional[DataGenPlan] = None,
-    streaming_source: Optional[DataFrame] = None,
 ) -> DataFrame:
-    """Build one table. ``streaming_source`` (if given) replaces
-    ``spark.range`` with a pre-built seed DataFrame containing
-    ``__synth_row_id`` (used by the streaming layer)."""
+    """Build one table over ``spark.range`` renamed to ``__synth_row_id``."""
     table_seed = seed if seed is not None else (table.seed if table.seed is not None else 42)
-    if streaming_source is not None:
-        df = streaming_source
+    if table.partitions is not None:
+        partitions = table.partitions
     else:
-        if table.partitions is not None:
-            partitions = table.partitions
-        else:
-            try:
-                default_parts = spark.sparkContext.defaultParallelism
-            except Exception:  # Spark Connect has no sparkContext
-                default_parts = 200
-            partitions = default_partitions(int(table.rows), default_parts)
-        df = spark.range(0, int(table.rows), numPartitions=partitions)
-        df = df.withColumnRenamed("id", ROW_ID_COL)
+        try:
+            default_parts = spark.sparkContext.defaultParallelism
+        except Exception:  # Spark Connect has no sparkContext
+            default_parts = 200
+        partitions = default_partitions(int(table.rows), default_parts)
+    df = spark.range(0, int(table.rows), numPartitions=partitions)
+    df = df.withColumnRenamed("id", ROW_ID_COL)
     id_col = quote(ROW_ID_COL)
     for level_cols in _dependency_levels(table):
         level = Level()

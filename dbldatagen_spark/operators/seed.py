@@ -22,8 +22,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from dbldatagen_spark.operators.sqltext import call, case_when, cast, sql_lit
-
-ROW_ID_COL = "__synth_row_id"
+from dbldatagen_spark.plans.spec import ROW_ID_COL  # noqa: F401  (re-exported)
 
 _MASK64 = (1 << 64) - 1
 # 2^53 keeps the uniform fraction exactly representable in a double mantissa.

@@ -42,6 +42,10 @@ DEFAULT_DECIMAL_SCALE = 0
 
 _IDENTIFIER_RE = re.compile(r"^[A-Za-z_][A-Za-z0-9_]*$")
 
+# The row-id column every generated table is built over; no spec column
+# may take its name (Spark resolves names case-insensitively).
+ROW_ID_COL = "__synth_row_id"
+
 _ROWS_SUFFIXES = {"k": 10**3, "m": 10**6, "b": 10**9, "t": 10**12}
 
 # Type names accepted for ColumnSpec.dtype, normalized spelling -> canonical.
@@ -720,6 +724,10 @@ class ColumnSpec:
         _check(
             bool(_IDENTIFIER_RE.match(self.name)),
             f"invalid column name {self.name!r}",
+        )
+        _check(
+            self.name.lower() != ROW_ID_COL,
+            f"column name {self.name!r} is reserved for the generator's row id",
         )
         if self.dtype is not None:
             object.__setattr__(self, "dtype", normalize_dtype(self.dtype))

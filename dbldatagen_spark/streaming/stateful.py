@@ -30,6 +30,7 @@ that builds ``keyed``, and its ``step``.
 
 from __future__ import annotations
 
+import warnings
 from typing import Tuple
 
 import numpy as np
@@ -37,6 +38,16 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupStateTimeout
+
+# pyspark's state serializer pads each output batch with all-NA rows,
+# and pandas warns about every such concat.  Workers import this module
+# to run the kernel, so the filter reaches them too.
+warnings.filterwarnings(
+    "ignore",
+    message="The behavior of DataFrame concatenation with empty or all-NA entries",
+    category=FutureWarning,
+    module="pyspark.sql.pandas.serializers",
+)
 
 
 def session_window_agg(

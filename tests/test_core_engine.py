@@ -364,6 +364,13 @@ class TestValidation:
         with pytest.raises(SpecValidationError):
             ColumnSpec("x", ExpressionColumn("1+1"), dtype="int")
 
+    @pytest.mark.parametrize("name", ["__synth_row_id", "__SYNTH_ROW_ID"])
+    def test_row_id_name_is_reserved(self, name):
+        # the generator builds every table over this column: a spec
+        # column of the same name would be an ambiguous reference
+        with pytest.raises(SpecValidationError, match="reserved"):
+            ColumnSpec(name, RangeColumn(0, 9), dtype="int")
+
     def test_null_fraction_requires_nullable(self):
         with pytest.raises(SpecValidationError):
             ColumnSpec("x", RangeColumn(0, 1), dtype="int", null_fraction=0.5)

@@ -1305,7 +1305,7 @@ def test_kmeans_partition_invariance(spark, emb):
     assert np.allclose(h1, h2, rtol=1e-12)
 
 
-@pytest.mark.parametrize("fit", ["kmeans_fit", "pq_train"])
+@pytest.mark.parametrize("fit", ["kmeans_fit", "pq_train", "ivfpq_build"])
 def test_lloyd_fit_releases_vectors_on_error(spark, fit):
     """A fit that fails mid-loop must still release its persisted
     vector frame: one ragged vector past the k seed rows makes the
@@ -1322,10 +1322,18 @@ def test_lloyd_fit_releases_vectors_on_error(spark, fit):
     def _ids():
         return {int(i) for i in jsc.getPersistentRDDs().keySet().toArray()}
 
-    kwargs = {"k": 2} if fit == "kmeans_fit" else {"m": 2, "k": 2}
+    lloyd = {"id_col": "vec_id", "max_iter": 3}
+    args, kwargs = {
+        "kmeans_fit": ((df, "v"), {"k": 2, **lloyd}),
+        "pq_train": ((df, "v"), {"m": 2, "k": 2, **lloyd}),
+        "ivfpq_build": (
+            (df, "vec_id", "v"),
+            {"n_cells": 2, "m": 2, "k": 2, "coarse_max_iter": 3, "pq_max_iter": 3},
+        ),
+    }[fit]
     before = _ids()
     with pytest.raises(PythonException):
-        getattr(similarity, fit)(df, "v", id_col="vec_id", max_iter=3, **kwargs)
+        getattr(similarity, fit)(*args, **kwargs)
     assert _ids() - before == set()
 
 

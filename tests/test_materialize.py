@@ -2,7 +2,8 @@
 ``functions/_materialize.py``: ``pagerank`` (also under
 ``host_authority``) and ``bpe_train`` release every round checkpoint
 their result does not read, on the error path too, and a
-``checkpoint_dir`` override is undone when the operator raises."""
+``checkpoint_dir`` override puts the session's prior dir back unchanged,
+when the operator raises too."""
 
 import pytest
 from pyspark.errors import SparkRuntimeException
@@ -113,3 +114,19 @@ def test_checkpoint_dir_cleared_when_pagerank_raises(spark, tmp_path):
             iterations=2, checkpoint_dir=str(tmp_path / "call"),
         )
     assert sc.getCheckpointDir() is None
+
+
+def test_checkpoint_dir_is_not_nested_by_repeated_overrides(spark, tmp_path):
+    sc = spark.sparkContext
+    sc.setCheckpointDir(str(tmp_path / "prior"))
+    try:
+        before = sc.getCheckpointDir()
+        edges = spark.createDataFrame(EDGES, "s string, d string")
+        for i in range(3):
+            pagerank(
+                edges, "s", "d", iterations=2,
+                checkpoint_dir=str(tmp_path / f"call{i}"),
+            ).collect()
+        assert sc.getCheckpointDir() == before
+    finally:
+        sc._jsc.sc().setCheckpointDir(None)
