@@ -32,6 +32,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from dbldatagen_spark.functions import _materialize
+from dbldatagen_spark.functions._hashing import check_hash_mode, md5_60
 from dbldatagen_spark.functions._parallel import ensure_parallelism
 
 # Fixed 64-bit odd constant: the i-th minhash permutation is xxhash64
@@ -729,18 +730,14 @@ def simhash_signatures(
     engine with an md5 function, which makes the signatures portable
     across systems and oracle-checkable).
     """
+    check_hash_mode(token_hash, "token_hash")
     df = ensure_parallelism(df)
     tokens = F.array_distinct(F.split(normalize_text_expr(F.col(text_col)), " "))
     if token_hash == "md5":
-        hashes = F.transform(
-            tokens,
-            lambda t: F.conv(F.substring(F.md5(t), 1, 15), 16, 10).cast("long"),
-        )
+        hashes = F.transform(tokens, md5_60)
         return df.select(
             F.col(id_col), _simhash_from_hashes(hashes, 60).alias("simhash")
         )
-    if token_hash != "xxhash64":
-        raise ValueError(f"token_hash must be xxhash64|md5, got {token_hash!r}")
     hashes = F.transform(tokens, lambda t: F.xxhash64(t))
     return df.select(
         F.col(id_col), _simhash_from_hashes(hashes, 64).alias("simhash")
@@ -1569,12 +1566,11 @@ def duplicated_span_stats(
     if min_count < 2:
         raise ValueError(f"min_count must be >= 2, got {min_count}")
 
-    if hash_mode == "xxhash64":
-        span_hash = F.xxhash64(F.col("_span"))
-    elif hash_mode == "md5":
-        span_hash = F.md5(F.col("_span"))
-    else:
-        raise ValueError(f"hash_mode must be xxhash64|md5, got {hash_mode!r}")
+    check_hash_mode(hash_mode)
+    span_hash = (
+        F.xxhash64(F.col("_span")) if hash_mode == "xxhash64"
+        else F.md5(F.col("_span"))
+    )
 
     # materialize the word array in its own projection (codegen caveat on
     # word_shingles_expr) before the windowed slice
@@ -2319,15 +2315,7 @@ def containment_sketch_pairs(
         F.col(id_col), F.explode_outer("shingles").alias("_sh")
     ).where(F.col("_sh").isNotNull()).select(
         F.col(id_col),
-        F.conv(
-            F.substring(
-                F.md5(F.concat_ws(":", F.lit(seed), F.col("_sh"))), 1, 15
-            ),
-            16,
-            10,
-        )
-        .cast("long")
-        .alias("_h"),
+        md5_60(F.concat_ws(":", F.lit(seed), F.col("_sh"))).alias("_h"),
     )
     w = Window.partitionBy(id_col).orderBy("_h")
     kept = hashed.withColumn("_rn", F.row_number().over(w)).where(

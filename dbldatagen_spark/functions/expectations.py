@@ -20,6 +20,8 @@ from typing import Mapping, Optional, Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from dbldatagen_spark.functions._hashing import md5_60
+
 
 def expectation_report(
     df: DataFrame,
@@ -330,7 +332,7 @@ def table_checksum(
     for c in cols:
         parts.append(F.coalesce(F.col(c).cast("string"), F.lit("\x00null\x00")))
     row_str = F.concat_ws(":", F.lit(seed), *parts)
-    hv = F.conv(F.substring(F.md5(row_str), 1, 15), 16, 10).cast("decimal(38,0)")
+    hv = md5_60(row_str).cast("decimal(38,0)")
     return df.agg(
         F.count(F.lit(1)).cast("long").alias("n_rows"),
         F.coalesce(F.sum(hv), F.lit(0).cast("decimal(38,0)"))

@@ -35,15 +35,16 @@ from typing import Optional
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from dbldatagen_spark.functions._hashing import hash_bucket
+
 
 def _order_key(id_col: str, seed: int, hash_mode: str) -> Column:
-    """Deterministic pseudo-random ordering key for a document id."""
+    """Deterministic pseudo-random ordering key for a document id
+    (``hash_mode`` already checked by :func:`hash_bucket`)."""
     if hash_mode == "xxhash64":
         return F.xxhash64(F.lit(seed), F.col(id_col))
-    if hash_mode == "md5":
-        # hex string — identical lexicographic order in any engine
-        return F.md5(F.concat_ws("-", F.lit(seed), F.col(id_col).cast("string")))
-    raise ValueError(f"hash_mode must be xxhash64|md5, got {hash_mode!r}")
+    # hex string — identical lexicographic order in any engine
+    return F.md5(F.concat_ws("-", F.lit(seed), F.col(id_col).cast("string")))
 
 
 def pack_sequences(
@@ -86,16 +87,7 @@ def pack_sequences(
     if num_shards <= 0:
         raise ValueError(f"num_shards must be positive, got {num_shards}")
 
-    shard = F.pmod(F.xxhash64(F.lit(seed), F.col(id_col)), F.lit(num_shards)) \
-        if hash_mode == "xxhash64" else F.pmod(
-            F.conv(
-                F.substring(
-                    F.md5(F.concat_ws("-", F.lit(seed), F.col(id_col).cast("string"))),
-                    1, 15,
-                ), 16, 10,
-            ).cast("long"),
-            F.lit(num_shards),
-        )
+    shard = hash_bucket(seed, id_col, num_shards, hash_mode)
     ordk = _order_key(id_col, seed + 1, hash_mode)
 
     n_tok = F.col(token_count_col).cast("long")
@@ -278,26 +270,7 @@ def length_bucket_batches(
             F.col("bucket") == F.lit(i), F.lit(max(1, batch_tokens // b))
         ).otherwise(bsize)
 
-    shard = (
-        F.pmod(F.xxhash64(F.lit(seed), F.col(id_col)), F.lit(num_shards))
-        if hash_mode == "xxhash64"
-        else F.pmod(
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat_ws(
-                            "-", F.lit(seed), F.col(id_col).cast("string")
-                        )
-                    ),
-                    1,
-                    15,
-                ),
-                16,
-                10,
-            ).cast("long"),
-            F.lit(num_shards),
-        )
-    )
+    shard = hash_bucket(seed, id_col, num_shards, hash_mode)
     base = df.select(
         F.col(id_col),
         F.when(valid, n_tok).alias("n_tokens"),
@@ -411,11 +384,10 @@ def curriculum_order(
     every oracle do.  Invalid rows
     never enter the window: the valid and invalid branches both read
     the bucketed frame, so by default it is eagerly
-    ``localCheckpoint``-ed (the :func:`~dbldatagen_spark.functions
-    .graph.pagerank` precedent) rather than re-running
-    score_buckets' histogram subtree once per branch — checkpoint
-    blocks are freed by the ContextCleaner when the returned frame
-    is garbage-collected, unlike a ``persist()`` entry that would
+    ``localCheckpoint``-ed rather than re-running score_buckets'
+    histogram subtree once per branch — checkpoint blocks are freed
+    by the ContextCleaner when the returned frame is garbage-collected
+    (``docs/USAGE.md`` §9), unlike a ``persist()`` entry that would
     sit in the session's cache registry until an explicit
     ``unpersist`` (repeated calls in a long-lived session would
     accumulate storage entries).  The trade: lineage is truncated,
@@ -457,26 +429,7 @@ def curriculum_order(
     band = (
         (F.lit(n_buckets + 1) - raw_bucket) if easy_high else raw_bucket
     )
-    shard = (
-        F.pmod(F.xxhash64(F.lit(seed), F.col(id_col)), F.lit(num_shards))
-        if hash_mode == "xxhash64"
-        else F.pmod(
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat_ws(
-                            "-", F.lit(seed), F.col(id_col).cast("string")
-                        )
-                    ),
-                    1,
-                    15,
-                ),
-                16,
-                10,
-            ).cast("long"),
-            F.lit(num_shards),
-        )
-    )
+    shard = hash_bucket(seed, id_col, num_shards, hash_mode)
     base = bucketed.select(
         F.col(id_col),
         band.cast("int").alias(bucket_col),
@@ -488,7 +441,7 @@ def curriculum_order(
         # read the materialized blocks, and the ContextCleaner frees
         # them once the returned frame is unreachable — a persist()
         # here would leak a cache-registry entry per call (see
-        # docstring; pagerank's localCheckpoint precedent)
+        # docstring)
         base = base.localCheckpoint(eager=True)
     w = Window.partitionBy(bucket_col, "shard").orderBy(
         F.col("_ord"), F.col(id_col)

@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from dbldatagen_spark.functions._hashing import check_hash_mode, md5_60
+
 
 def contrastive_negatives(
     df: DataFrame,
@@ -56,19 +58,14 @@ def contrastive_negatives(
         raise ValueError(f"k must be >= 1, got {k}")
     if num_buckets < 1:
         raise ValueError(f"num_buckets must be >= 1, got {num_buckets}")
+    check_hash_mode(hash_mode)
     sid = F.col(id_col).cast("string")
     if hash_mode == "md5":
-        bucket_hash = F.conv(
-            F.substring(F.md5(F.concat_ws("-", F.lit(seed), sid)), 1, 15),
-            16,
-            10,
-        ).cast("long")
+        bucket_hash = md5_60(F.concat_ws("-", F.lit(seed), sid))
         order_key = F.md5(F.concat_ws("-", F.lit(seed + 1), sid))
-    elif hash_mode == "xxhash64":
+    else:
         bucket_hash = F.abs(F.xxhash64(F.lit(seed), sid))
         order_key = F.xxhash64(F.lit(seed + 1), sid).cast("string")
-    else:
-        raise ValueError(f"hash_mode must be md5|xxhash64, got {hash_mode!r}")
 
     base = df.select(
         F.col(id_col).alias("_id"),

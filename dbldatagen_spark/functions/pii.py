@@ -21,6 +21,7 @@ from typing import Dict, Optional, Sequence, Tuple
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from dbldatagen_spark.functions._hashing import md5_60
 from dbldatagen_spark.functions._parallel import ensure_parallelism
 
 # A real IPv4 octet: 0-255 with no leading-zero tolerance beyond "0"
@@ -177,7 +178,7 @@ def dp_noisy_counts(
     key = F.concat_ws(
         "-", F.lit(seed), *[F.col(c).cast("string") for c in group_cols]
     )
-    hv = F.conv(F.substring(F.md5(key), 1, 15), 16, 10).cast("long")
+    hv = md5_60(key)
     # u in (0, 1): never 0 or 1, so both log args stay positive
     u = (hv.cast("double") + F.lit(0.5)) / F.lit(float(1 << 60))
     b = F.lit(1.0 / float(epsilon))

@@ -22,47 +22,11 @@ from typing import Optional
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-
-def _ppm_bucket_expr(seed: int, id_col: str, hash_mode: str) -> "F.Column":
-    """The repo's ONE deterministic ``[0, 1e6)`` id-hash bucket — the
-    engine-portability contract every ppm-rate sampler shares
-    (:func:`split_assign`, :func:`mix_corpus`,
-    :func:`authority_weighted_sample`,
-    :func:`distribution_matched_sample` all compare this bucket
-    against per-million thresholds).  ``hash_mode="xxhash64"`` is the
-    cheap JVM variant; ``"md5"`` derives the bucket from the first 15
-    hex digits of ``md5("<seed>-<id>")`` (60 bits — inside long range
-    for ``conv``) so any engine with an md5 function replays the keep
-    decision bit-for-bit.  Partitioning-independent by construction:
-    the hash reads only (seed, id), never partition or row position.
-
-    The expression form is frozen — oracles replay it verbatim as
-    ``pmod(conv(substring(md5(concat_ws('-', seed, id)), 1, 15), 16,
-    10), 1000000)`` — so any change here is a cross-engine contract
-    break, not a refactor.
-    """
-    if hash_mode == "xxhash64":
-        return F.pmod(
-            F.xxhash64(F.lit(seed), F.col(id_col)), F.lit(1_000_000)
-        )
-    if hash_mode == "md5":
-        return F.pmod(
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat_ws(
-                            "-", F.lit(seed), F.col(id_col).cast("string")
-                        )
-                    ),
-                    1,
-                    15,
-                ),
-                16,
-                10,
-            ).cast("long"),
-            F.lit(1_000_000),
-        )
-    raise ValueError(f"hash_mode must be xxhash64|md5, got {hash_mode!r}")
+from dbldatagen_spark.functions._hashing import (
+    check_hash_mode,
+    hash_bucket,
+    md5_uniform,
+)
 
 
 def deterministic_sample(
@@ -128,7 +92,7 @@ def split_assign(
     total = float(sum(fractions.values()))
     if total <= 0:
         raise ValueError("fractions must sum to a positive value")
-    bucket = _ppm_bucket_expr(seed, id_col, hash_mode)
+    bucket = hash_bucket(seed, id_col, 1_000_000, hash_mode)
     names = list(fractions)
     cum = 0.0
     expr = F.lit(names[-1])
@@ -180,7 +144,7 @@ def mix_corpus(
     for s, r in weights.items():
         if r < 0:
             raise ValueError(f"weight for {s!r} must be >= 0, got {r}")
-    bucket = _ppm_bucket_expr(seed, id_col, hash_mode)
+    bucket = hash_bucket(seed, id_col, 1_000_000, hash_mode)
 
     # copies(source) = floor(rate) + (bucket < frac(rate)*1e6)
     n_copies = F.lit(0)
@@ -229,13 +193,9 @@ def quota_sample(
     """
     if max_per_group < 1:
         raise ValueError(f"max_per_group must be >= 1, got {max_per_group}")
+    check_hash_mode(hash_mode)
     sid = F.col(id_col).cast("string")
-    if hash_mode == "md5":
-        priority = F.md5(sid)
-    elif hash_mode == "xxhash64":
-        priority = F.xxhash64(sid)
-    else:
-        raise ValueError(f"hash_mode must be md5|xxhash64, got {hash_mode!r}")
+    priority = F.md5(sid) if hash_mode == "md5" else F.xxhash64(sid)
     w = Window.partitionBy(group_col).orderBy(priority, F.col(id_col))
     return (
         df.withColumn("_rn", F.row_number().over(w))
@@ -322,11 +282,7 @@ def weighted_sample(
     """
     if n_per_group < 1:
         raise ValueError(f"n_per_group must be >= 1, got {n_per_group}")
-    hv = F.conv(
-        F.substring(F.md5(F.col(id_col).cast("string")), 1, 15), 16, 10
-    ).cast("long")
-    # (hv + 1) / 2^60: uniform in (0, 1], never 0 so ln() is finite
-    u = (hv + F.lit(1)).cast("double") / F.lit(float(1 << 60))
+    u = md5_uniform(F.col(id_col).cast("string"))
     key = F.log(u) / F.col(weight_col).cast("double")
     w = Window.partitionBy(group_col).orderBy(
         key.desc(), F.col(id_col)
@@ -376,19 +332,9 @@ def priority_sample(
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
     groups = list(group_cols or [])
-    hv = F.conv(
-        F.substring(
-            F.md5(
-                F.concat_ws(":", F.lit(seed), F.col(id_col).cast("string"))
-            ),
-            1,
-            15,
-        ),
-        16,
-        10,
-    ).cast("long")
-    # (hv + 1) / 2^60: uniform in (0, 1], never 0
-    u = (hv + F.lit(1)).cast("double") / F.lit(float(1 << 60))
+    u = md5_uniform(
+        F.concat_ws(":", F.lit(seed), F.col(id_col).cast("string"))
+    )
     base = df.where(F.col(weight_col) > 0).select(
         *groups,
         F.col(id_col),
@@ -434,6 +380,111 @@ def priority_sample(
         F.col("_q").alias("priority"),
         F.col("tau"),
         F.greatest(F.col("_w"), F.col("tau")).alias("w_hat"),
+    )
+
+
+_ALLOC_COLS = ("_wr", "_tot", "_raw", "_base", "_frac", "_rem", "_rk")
+
+
+def _check_temperature_args(op, group_col, alpha, target_tokens, reserved):
+    """The temperature operators' construction-time argument checks.
+    ``group_col == "group"`` passes: the fertility report names its own
+    key column that."""
+    if alpha < 0:
+        raise ValueError(f"alpha must be >= 0, got {alpha}")
+    if target_tokens < 0:
+        raise ValueError(
+            f"target_tokens must be >= 0, got {target_tokens}"
+        )
+    if group_col in reserved and group_col != "group":
+        raise ValueError(
+            f"{op}: group_col {group_col!r} collides with an "
+            f"output/internal column ({sorted(reserved)}) — alias the "
+            f"group column first"
+        )
+
+
+def _alpha_pow(mass: "F.Column", alpha: float) -> "F.Column":
+    """``mass ** alpha``: ``sqrt`` at 0.5 (correctly rounded in every
+    engine), the mass itself at 1, ``1.0`` at 0, else ``pow``."""
+    if alpha == 0.5:
+        return F.sqrt(mass)
+    if alpha == 1.0:
+        return mass
+    if alpha == 0.0:
+        return F.lit(1.0)
+    return F.pow(mass, F.lit(float(alpha)))
+
+
+def _with_total(per: DataFrame, group_col: str, w_raw, cache: bool) -> DataFrame:
+    """The per-group frame plus its raw mass ``_wr`` and the normalizing
+    total ``_tot``, folded over the masses SORTED BY GROUP KEY so the IEEE
+    addition order is fixed.
+
+    The fold and the caller's main branch both read ``per``: without a
+    materialization barrier each re-executes the corpus aggregate, so
+    ``cache=True`` checkpoints it eagerly (one row per group).  Those
+    blocks are not in the session cache; the ContextCleaner frees them
+    once every frame that reads them is garbage-collected (see
+    ``docs/USAGE.md`` §9).  ``cache=False`` keeps the plan lazy and
+    lineage-recoverable, at the price of a second corpus scan."""
+    per = per.withColumn("_wr", w_raw)
+    if cache:
+        per = per.localCheckpoint(eager=True)
+    tot = per.agg(
+        F.aggregate(
+            F.array_sort(
+                F.collect_list(
+                    F.struct(F.col(group_col).alias("g"), F.col("_wr").alias("w"))
+                )
+            ),
+            F.lit(0.0),
+            lambda acc, s: acc + s["w"],
+        ).alias("_tot")
+    )
+    return per.crossJoin(F.broadcast(tot))
+
+
+def _largest_remainder(
+    per: DataFrame, group_col: str, target_tokens: int
+) -> DataFrame:
+    """``weight = _wr / _tot`` and the exact ``target_tokens`` split of
+    the Hamilton rule: floor every share, hand the leftover units to the
+    largest fractional parts, ties to the ascending group key."""
+    alloc = (
+        # an all-zero mass would make this 0/0 = NaN and (under ANSI)
+        # blow up the floor/cast below — degrade to weight 0 instead
+        # (allocation then under-fills)
+        per.withColumn(
+            "weight",
+            F.when(
+                F.col("_tot") > 0, F.col("_wr") / F.col("_tot")
+            ).otherwise(F.lit(0.0)),
+        )
+        .withColumn("_raw", F.lit(float(target_tokens)) * F.col("weight"))
+        .withColumn("_base", F.floor(F.col("_raw")).cast("long"))
+        .withColumn("_frac", F.col("_raw") - F.col("_base"))
+    )
+    # exact long sum of floors (order-independent); both windows run
+    # over one row per GROUP, not per document
+    w_all = Window.partitionBy()
+    w_rank = Window.partitionBy().orderBy(
+        F.col("_frac").desc(), F.col(group_col).asc()
+    )
+    return (
+        alloc.withColumn(
+            "_rem", F.lit(int(target_tokens)) - F.sum("_base").over(w_all)
+        )
+        .withColumn("_rk", F.row_number().over(w_rank))
+        .withColumn(
+            "target_tokens",
+            (
+                F.col("_base")
+                + F.when(F.col("_rk") <= F.col("_rem"), F.lit(1)).otherwise(
+                    F.lit(0)
+                )
+            ).cast("long"),
+        )
     )
 
 
@@ -483,49 +534,15 @@ def temperature_weights(
     :func:`~dbldatagen_spark.functions.packing.curriculum_order`
     convention).
     """
-    if alpha < 0:
-        raise ValueError(f"alpha must be >= 0, got {alpha}")
-    reserved = {"n_docs", "weight", "target_docs", "_wr", "_tot"}
-    if group_col in reserved:
-        raise ValueError(
-            f"temperature_weights: group_col {group_col!r} collides with "
-            f"an output/internal column ({sorted(reserved)}) — alias the "
-            f"group column first"
-        )
+    _check_temperature_args(
+        "temperature_weights", group_col, alpha, 0,
+        {"n_docs", "weight", "target_docs", "_wr", "_tot"},
+    )
     per = df.groupBy(group_col).agg(
         F.count(F.lit(1)).cast("long").alias("n_docs")
     )
-    n = F.col("n_docs").cast("double")
-    if alpha == 0.5:
-        w_raw = F.sqrt(n)
-    elif alpha == 1.0:
-        w_raw = n
-    elif alpha == 0.0:
-        w_raw = F.lit(1.0)
-    else:
-        w_raw = F.pow(n, F.lit(float(alpha)))
-    # eager localCheckpoint (cache=True): the normalizing fold below
-    # and the main branch BOTH read this per-group frame, and without
-    # a materialization barrier each re-executes the corpus aggregate
-    # (two full scans; Catalyst does not reuse the exchange across
-    # the fold's collect_list rewrite).  One row per group — tiny —
-    # and freed by the ContextCleaner (the pagerank precedent);
-    # cache=False keeps the plan lazy and lineage-recoverable
-    per = per.withColumn("_wr", w_raw)
-    if cache:
-        per = per.localCheckpoint(eager=True)
-    tot = per.agg(
-        F.aggregate(
-            F.array_sort(
-                F.collect_list(
-                    F.struct(F.col(group_col).alias("g"), F.col("_wr").alias("w"))
-                )
-            ),
-            F.lit(0.0),
-            lambda acc, s: acc + s["w"],
-        ).alias("_tot")
-    )
-    out = per.crossJoin(F.broadcast(tot)).withColumn(
+    w_raw = _alpha_pow(F.col("n_docs").cast("double"), alpha)
+    out = _with_total(per, group_col, w_raw, cache).withColumn(
         "weight", F.col("_wr") / F.col("_tot")
     )
     cols = [F.col(group_col), F.col("n_docs"), F.col("weight")]
@@ -583,96 +600,19 @@ def temperature_token_allocation(
     into the fully lazy, lineage-recoverable two-scan plan (see
     :func:`temperature_weights` for the trade).
     """
-    if alpha < 0:
-        raise ValueError(f"alpha must be >= 0, got {alpha}")
-    if target_tokens < 0:
-        raise ValueError(
-            f"target_tokens must be >= 0, got {target_tokens}"
-        )
-    reserved = {
-        "n_docs", "n_tokens", "weight", "target_tokens",
-        "_wr", "_tot", "_raw", "_base", "_frac", "_rem", "_rk",
-    }
-    if group_col in reserved:
-        raise ValueError(
-            f"temperature_token_allocation: group_col {group_col!r} "
-            f"collides with an output/internal column "
-            f"({sorted(reserved)}) — alias the group column first"
-        )
+    _check_temperature_args(
+        "temperature_token_allocation", group_col, alpha, target_tokens,
+        {"n_docs", "n_tokens", "weight", "target_tokens", *_ALLOC_COLS},
+    )
     per = df.groupBy(group_col).agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
         F.coalesce(F.sum(F.col(token_col).cast("long")), F.lit(0))
         .cast("long")
         .alias("n_tokens"),
     )
-    n = F.col("n_tokens").cast("double")
-    if alpha == 0.5:
-        w_raw = F.sqrt(n)
-    elif alpha == 1.0:
-        w_raw = n
-    elif alpha == 0.0:
-        w_raw = F.lit(1.0)
-    else:
-        w_raw = F.pow(n, F.lit(float(alpha)))
-    # materialization barrier (cache=True): fold + main branch share
-    # ONE corpus aggregate instead of re-executing the scan per
-    # branch (see temperature_weights; per-group frame, tiny)
-    per = per.withColumn("_wr", w_raw)
-    if cache:
-        per = per.localCheckpoint(eager=True)
-    tot = per.agg(
-        F.aggregate(
-            F.array_sort(
-                F.collect_list(
-                    F.struct(
-                        F.col(group_col).alias("g"), F.col("_wr").alias("w")
-                    )
-                )
-            ),
-            F.lit(0.0),
-            lambda acc, s: acc + s["w"],
-        ).alias("_tot")
-    )
-    alloc = (
-        per.crossJoin(F.broadcast(tot))
-        # an all-zero-token corpus would make this 0/0 = NaN and (under
-        # ANSI) blow up the floor/cast below — degrade to weight 0
-        # instead (allocation then under-fills; filter degenerate
-        # corpora upstream if the exact sum matters)
-        .withColumn(
-            "weight",
-            F.when(
-                F.col("_tot") > 0, F.col("_wr") / F.col("_tot")
-            ).otherwise(F.lit(0.0)),
-        )
-        .withColumn(
-            "_raw", F.lit(float(target_tokens)) * F.col("weight")
-        )
-        .withColumn("_base", F.floor(F.col("_raw")).cast("long"))
-        .withColumn("_frac", F.col("_raw") - F.col("_base"))
-    )
-    # largest remainder over the per-group frame: exact long sum of
-    # floors (order-independent), leftover units to the largest
-    # fractional parts, group-key ascending tiebreak — both windows
-    # run over one row per GROUP, not per document
-    w_all = Window.partitionBy()
-    w_rank = Window.partitionBy().orderBy(
-        F.col("_frac").desc(), F.col(group_col).asc()
-    )
-    alloc = (
-        alloc.withColumn(
-            "_rem", F.lit(int(target_tokens)) - F.sum("_base").over(w_all)
-        )
-        .withColumn("_rk", F.row_number().over(w_rank))
-        .withColumn(
-            "target_tokens",
-            (
-                F.col("_base")
-                + F.when(F.col("_rk") <= F.col("_rem"), F.lit(1)).otherwise(
-                    F.lit(0)
-                )
-            ).cast("long"),
-        )
+    w_raw = _alpha_pow(F.col("n_tokens").cast("double"), alpha)
+    alloc = _largest_remainder(
+        _with_total(per, group_col, w_raw, cache), group_col, target_tokens
     )
     return alloc.select(
         F.col(group_col), "n_docs", "n_tokens", "weight", "target_tokens"
@@ -744,8 +684,7 @@ def cluster_aware_split(
         raise ValueError("fractions must be non-empty")
     if float(sum(fractions.values())) <= 0:
         raise ValueError("fractions must sum to a positive value")
-    if hash_mode not in ("xxhash64", "md5"):
-        raise ValueError(f"hash_mode must be xxhash64|md5, got {hash_mode!r}")
+    check_hash_mode(hash_mode)
     from dbldatagen_spark.functions.dedup import duplicate_components
 
     comp = duplicate_components(
@@ -837,23 +776,11 @@ def fertility_token_allocation(
     into the lazy two-scan plan (the :func:`temperature_weights`
     trade).
     """
-    if alpha < 0:
-        raise ValueError(f"alpha must be >= 0, got {alpha}")
-    if target_tokens < 0:
-        raise ValueError(
-            f"target_tokens must be >= 0, got {target_tokens}"
-        )
-    reserved = {
-        "n_docs", "n_words", "n_chars", "n_tokens", "fertility",
-        "weight", "target_tokens", "group",
-        "_wr", "_tot", "_raw", "_base", "_frac", "_rem", "_rk",
-    }
-    if group_col in reserved and group_col != "group":
-        raise ValueError(
-            f"fertility_token_allocation: group_col {group_col!r} "
-            f"collides with an output/internal column "
-            f"({sorted(reserved)}) — alias the group column first"
-        )
+    _check_temperature_args(
+        "fertility_token_allocation", group_col, alpha, target_tokens,
+        {"n_docs", "n_words", "n_chars", "n_tokens", "fertility", "weight",
+         "target_tokens", "group", *_ALLOC_COLS},
+    )
     from dbldatagen_spark.functions.text_analysis import tokenizer_fertility
 
     rep = tokenizer_fertility(
@@ -861,15 +788,7 @@ def fertility_token_allocation(
         group_col=group_col, max_merges=max_merges,
         checkpoint_chunk=checkpoint_chunk,
     )
-    nw = F.col("n_words").cast("double")
-    if alpha == 0.5:
-        w_alpha = F.sqrt(nw)
-    elif alpha == 1.0:
-        w_alpha = nw
-    elif alpha == 0.0:
-        w_alpha = F.lit(1.0)
-    else:
-        w_alpha = F.pow(nw, F.lit(float(alpha)))
+    w_alpha = _alpha_pow(F.col("n_words").cast("double"), alpha)
     # ONE fixed form: w_alpha * (n_tokens / n_words) — the fertility
     # scaling IS the equity correction; zero-word groups degrade to 0
     raw = F.when(
@@ -877,54 +796,11 @@ def fertility_token_allocation(
         w_alpha
         * (F.col("n_tokens").cast("double") / F.col("n_words").cast("double")),
     ).otherwise(F.lit(0.0))
-    # materialization barrier (cache=True): the fertility report is
-    # the EXPENSIVE subtree here (the full BPE-encode corpus scan) —
-    # without it the normalizing fold and the main branch each re-run
-    # the encode (measured 5.7x vs 0.9x on the 10x probe)
-    per = rep.withColumn("_wr", raw)
-    if cache:
-        per = per.localCheckpoint(eager=True)
-    tot = per.agg(
-        F.aggregate(
-            F.array_sort(
-                F.collect_list(
-                    F.struct(F.col("group").alias("g"), F.col("_wr").alias("w"))
-                )
-            ),
-            F.lit(0.0),
-            lambda acc, s: acc + s["w"],
-        ).alias("_tot")
-    )
-    alloc = (
-        per.crossJoin(F.broadcast(tot))
-        .withColumn(
-            "weight",
-            F.when(
-                F.col("_tot") > 0, F.col("_wr") / F.col("_tot")
-            ).otherwise(F.lit(0.0)),
-        )
-        .withColumn("_raw", F.lit(float(target_tokens)) * F.col("weight"))
-        .withColumn("_base", F.floor(F.col("_raw")).cast("long"))
-        .withColumn("_frac", F.col("_raw") - F.col("_base"))
-    )
-    w_all = Window.partitionBy()
-    w_rank = Window.partitionBy().orderBy(
-        F.col("_frac").desc(), F.col("group").asc()
-    )
-    alloc = (
-        alloc.withColumn(
-            "_rem", F.lit(int(target_tokens)) - F.sum("_base").over(w_all)
-        )
-        .withColumn("_rk", F.row_number().over(w_rank))
-        .withColumn(
-            "target_tokens",
-            (
-                F.col("_base")
-                + F.when(F.col("_rk") <= F.col("_rem"), F.lit(1)).otherwise(
-                    F.lit(0)
-                )
-            ).cast("long"),
-        )
+    # the checkpoint matters most here: the fertility report is the
+    # full BPE-encode corpus scan (measured 5.7x vs 0.9x on the 10x
+    # probe without it)
+    alloc = _largest_remainder(
+        _with_total(rep, "group", raw, cache), "group", target_tokens
     )
     return alloc.select(
         "group", "n_docs", "n_words", "n_tokens",
@@ -1023,8 +899,7 @@ def authority_weighted_sample(
             f"need 0 <= base_ppm <= max_ppm <= 1000000, got "
             f"base_ppm={base_ppm}, max_ppm={max_ppm}"
         )
-    if hash_mode not in ("xxhash64", "md5"):
-        raise ValueError(f"hash_mode must be xxhash64|md5, got {hash_mode!r}")
+    check_hash_mode(hash_mode)
     if level not in ("host", "domain"):
         raise ValueError(f"level must be host|domain, got {level!r}")
     for col, side, frame in (
@@ -1151,7 +1026,7 @@ def authority_weighted_sample(
             f"({span}L * coalesce(`{out_rank}`, 0L)) div _aws_mx"
         ).cast("long")
     )
-    bucket = _ppm_bucket_expr(seed, id_col, hash_mode)
+    bucket = hash_bucket(seed, id_col, 1_000_000, hash_mode)
     return (
         joined.withColumn(out_ppm, ppm)
         .withColumn(out_keep, bucket < F.col(out_ppm))
@@ -1395,10 +1270,9 @@ def distribution_matched_sample(
         raise ValueError(
             f"scale_ppm must be in (0, 1000000], got {scale_ppm}"
         )
-    if hash_mode not in ("xxhash64", "md5"):
-        # validate BEFORE the range/histogram jobs: a typo here must
-        # not cost two corpus scans first
-        raise ValueError(f"hash_mode must be xxhash64|md5, got {hash_mode!r}")
+    # validate BEFORE the range/histogram jobs: a typo here must not
+    # cost two corpus scans first
+    check_hash_mode(hash_mode)
     ref_score_col = ref_score_col or score_col
     for frame, col, side in ((df, score_col, "df"),
                              (reference, ref_score_col, "reference")):
@@ -1494,7 +1368,7 @@ def distribution_matched_sample(
             # exact big-int floor; min() caps the importance ratio at 1
             rates.append(min(1_000_000, (scale_ppm * r_b * C) // (R * c_b)))
 
-    bucket = _ppm_bucket_expr(seed, id_col, hash_mode)
+    bucket = hash_bucket(seed, id_col, 1_000_000, hash_mode)
 
     rate_arr = F.array(*[F.lit(r).cast("long") for r in rates])
     out = df.withColumn(out_bin, _bin(score_col))

@@ -33,6 +33,8 @@ from typing import Optional, Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from dbldatagen_spark.functions._hashing import md5_60
+
 __all__ = [
     "kmv_hash_expr",
     "kmv_sketch",
@@ -61,13 +63,7 @@ def kmv_hash_expr(value: Column, *, seed: int = 0) -> Column:
     """60-bit md5-derived hash of ``value`` as a non-negative long —
     the engine-portable uniform basis (DuckDB twin:
     ``('0x' || substr(md5(seed || ':' || v), 1, 15))::BIGINT``)."""
-    return F.conv(
-        F.substring(
-            F.md5(F.concat_ws(":", F.lit(seed), value.cast("string"))), 1, 15
-        ),
-        16,
-        10,
-    ).cast("long")
+    return md5_60(F.concat_ws(":", F.lit(seed), value.cast("string")))
 
 
 def kmv_estimate_expr(sketch: Column, k: int) -> Column:
@@ -210,22 +206,11 @@ def cms_bucket_expr(
     ``width`` (DuckDB twin:
     ``('0x' || substr(md5(concat_ws(':', seed, d, v)), 1, 15))::BIGINT
     % width``)."""
-    hv = F.conv(
-        F.substring(
-            F.md5(
-                F.concat_ws(
-                    ":",
-                    F.lit(seed),
-                    depth_idx.cast("string"),
-                    value.cast("string"),
-                )
-            ),
-            1,
-            15,
-        ),
-        16,
-        10,
-    ).cast("long")
+    hv = md5_60(
+        F.concat_ws(
+            ":", F.lit(seed), depth_idx.cast("string"), value.cast("string")
+        )
+    )
     return F.pmod(hv, F.lit(width)).cast("int")
 
 
