@@ -48,6 +48,7 @@ from dbldatagen_spark.operators.sqltext import (
     bind_column,
     call,
     cast,
+    parser_scope,
     quote,
     sql_lit,
     user_sql,
@@ -1281,30 +1282,31 @@ class DataGenerator:
         current = [self.seed_column]
         if withStreaming:
             current.append("_source_timestamp")
-        for columns in self._dependency_levels():
-            level = Level()
-            added: List[str] = []
-            for c in columns:
-                with level.binding(c.name):
-                    pairs = self._column_exprs(c)
-                for out_name, text in pairs:
-                    level.add(out_name, text)
-                    added.append(out_name)
-            # withColumn-replace semantics: a spec that reuses an existing
-            # name (notably the seed column — reference
-            # data_generator.py:1043-1044 warns and overrides) replaces the
-            # prior column instead of producing an ambiguous duplicate. The
-            # new expression is still computed against the pre-select frame,
-            # so an overriding `id` spec draws from the raw seed. A level
-            # that replaces nothing keeps `*`: py4j sends a list one item
-            # per command, so naming every carried column per level would
-            # make a chain of levels quadratic in commands.
-            keep = [n for n in current if n not in added]
-            if len(keep) == len(current):
-                df = level.apply(df)
-            else:
-                df = level.apply(df, [quote(n) for n in keep])
-            current = keep + added
+        with parser_scope(self.spark):
+            for columns in self._dependency_levels():
+                level = Level()
+                added: List[str] = []
+                for c in columns:
+                    with level.binding(c.name):
+                        pairs = self._column_exprs(c)
+                    for out_name, text in pairs:
+                        level.add(out_name, text)
+                        added.append(out_name)
+                # withColumn-replace semantics: a spec that reuses an existing
+                # name (notably the seed column — reference
+                # data_generator.py:1043-1044 warns and overrides) replaces the
+                # prior column instead of producing an ambiguous duplicate. The
+                # new expression is still computed against the pre-select frame,
+                # so an overriding `id` spec draws from the raw seed. A level
+                # that replaces nothing keeps `*`: py4j sends a list one item
+                # per command, so naming every carried column per level would
+                # make a chain of levels quadratic in commands.
+                keep = [n for n in current if n not in added]
+                if len(keep) == len(current):
+                    df = level.apply(df)
+                else:
+                    df = level.apply(df, [quote(n) for n in keep])
+                current = keep + added
         # constraints: transforms then one fused where
         for c in self._constraints:
             df = c.transform(df)

@@ -19,30 +19,49 @@ Scale design (the point of each operator at 100 TB):
   16-bit band (4 tables), verified by Hamming distance.
 * **embedding cosine**: random-hyperplane LSH bucketing bounds the
   pairwise cosine step; brute-force path kept for small/oracle use.
+
+The shared kernels (:func:`exact_dedup`, :func:`shingled_df`, the
+MinHash hashing and banding, :func:`_self_pairs`, :func:`_shingle_overlap`,
+:func:`_blocked_posting`, :func:`_verified_jaccard` and the label
+propagation of :func:`duplicate_components`) build Spark SQL *text*, as
+the generation builders do (see :mod:`dbldatagen_spark.operators.sqltext`):
+in PySpark classic every ``F.*`` call is several py4j round trips, while
+one ``selectExpr``, ``F.expr`` or join condition per step is one parse.
+Catalyst parses the text into the same expression trees, so optimized
+plans and data are unchanged.  Identifiers go through ``sqltext.quote``
+and literals through ``sqltext.sql_lit``, which types them as ``F.lit``
+does.
 """
 
 from __future__ import annotations
 
 import re
-from functools import reduce
 from typing import List, Optional, Sequence
 
 from pyspark import StorageLevel
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from dbldatagen_spark.functions import _materialize
 from dbldatagen_spark.functions._hashing import check_hash_mode, md5_60
 from dbldatagen_spark.functions._parallel import ensure_parallelism
+from dbldatagen_spark.operators.sqltext import quote, sql_lit
 
 # Fixed 64-bit odd constant: the i-th minhash permutation is xxhash64
 # salted with an odd multiple of it (see minhash_signature_exprs).
 _MH_SEED_A = 0x9E3779B97F4A7C15
 
+_WHITESPACE = sql_lit(r"\s+")
+
 
 def normalize_text_expr(text: Column) -> Column:
     """Canonical form for dedup hashing: trim, collapse whitespace, lower."""
     return F.lower(F.regexp_replace(F.trim(text), r"\s+", " "))
+
+
+def _normalized_sql(text: str) -> str:
+    """:func:`normalize_text_expr` as SQL text over the operand ``text``."""
+    return f"lower(regexp_replace(trim({text}), {_WHITESPACE}, ' '))"
 
 
 def exact_dedup(
@@ -59,20 +78,19 @@ def exact_dedup(
     Only ``(sha256(text), id)`` enters the shuffle; the full text stays in
     its source partition.
     """
-    content = F.col(text_col)
+    content = quote(text_col)
     if normalize:
-        content = normalize_text_expr(content)
-    keyed = df.select(
-        F.sha2(content, 256).alias("_content_key"), F.col(id_col).alias(id_col)
-    )
-    keep_fn = F.min if keep == "min" else F.max
+        content = _normalized_sql(content)
+    idq = quote(id_col)
+    keep_fn = "min" if keep == "min" else "max"
     return (
-        keyed.groupBy("_content_key")
+        df.selectExpr(f"sha2({content}, 256) AS _content_key", idq)
+        .groupBy("_content_key")
         .agg(
-            keep_fn(id_col).alias(id_col),
-            F.count(F.lit(1)).cast("long").alias("dup_count"),
+            F.expr(f"{keep_fn}({idq}) AS {idq}"),
+            F.expr("CAST(count(1) AS BIGINT) AS dup_count"),
         )
-        .select(id_col, "dup_count")
+        .selectExpr(idq, "dup_count")
     )
 
 
@@ -81,7 +99,9 @@ def word_shingles_expr(text: Column, k: int = 3) -> Column:
 
     Pure expression: split → ``transform`` over a 0..n-k index sequence →
     ``array_distinct``; no UDF. Empty/short docs yield the whole text as a
-    single shingle so they still participate.
+    single shingle so they still participate.  The ``Column`` twin of
+    :func:`_shingles_from_words`, for callers holding a ``Column``; the
+    two build the same expression tree.
 
     Performance caveat: expressions inside higher-order-function lambdas
     are exempt from codegen subexpression elimination, so the ``split``
@@ -90,15 +110,7 @@ def word_shingles_expr(text: Column, k: int = 3) -> Column:
     array in its own projection first (~40x fewer regex splits per row).
     """
     words = F.split(F.trim(text), r"\s+")
-    return _shingles_from_words(words, k)
-
-
-def _shingles_from_words(words: Column, k: int) -> Column:
-    n = F.size(words)
-    idx = F.sequence(F.lit(0), F.greatest(n - F.lit(k), F.lit(0)))
-    # try_element_at: a text shorter than k words indexes past the end
-    # (its single truncated shingle comes from concat_ws skipping the
-    # NULLs) — plain element_at THROWS there under ANSI mode
+    idx = F.sequence(F.lit(0), F.greatest(F.size(words) - F.lit(k), F.lit(0)))
     shingle = F.transform(
         idx,
         lambda i: F.concat_ws(
@@ -112,16 +124,30 @@ def _shingles_from_words(words: Column, k: int) -> Column:
     return F.array_distinct(shingle)
 
 
+def _shingles_from_words(words: str, k: int) -> str:
+    """SQL text: the distinct k-word shingles of the word array ``words``
+    (an operand), as :func:`word_shingles_expr` builds them."""
+    # try_element_at: a text shorter than k words indexes past the end
+    # (its single truncated shingle comes from concat_ws skipping the
+    # NULLs) — plain element_at THROWS there under ANSI mode
+    elems = ", ".join(
+        f"try_element_at({words}, CAST(x + {j + 1} AS INT))" for j in range(k)
+    )
+    return (
+        f"array_distinct(transform(sequence(0, greatest(size({words}) - {k}, 0)), "
+        f"x -> concat_ws(' ', {elems})))"
+    )
+
+
 def shingled_df(df: DataFrame, id_col: str, text_col: str, k: int = 3) -> DataFrame:
     """``(id, shingles)`` DataFrame with the word split materialized in a
     separate projection. Because the word array is referenced multiple
     times downstream, Catalyst's CollapseProject keeps the projections
     apart and the regex split runs exactly once per row."""
-    words = F.split(F.trim(F.col(text_col)), r"\s+")
-    with_words = df.select(F.col(id_col), words.alias("_words"))
-    return with_words.select(
-        F.col(id_col), _shingles_from_words(F.col("_words"), k).alias("shingles")
-    )
+    idq = quote(id_col)
+    return df.selectExpr(
+        idq, f"split(trim({quote(text_col)}), {_WHITESPACE}) AS _words"
+    ).selectExpr(idq, f"{_shingles_from_words('_words', k)} AS shingles")
 
 
 DEFAULT_MAX_CANDIDATE_PAIRS = 50_000_000
@@ -153,9 +179,7 @@ def _candidate_density_guard(
             f"max_candidate_pairs must be >= 1, got {max_candidate_pairs}"
         )
     est_row = dfreq.agg(
-        F.sum(F.col("_df") * (F.col("_df") - F.lit(1)) / F.lit(2))
-        .cast("long")
-        .alias("_est")
+        F.expr("CAST(sum(_df * (_df - 1) / 2) AS BIGINT) AS _est")
     ).collect()[0]
     est = int(est_row["_est"] or 0)
     if est > max_candidate_pairs:
@@ -197,9 +221,10 @@ def _blocked_posting(
     """
     if max_posting_len is not None and max_posting_len < 2:
         raise ValueError("max_posting_len must be >= 2")
-    dfreq = posting.groupBy(key_col).agg(F.count(F.lit(1)).alias("_df"))
+    dfreq = posting.groupBy(key_col).agg(F.expr("count(1) AS _df"))
+    key = quote(key_col)
     if max_posting_len is not None:
-        dfreq = dfreq.where(F.col("_df") <= max_posting_len)
+        dfreq = dfreq.where(f"_df <= {sql_lit(max_posting_len)}")
         if max_candidate_pairs is not None:
             dfreq = dfreq.persist()
             try:
@@ -217,10 +242,10 @@ def _blocked_posting(
                 with contextlib.suppress(Exception):
                     dfreq.unpersist(blocking=True)
                 raise
-            return posting.join(dfreq.select(key_col), key_col)
+            return posting.join(dfreq.selectExpr(key), key_col)
     _candidate_density_guard(dfreq, max_candidate_pairs, op_name)
     if max_posting_len is not None:
-        return posting.join(dfreq.select(key_col), key_col)
+        return posting.join(dfreq.selectExpr(key), key_col)
     return posting
 
 
@@ -231,16 +256,14 @@ def _self_pairs(
     equi-self-join of ``frame`` on ``keys`` with ``id_a < id_b``, one row
     per (pair, shared key).  The pair kernel of the dedup family; each
     caller adds its own ``distinct``, count or verification on top."""
-    a, b = frame.alias("a"), frame.alias("b")
-    cond = reduce(
-        Column.__and__,
-        [F.col(f"a.{k}") == F.col(f"b.{k}") for k in keys]
-        + [F.col(f"a.{id_col}") < F.col(f"b.{id_col}")],
+    idq = quote(id_col)
+    cond = " AND ".join(
+        [f"a.{quote(k)} = b.{quote(k)}" for k in keys] + [f"a.{idq} < b.{idq}"]
     )
-    return a.join(b, cond).select(
-        F.col(f"a.{id_col}").alias("id_a"),
-        F.col(f"b.{id_col}").alias("id_b"),
-        *[F.col(f"{s}.{c}").alias(f"{c}{s}") for c in carry for s in "ab"],
+    return frame.alias("a").join(frame.alias("b"), F.expr(cond)).selectExpr(
+        f"a.{idq} AS id_a",
+        f"b.{idq} AS id_b",
+        *[f"{s}.{quote(c)} AS {quote(c + s)}" for c in carry for s in "ab"],
     )
 
 
@@ -288,9 +311,9 @@ def _shingle_overlap(
     # outputs never do) — a site whose arrays can hold NULL elements would
     # silently drop rows plain explode kept.  Pinned by
     # tests/test_functions.py::test_explode_outer_null_element_invariant.
-    posting = shingled.select(
-        F.col(id_col), F.explode_outer("shingles").alias("_sh")
-    ).where(F.col("_sh").isNotNull())
+    posting = shingled.selectExpr(
+        quote(id_col), "explode_outer(shingles) AS _sh"
+    ).where("_sh IS NOT NULL")
     blocking = _blocked_posting(
         posting, "_sh", max_posting_len, max_candidate_pairs, op_name
     )
@@ -310,15 +333,15 @@ def _shingle_overlap(
         # path's min() aggregate provides; the residual metric
         # arithmetic is integer scalar math, harmless to re-evaluate.
         common = pairs.groupBy("id_a", "id_b").agg(
-            F.count(F.lit(1)).cast("long").alias("n_common")
+            F.expr("CAST(count(1) AS BIGINT) AS n_common")
         )
-        sizes = shingled.select(
-            F.col(id_col), F.size("shingles").cast("long").alias("_n")
+        sizes = shingled.selectExpr(
+            quote(id_col), "CAST(size(shingles) AS BIGINT) AS _n"
         )
         out = common.join(sizes.toDF("id_a", "n_a"), "id_a").join(
             sizes.toDF("id_b", "n_b"), "id_b"
         )
-        return out.select("id_a", "id_b", "n_common", "n_a", "n_b")
+        return out.selectExpr("id_a", "id_b", "n_common", "n_a", "n_b")
     # the per-pair counts live inside an aggregate over the (already
     # unique) pair keys: a predicate cannot push through an Aggregate's
     # non-grouping output, so a caller's threshold filter stays ABOVE this
@@ -335,11 +358,11 @@ def _shingle_overlap(
         .join(shingled.toDF("id_b", "_sh_b"), "id_b")
         .groupBy("id_a", "id_b")
         .agg(
-            F.min(
-                F.size(F.array_intersect("_sh_a", "_sh_b")).cast("long")
-            ).alias("n_common"),
-            F.min(F.size("_sh_a").cast("long")).alias("n_a"),
-            F.min(F.size("_sh_b").cast("long")).alias("n_b"),
+            F.expr(
+                "min(CAST(size(array_intersect(_sh_a, _sh_b)) AS BIGINT)) AS n_common"
+            ),
+            F.expr("min(CAST(size(_sh_a) AS BIGINT)) AS n_a"),
+            F.expr("min(CAST(size(_sh_b) AS BIGINT)) AS n_b"),
         )
     )
 
@@ -379,14 +402,12 @@ def ngram_jaccard_pairs(
         shingled, id_col, max_posting_len, max_candidate_pairs,
         "ngram_jaccard_pairs",
     )
-    inter = F.col("n_common")
     return (
-        overlap.withColumn(
-            "jaccard",
-            F.round(inter / (F.col("n_a") + F.col("n_b") - inter), 4),
+        overlap.selectExpr(
+            "*", "round(n_common / (n_a + n_b - n_common), 4) AS jaccard"
         )
-        .where(F.col("jaccard") >= F.lit(threshold))
-        .select("id_a", "id_b", "jaccard")
+        .where(f"jaccard >= {sql_lit(threshold)}")
+        .selectExpr("id_a", "id_b", "jaccard")
     )
 
 
@@ -421,21 +442,21 @@ def _mh_salt(i: int) -> int:
 
 
 def _minhash_band_exprs(hash_col: str, num_hashes: int, bands: int):
-    """``(signature, band_keys)``: the ``_sig`` array of the pre-hashed
-    :func:`minhash_signature_exprs` over ``hash_col``, and one bucket key
-    per band, ``xxhash64(band index, that band's _sig entries)`` — which
-    reads ``_sig``, so it goes in a projection above the signature's.
+    """``(signature, band_keys)`` as SQL text: the signature array of the
+    pre-hashed :func:`minhash_signature_exprs` over ``hash_col``, and one
+    bucket key per band, ``xxhash64(band index, that band's _sig
+    entries)`` — which reads the signature as ``_sig``, so it goes in a
+    projection above the signature's.
 
-    Each is ONE parsed SQL expression: built from Column objects they
-    cost a few py4j calls per hash and band element (~3,200 for one
-    64-hash call).  ``xxhash64`` hashes ``int`` and ``bigint``
-    differently; the SQL parser types an unsuffixed integer as ``F.lit``
-    does (``int`` inside the int32 range, ``bigint`` outside), so the
-    keys stay bit-identical — pinned by a golden-value test, since any
+    Built from Column objects they cost a few py4j calls per hash and
+    band element (~3,200 for one 64-hash call).  ``xxhash64`` hashes
+    ``int`` and ``bigint`` differently; the SQL parser types an
+    unsuffixed integer as ``F.lit`` does (``int`` inside the int32 range,
+    ``bigint`` outside), so the keys stay bit-identical — pinned by a golden-value test, since any
     drift would move every LSH bucket."""
     rows = num_hashes // bands
     sig = ", ".join(
-        f"array_min(transform(`{hash_col}`, s -> xxhash64({_mh_salt(i)}, s)))"
+        f"array_min(transform({quote(hash_col)}, s -> xxhash64({_mh_salt(i)}, s)))"
         for i in range(num_hashes)
     )
     keys = ", ".join(
@@ -444,7 +465,7 @@ def _minhash_band_exprs(hash_col: str, num_hashes: int, bands: int):
         + ")"
         for b in range(bands)
     )
-    return F.expr(f"array({sig})").alias("_sig"), F.expr(f"array({keys})")
+    return f"array({sig})", f"array({keys})"
 
 
 def _hashed_shingles(
@@ -453,9 +474,9 @@ def _hashed_shingles(
     """``(id_out, hash_out)``: each doc's distinct k-shingles, each string
     hashed exactly once; the separate projection is a CollapseProject
     barrier (the hash array is referenced num_hashes times)."""
-    return shingled_df(ensure_parallelism(df), id_col, text_col, k).select(
-        F.col(id_col).alias(id_out),
-        F.transform(F.col("shingles"), lambda s: F.xxhash64(s)).alias(hash_out),
+    return shingled_df(ensure_parallelism(df), id_col, text_col, k).selectExpr(
+        f"{quote(id_col)} AS {quote(id_out)}",
+        f"transform(shingles, x -> xxhash64(x)) AS {quote(hash_out)}",
     )
 
 
@@ -465,16 +486,15 @@ def _lsh_buckets(
     """``(id_col, _band, _key)`` rows: one LSH bucket key per band of
     each row's MinHash signature (see :func:`_minhash_band_exprs`)."""
     sig, band_keys = _minhash_band_exprs(hash_col, num_hashes, bands)
+    idq = quote(id_col)
     # one array column, not num_hashes columns: >100 output fields would
     # trip spark.sql.codegen.maxFields and silently drop whole-stage
     # codegen.  Separate projections: _sig is referenced num_hashes times,
     # so CollapseProject keeps the signature evaluated once per row
     return (
-        hashed.select(F.col(id_col), sig)
-        .select(
-            F.col(id_col), F.posexplode_outer(band_keys).alias("_band", "_key")
-        )
-        .where(F.col("_key").isNotNull())
+        hashed.selectExpr(idq, f"{sig} AS _sig")
+        .selectExpr(idq, f"posexplode_outer({band_keys}) AS (_band, _key)")
+        .where("_key IS NOT NULL")
     )
 
 
@@ -627,20 +647,19 @@ def _verified_jaccard(
     intersect+union once more per candidate.  Singleton groups, so
     min() is the value itself."""
     (ka, ha), (kb, hb) = left.columns, right.columns
+    ha, hb = quote(ha), quote(hb)
     return (
         candidates.join(left, ka)
         .join(right, kb)
         .groupBy(ka, kb)
         .agg(
-            F.min(
-                F.round(
-                    F.size(F.array_intersect(ha, hb)) / F.size(F.array_union(ha, hb)),
-                    4,
-                )
-            ).alias("jaccard")
+            F.expr(
+                f"min(round(size(array_intersect({ha}, {hb})) / "
+                f"size(array_union({ha}, {hb})), 4)) AS jaccard"
+            )
         )
-        .where(F.col("jaccard") >= F.lit(threshold))
-        .select(ka, kb, "jaccard")
+        .where(f"jaccard >= {sql_lit(threshold)}")
+        .selectExpr(quote(ka), quote(kb), "jaccard")
     )
 
 
@@ -699,9 +718,9 @@ def minhash_near_duplicates(
             raise ValueError("max_bucket_len must be >= 2")
         keep = (
             buckets.groupBy("_band", "_key")
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .where(F.col("_n") <= max_bucket_len)
-            .select("_band", "_key")
+            .agg(F.expr("count(1) AS _n"))
+            .where(f"_n <= {sql_lit(max_bucket_len)}")
+            .selectExpr("_band", "_key")
         )
         buckets = buckets.join(keep, ["_band", "_key"])
     candidates = _self_pairs(buckets, ["_band", "_key"], id_col).distinct()
@@ -1306,10 +1325,12 @@ def duplicate_components(
     near-cliques): on a clique the initial labels are final and one
     confirming round runs; ``max_iterations`` only guards pathological
     chains; a run it cuts off has had the initial hop on top of its
-    ``max_iterations`` rounds, one hop more than the cap suggests. Each
-    superseded round checkpoint is released once the next is
-    materialized, and the persisted edges on every path; only the
-    returned frame's checkpoint stays.
+    ``max_iterations`` rounds, one hop more than the cap suggests.
+    Convergence costs no job of its own: an ``Observation`` on each
+    round's frame counts the changed labels while that round's
+    checkpoint materializes it.  Each superseded round checkpoint is
+    released once the next is materialized, and the persisted edges on
+    every path; only the returned frame's checkpoint stays.
 
     Checkpointing: ``checkpoint_dir=None`` takes ``localCheckpoint``s;
     a path takes reliable checkpoints under it for the duration of the
@@ -1328,59 +1349,54 @@ def _propagate_components(
     reliable: bool,
 ) -> DataFrame:
     """Min-label propagation loop of :func:`duplicate_components`."""
-    edges = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
+    edges = pairs.selectExpr(f"{quote(id_a)} AS src", f"{quote(id_b)} AS dst")
     # no distinct: a duplicate edge cannot change a min
-    edges = edges.union(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).persist()
+    edges = edges.union(edges.selectExpr("dst AS src", "src AS dst")).persist()
     labels = None
     try:
         # the first neighbor-min hop doubles as the vertex scan
         labels = _materialize.checkpoint(
             edges.groupBy("src")
-            .agg(F.min("dst").alias("_nbr_min"))
-            .select(
-                F.col("src").alias("vertex"),
-                F.least("src", "_nbr_min").alias("component"),
-            ),
+            .agg(F.expr("min(dst) AS _nbr_min"))
+            .selectExpr("src AS vertex", "least(src, _nbr_min) AS component"),
             reliable,
         )
         for _ in range(max_iterations):
             nbr = (
-                edges.join(labels, edges["dst"] == labels["vertex"])
+                edges.join(labels, F.expr("dst = vertex"))
                 .groupBy("src")
-                .agg(F.min("component").alias("_nbr_min"))
+                .agg(F.expr("min(component) AS _nbr_min"))
             )
-            stepped = labels.join(
-                nbr, labels["vertex"] == nbr["src"], "left"
-            ).select(
-                labels["vertex"],
-                # least() skips NULLs: no coalesce needed for the left join
-                F.least(labels["component"], "_nbr_min").alias("component"),
-                # thread the pre-step label through so convergence reads
-                # off the checkpointed rows themselves
-                labels["component"].alias("_prev"),
+            # least() skips NULLs: no coalesce needed for the left join;
+            # _prev threads the pre-step label through to the round's
+            # convergence count
+            stepped = labels.join(nbr, F.expr("vertex = src"), "left").selectExpr(
+                "vertex",
+                "least(component, _nbr_min) AS component",
+                "component AS _prev",
             )
             # pointer jumping (component ids are vertices): one extra hop
             # per round, through the materialized labels — a self-join of
             # `stepped` would run the edge join and aggregate twice
-            x, y = stepped.alias("x"), labels.alias("y")
-            jumped = x.join(
-                y, F.col("x.component") == F.col("y.vertex"), "left"
-            ).select(
-                F.col("x.vertex").alias("vertex"),
-                F.least("x.component", "y.component").alias("component"),
-                F.col("x._prev").alias("_prev"),
+            jumped = stepped.alias("x").join(
+                labels.alias("y"), F.expr("x.component = y.vertex"), "left"
+            ).selectExpr(
+                "x.vertex AS vertex",
+                "least(x.component, y.component) AS component",
+                "x._prev AS _prev",
             )
-            jumped = _materialize.checkpoint(jumped, reliable)
+            # the checkpoint's own job counts the changed labels as it
+            # materializes them: convergence needs no probe job
+            changed = Observation()
+            jumped = _materialize.checkpoint(
+                jumped.observe(changed, F.expr("count_if(component != _prev) AS n")),
+                reliable,
+            )
             _materialize.release(labels)
             labels = jumped
-            # the convergence probe is a limit-1 scan of the blocks the
-            # checkpoint just materialized
-            changed = labels.where(F.col("component") != F.col("_prev"))
-            if changed.limit(1).count() == 0:
+            if changed.get["n"] == 0:
                 break
-        return labels.select("vertex", "component")
+        return labels.selectExpr("vertex", "component")
     except BaseException:
         if labels is not None:
             _materialize.release(labels)

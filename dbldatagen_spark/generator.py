@@ -53,6 +53,7 @@ from dbldatagen_spark.operators.sqltext import (
     Level,
     bind_column,
     cast,
+    parser_scope,
     quote,
     sql_lit,
     user_sql,
@@ -266,13 +267,14 @@ def generate_table(
     df = spark.range(0, int(table.rows), numPartitions=partitions)
     df = df.withColumnRenamed("id", ROW_ID_COL)
     id_col = quote(ROW_ID_COL)
-    for level_cols in _dependency_levels(table):
-        level = Level()
-        for c in level_cols:
-            with level.binding(c.name):
-                text = build_column_expr(c, table_seed, table.name, id_col, plan=plan)
-            level.add(c.name, text)
-        df = level.apply(df)
+    with parser_scope(spark):
+        for level_cols in _dependency_levels(table):
+            level = Level()
+            for c in level_cols:
+                with level.binding(c.name):
+                    text = build_column_expr(c, table_seed, table.name, id_col, plan=plan)
+                level.add(c.name, text)
+            df = level.apply(df)
     return df.selectExpr(*[quote(c.name) for c in table.columns])
 
 

@@ -14,7 +14,9 @@ This module holds what every builder shares:
 * :func:`quote` backquotes an identifier;
 * :func:`user_sql` embeds a user's SQL expression as one operand, keeping
   the ``F.expr`` contract (a trailing ``--`` comment works, an alias is
-  allowed, malformed text raises ``ParseException``);
+  allowed, malformed text raises ``ParseException``); inside
+  :func:`parser_scope` every call of one build shares one handle on the
+  session's SQL parser;
 * :class:`Level` collects one dependency level and applies it with one
   ``selectExpr``.  The only ``Column`` pieces left are pandas-UDF text
   columns and a registered distribution's ``unit_expr``; a builder hands
@@ -42,6 +44,10 @@ _INT64 = 1 << 63
 # (output column name, [(bound name, Column)]) of the column being compiled
 _SCOPE: contextvars.ContextVar[Optional[Tuple[str, list]]] = contextvars.ContextVar(
     "dbldatagen_spark_sql_scope", default=None
+)
+# [session, its SQL parser once fetched] of the build being compiled
+_PARSER: contextvars.ContextVar[Optional[list]] = contextvars.ContextVar(
+    "dbldatagen_spark_sql_parser", default=None
 )
 
 
@@ -107,6 +113,28 @@ def case_when(cond: str, then: str, otherwise: str) -> str:
     return f"CASE WHEN {cond} THEN {then} ELSE {otherwise} END"
 
 
+@contextlib.contextmanager
+def parser_scope(spark: SparkSession) -> Iterator[None]:
+    """One build: the :func:`user_sql` calls inside the block share one
+    handle on ``spark``'s SQL parser, fetched on first use: the py4j
+    round trips that reach it run once per build, not once per
+    expression."""
+    token = _PARSER.set([spark, None])
+    try:
+        yield
+    finally:
+        _PARSER.reset(token)
+
+
+def _sql_parser():
+    scope = _PARSER.get()
+    if scope is None:
+        return SparkSession.active()._jsparkSession.sessionState().sqlParser()
+    if scope[1] is None:
+        scope[1] = scope[0]._jsparkSession.sessionState().sqlParser()
+    return scope[1]
+
+
 def user_sql(text: str) -> str:
     """A user's SQL expression (``ExpressionColumn``, v0 ``expr=``) as one
     parenthesized operand, under ``F.expr``'s contract.  The session's SQL
@@ -115,9 +143,8 @@ def user_sql(text: str) -> str:
     cut off, since the column's own name replaces it, as it did over
     ``F.expr``.  The closing parenthesis sits on its own line, so a
     trailing ``--`` comment cannot swallow it."""
-    parser = SparkSession.active()._jsparkSession.sessionState().sqlParser()
-    parsed = parser.parseExpression(text)
-    if parsed.getClass().getSimpleName() == "Alias":
+    parsed = _sql_parser().parseExpression(text)
+    if parsed.nodeName() == "Alias":
         # the parser's origin indexes count UTF-16 code units
         origin = parsed.child().origin()
         units = text.encode("utf-16-le")

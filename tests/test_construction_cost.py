@@ -8,6 +8,13 @@ build (memory-management commands excluded); the bounds leave headroom
 over the measured 114 (star) and 336 (v0 text, of which the four
 pandas-UDF columns are most) while catching any return to one ``F.*``
 call per node (4,557 and 917 before the change).
+
+The dedup kernels build SQL text too, one ``selectExpr``, ``F.expr`` or
+join condition per step.  Through the ``Column`` API ``exact_dedup``
+sent 146 commands, ``minhash_near_duplicates`` (32 hashes, 16 bands)
+784, ``ngram_jaccard_pairs(max_posting_len=None)`` 868 and
+``duplicate_components`` over 50 3-cliques 488 (its eager jobs and the
+per-round probe job included); as text they send 35, 117, 156 and 117.
 """
 
 import contextlib
@@ -17,6 +24,12 @@ from py4j.protocol import CALL_COMMAND_NAME, MEMORY_COMMAND_NAME
 from pyspark.errors import ParseException
 
 import dbldatagen_spark as dg
+from dbldatagen_spark.functions.dedup import (
+    duplicate_components,
+    exact_dedup,
+    minhash_near_duplicates,
+    ngram_jaccard_pairs,
+)
 from dbldatagen_spark.generator import generate_table
 
 
@@ -143,12 +156,15 @@ def test_v0_chained_build_is_linear_in_py4j_commands(spark):
     one list item, instead of naming each one: py4j sends a list one
     ``add`` per item, so 42 chained levels sent 1,572 commands (987 of
     them ``add``) when every level named its carried columns; 711
-    (126 ``add``) now."""
+    (126 ``add``) when only ``*`` was carried."""
     chained_generator(spark, 42).build()
     with count_py4j(spark) as sent:
         df = chained_generator(spark, 42).build()
-    assert len(sent) <= 900, len(sent)
+    assert len(sent) <= 500, len(sent)
     assert sent.count("add") <= 4 * 42, sent.count("add")
+    # one parser handle per build: 711 commands when every expression
+    # walked from the active session to the parser; 426 now
+    assert sent.count("sqlParser") == 1, sent.count("sqlParser")
     assert all(r[i] == r[0] + i for r in df.collect() for i in range(42))
 
 
@@ -200,3 +216,44 @@ def test_v0_names_that_need_quoting_build(spark, name):
     rows = df.collect()
     assert all(0 <= r[name] <= 9 for r in rows)
     assert all(r["t"] is None or r["t"].startswith(f"{r[name]}-") for r in rows)
+
+
+def _dedup_frames(spark):
+    """A few documents (two exact copies, a near copy, a text shorter than
+    k) and the pairs of 50 disjoint 3-cliques."""
+    docs = spark.createDataFrame(
+        [(1, "the quick brown fox jumps over the lazy dog"),
+         (2, "the quick brown fox leaps over the lazy dog"),
+         (3, "tiny doc"), (4, "the quick brown fox jumps over the lazy dog")],
+        "doc_id long, text string",
+    )
+    pairs = spark.createDataFrame(
+        [(3 * c + a, 3 * c + b) for c in range(50) for a, b in ((0, 1), (1, 2), (0, 2))],
+        "id_a long, id_b long",
+    )
+    return docs, pairs
+
+
+_DEDUP_BUILDS = {
+    "exact_dedup": (80, lambda docs, pairs: exact_dedup(docs, "doc_id", "text")),
+    "minhash_near_duplicates": (250, lambda docs, pairs: minhash_near_duplicates(
+        docs, "doc_id", "text", k=3, num_hashes=32, bands=16)),
+    "ngram_jaccard_pairs": (320, lambda docs, pairs: ngram_jaccard_pairs(
+        docs, "doc_id", "text", max_posting_len=None)),
+    "duplicate_components": (250, lambda docs, pairs: duplicate_components(pairs)),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_DEDUP_BUILDS))
+def test_dedup_build_sends_few_py4j_commands(spark, name):
+    """Eager jobs included: ``duplicate_components`` runs its rounds and
+    ``ngram_jaccard_pairs`` its density guard during the build."""
+    bound, build = _DEDUP_BUILDS[name]
+    frames = _dedup_frames(spark)
+    build(*frames)  # warm
+    try:
+        with count_py4j(spark) as sent:
+            build(*frames)
+    finally:
+        spark.catalog.clearCache()
+    assert len(sent) <= bound, len(sent)

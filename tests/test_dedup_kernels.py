@@ -97,8 +97,9 @@ def test_duplicate_components_matches_union_find(
 def test_duplicate_components_job_budget(spark):
     """Clique-shaped clusters are labelled final by the initial hop, so
     one confirming round runs: 50 disjoint 3-cliques, construction plus
-    collect, fit in 14 Spark jobs (28 before the initial hop and the
-    pointer jump through the materialized labels)."""
+    collect, fit in 10 Spark jobs (9 measured).  History: 28 before the
+    initial hop and the pointer jump through the materialized labels,
+    then 11 while a probe job tested each round for convergence."""
     sc = spark.sparkContext
     pairs = spark.createDataFrame(
         [(3 * c + a, 3 * c + b) for c in range(50) for a, b in ((0, 1), (1, 2), (0, 2))],
@@ -115,7 +116,36 @@ def test_duplicate_components_job_budget(spark):
     assert {(r["vertex"], r["component"]) for r in rows} == {
         (3 * c + i, 3 * c) for c in range(50) for i in range(3)
     }
-    assert len(jobs) <= 14, f"{len(jobs)} jobs"
+    assert len(jobs) <= 10, f"{len(jobs)} jobs"
+
+
+def test_duplicate_components_runs_no_probe_job(spark, monkeypatch):
+    """Convergence is read off each round's checkpoint job: every eager
+    job of the build runs inside a checkpoint call."""
+    sc = spark.sparkContext
+    real = _materialize.checkpoint
+
+    def tagged(df, reliable):
+        sc.addJobTag("checkpoint")
+        try:
+            return real(df, reliable)
+        finally:
+            sc.removeJobTag("checkpoint")
+
+    monkeypatch.setattr(_materialize, "checkpoint", tagged)
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(40)], "id_a long, id_b long"
+    )
+    sc.addJobTag("build")
+    try:
+        comps = duplicate_components(pairs)
+    finally:
+        sc.removeJobTag("build")
+    sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+    tracker = sc._jsc.sc().statusTracker()
+    build = set(tracker.getJobIdsForTag("build"))
+    assert build and build <= set(tracker.getJobIdsForTag("checkpoint"))
+    assert {r["component"] for r in comps.collect()} == {0}
 
 
 def test_duplicate_components_releases_round_checkpoints(spark):
@@ -192,6 +222,24 @@ _GOLDEN = {
 }
 
 
+def test_word_shingles_expr_matches_shingled_df(spark):
+    """The ``Column`` helper and the SQL text of the batch operators build
+    the same shingle arrays."""
+    from pyspark.sql import functions as F
+
+    docs = spark.createDataFrame(
+        _GOLDEN_DOCS + [(4, "  padded   words here  "), (5, "")],
+        "doc_id long, text string",
+    )
+    for k in (1, 3):
+        got = dict(
+            docs.select("doc_id", dedup_mod.word_shingles_expr(F.col("text"), k))
+            .collect()
+        )
+        want = dict(dedup_mod.shingled_df(docs, "doc_id", "text", k).collect())
+        assert got == want, k
+
+
 @pytest.mark.parametrize("ansi", ["false", "true"])
 @pytest.mark.parametrize("num_hashes,bands", sorted(_GOLDEN))
 def test_minhash_band_exprs_golden(spark, ansi, num_hashes, bands):
@@ -202,8 +250,8 @@ def test_minhash_band_exprs_golden(spark, ansi, num_hashes, bands):
     spark.conf.set("spark.sql.ansi.enabled", ansi)
     try:
         rows = (
-            hashed.select("doc_id", sig)
-            .select("doc_id", "_sig", band_keys.alias("_keys"))
+            hashed.selectExpr("doc_id", f"{sig} AS _sig")
+            .selectExpr("doc_id", "_sig", f"{band_keys} AS _keys")
             .collect()
         )
     finally:
@@ -410,6 +458,98 @@ def test_pair_family_golden(spark, partitions, ansi):
         for k, v in prior.items():
             spark.conf.set(k, v)
     assert got == _PAIR_GOLDEN
+
+
+_LAMBDA_VAR = re.compile(r"lambda \w+#")
+
+
+def _plan_digest(df):
+    """sha256 prefix of the optimized plan: the analyzed plan run through
+    the optimizer (without the cache substitution that would print
+    whichever call first filled a cache entry), every field printed.
+    Expression ids, plan ids and lambda variable names (``x_12`` from
+    the ``Column`` API, ``x`` from SQL text) are masked: they depend on
+    what the session built before, not on the plan."""
+    jspark = df.sparkSession._jsparkSession
+    analyzed = df._jdf.queryExecution().analyzed().clone()
+    plan = jspark.sessionState().optimizer().execute(analyzed).toString()
+    plan = re.sub(r"plan_id=\d+", "plan_id=", re.sub(r"#\d+L?", "#", plan))
+    plan = _LAMBDA_VAR.sub("lambda v#", plan)
+    return hashlib.sha256(plan.encode()).hexdigest()[:16]
+
+
+@pytest.fixture(scope="module")
+def plan_ops(spark):
+    """The 15 pair operators plus ``exact_dedup`` and
+    ``minhash_cluster_dedup``, over one corpus built once."""
+    ops = _pair_ops(spark)
+    docs = _pair_docs(spark)
+    ops["exact_dedup"] = lambda: dedup_mod.exact_dedup(docs, "doc_id", "text")
+    ops["minhash_cluster_dedup"] = lambda: dedup_mod.minhash_cluster_dedup(
+        docs, "doc_id", "text"
+    )
+    return ops
+
+
+# Recorded from the operators built through the Column API, before the
+# dedup kernels emitted Spark SQL text; adaptive execution off.
+_PLAN_GOLDEN = {
+    "false": {
+        "containment_cut1000": "097c3aaceb75b638",
+        "containment_cut5": "07a2a378f578e1e5",
+        "containment_cutNone": "43374703393aaa05",
+        "containment_sketch": "eb8456c7cdeaecb0",
+        "embedding_bucketed": "e507c528206cfcad",
+        "exact_dedup": "a4dfc6960ffe3137",
+        "fuzzy": "0008a1af57c7025e",
+        "hamming": "723a74a86c64da81",
+        "jaccard_cut1000": "ace12c33849cfdb8",
+        "jaccard_cut5": "481b9cb902f9c9e2",
+        "jaccard_cutNone": "7253113972be8565",
+        "minhash_32_16": "8dc02c74ebda9ef6",
+        "minhash_cluster_dedup": "b58d304f353ca683",
+        "semantic": "aa8c4c39d71b73b0",
+        "simhash_md5": "04c45061d1c6a624",
+        "simhash_near_duplicates": "0888f5e86c180821",
+        "simhash_xxhash64": "6ad2aaa37cdfc983",
+    },
+    "true": {
+        "containment_cut1000": "0687512164419f51",
+        "containment_cut5": "d6e50d3c500c91d7",
+        "containment_cutNone": "ef2233f80f5057ad",
+        "containment_sketch": "f0377a7401453f33",
+        "embedding_bucketed": "e507c528206cfcad",
+        "exact_dedup": "a4dfc6960ffe3137",
+        "fuzzy": "0008a1af57c7025e",
+        "hamming": "723a74a86c64da81",
+        "jaccard_cut1000": "cd322d94b43485dc",
+        "jaccard_cut5": "47e45bc573d76024",
+        "jaccard_cutNone": "c47fa8ba98bc8d18",
+        "minhash_32_16": "c24c021afa32b13e",
+        "minhash_cluster_dedup": "b58d304f353ca683",
+        "semantic": "aa8c4c39d71b73b0",
+        "simhash_md5": "0902c58008447aa5",
+        "simhash_near_duplicates": "0888f5e86c180821",
+        "simhash_xxhash64": "6ad2aaa37cdfc983",
+    },
+}
+
+
+@pytest.mark.parametrize("ansi", ["false", "true"])
+def test_dedup_plan_golden(spark, plan_ops, ansi):
+    keys = ("spark.sql.ansi.enabled", "spark.sql.adaptive.enabled",
+            "spark.sql.debug.maxToStringFields")
+    prior = {k: spark.conf.get(k) for k in keys}
+    spark.conf.set("spark.sql.ansi.enabled", ansi)
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    spark.conf.set("spark.sql.debug.maxToStringFields", "100000")
+    try:
+        got = {name: _plan_digest(op()) for name, op in plan_ops.items()}
+    finally:
+        spark.catalog.clearCache()
+        for k, v in prior.items():
+            spark.conf.set(k, v)
+    assert got == _PLAN_GOLDEN[ansi]
 
 
 _SIMHASH_TEXTS = [
