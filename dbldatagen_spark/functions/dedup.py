@@ -30,7 +30,8 @@ one ``selectExpr``, ``F.expr`` or join condition per step is one parse.
 Catalyst parses the text into the same expression trees, so optimized
 plans and data are unchanged.  Identifiers go through ``sqltext.quote``
 and literals through ``sqltext.sql_lit``, which types them as ``F.lit``
-does.
+does.  No literal in that text carries a backslash, so the kernels read
+the same under ``spark.sql.parser.escapedStringLiterals``.
 """
 
 from __future__ import annotations
@@ -51,7 +52,10 @@ from dbldatagen_spark.operators.sqltext import quote, sql_lit
 # salted with an odd multiple of it (see minhash_signature_exprs).
 _MH_SEED_A = 0x9E3779B97F4A7C15
 
-_WHITESPACE = sql_lit(r"\s+")
+# The regex \s+ spelled without a backslash, so the SQL lexer reads it the
+# same whatever spark.sql.parser.escapedStringLiterals says; ConstantFolding
+# folds it back to the literal '\s+' the Column API puts in the plan.
+_WHITESPACE = "concat(chr(92), 's+')"
 
 
 def normalize_text_expr(text: Column) -> Column:

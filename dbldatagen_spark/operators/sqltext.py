@@ -14,9 +14,9 @@ This module holds what every builder shares:
 * :func:`quote` backquotes an identifier;
 * :func:`user_sql` embeds a user's SQL expression as one operand, keeping
   the ``F.expr`` contract (a trailing ``--`` comment works, an alias is
-  allowed, malformed text raises ``ParseException``); inside
-  :func:`parser_scope` every call of one build shares one handle on the
-  session's SQL parser;
+  allowed, malformed text raises ``ParseException``); it runs inside
+  :func:`parser_scope`, where every call of one build shares one handle
+  on the session's SQL parser;
 * :class:`Level` collects one dependency level and applies it with one
   ``selectExpr``.  The only ``Column`` pieces left are pandas-UDF text
   columns and a registered distribution's ``unit_expr``; a builder hands
@@ -126,15 +126,6 @@ def parser_scope(spark: SparkSession) -> Iterator[None]:
         _PARSER.reset(token)
 
 
-def _sql_parser():
-    scope = _PARSER.get()
-    if scope is None:
-        return SparkSession.active()._jsparkSession.sessionState().sqlParser()
-    if scope[1] is None:
-        scope[1] = scope[0]._jsparkSession.sessionState().sqlParser()
-    return scope[1]
-
-
 def user_sql(text: str) -> str:
     """A user's SQL expression (``ExpressionColumn``, v0 ``expr=``) as one
     parenthesized operand, under ``F.expr``'s contract.  The session's SQL
@@ -142,8 +133,14 @@ def user_sql(text: str) -> str:
     text raises the same ``ParseException``; a user alias (``q AS z``) is
     cut off, since the column's own name replaces it, as it did over
     ``F.expr``.  The closing parenthesis sits on its own line, so a
-    trailing ``--`` comment cannot swallow it."""
-    parsed = _sql_parser().parseExpression(text)
+    trailing ``--`` comment cannot swallow it.  Valid only inside
+    :func:`parser_scope`."""
+    scope = _PARSER.get()
+    if scope is None:
+        raise RuntimeError("user SQL can only be parsed inside a build's parser_scope")
+    if scope[1] is None:
+        scope[1] = scope[0]._jsparkSession.sessionState().sqlParser()
+    parsed = scope[1].parseExpression(text)
     if parsed.nodeName() == "Alias":
         # the parser's origin indexes count UTF-16 code units
         origin = parsed.child().origin()

@@ -1,14 +1,16 @@
 """Label propagation (``duplicate_components``) and the MinHash band-key
 expressions shared by the LSH dedup operators: results against a
-union-find reference, Spark job budget, release of checkpoints, and
-golden signature/band-key values.  The pair family on the shared
+union-find reference, empty input, Spark job budget, release of
+checkpoints, and golden signature/band-key values.  The pair family on the shared
 ``_self_pairs``/``_shingle_overlap`` kernels: golden output digests and
 Exchange counts, golden SimHash values, the banded SimHash search
 against brute force, and cache release in ``minhash_cluster_dedup``."""
 
+import contextlib
 import hashlib
 import random
 import re
+import signal
 
 import pytest
 
@@ -178,6 +180,86 @@ def test_duplicate_components_releases_on_error(spark, monkeypatch):
         duplicate_components(pairs)
     assert len(calls) == 3
     assert _persisted_ids(spark) - before == set()
+
+
+@contextlib.contextmanager
+def _deadline(seconds):
+    """Fail instead of hanging: a round whose observed metric never
+    arrives would block ``Observation.get`` forever."""
+
+    def expire(signum, frame):
+        raise TimeoutError(f"no result within {seconds} s")
+
+    prior = signal.signal(signal.SIGALRM, expire)
+    signal.alarm(seconds)
+    try:
+        yield
+    finally:
+        signal.alarm(0)
+        signal.signal(signal.SIGALRM, prior)
+
+
+def test_duplicate_components_of_no_pairs(spark, tmp_path):
+    """No pairs, the input of every corpus without near-duplicates: each
+    round's convergence count still arrives, with adaptive execution on
+    and off, over local and reliable checkpoints."""
+    empty = spark.createDataFrame([], "id_a long, id_b long")
+    prior = spark.conf.get("spark.sql.adaptive.enabled")
+    try:
+        for aqe in ("true", "false"):
+            spark.conf.set("spark.sql.adaptive.enabled", aqe)
+            for ckpt in (None, str(tmp_path / f"ckpt_{aqe}")):
+                with _deadline(120):
+                    assert duplicate_components(empty, checkpoint_dir=ckpt).collect() == []
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", prior)
+
+
+def test_minhash_cluster_dedup_without_duplicates(spark, monkeypatch):
+    """A corpus of distinct documents leaves no star edge: every document
+    is its own canonical id."""
+    seen = []
+    real = dedup_mod.duplicate_components
+
+    def recording(pairs, *args, **kwargs):
+        seen.append(pairs.count())
+        return real(pairs, *args, **kwargs)
+
+    monkeypatch.setattr(dedup_mod, "duplicate_components", recording)
+    rng = random.Random(7)
+    docs = spark.createDataFrame(
+        [(i, " ".join(f"w{rng.randrange(10**6)}" for _ in range(12))) for i in range(30)],
+        "id long, text string",
+    )
+    with _deadline(120):
+        rows = dedup_mod.minhash_cluster_dedup(docs, "id", "text").collect()
+    assert seen == [0]
+    assert sorted((r["id"], r["canonical_id"]) for r in rows) == [(i, i) for i in range(30)]
+
+
+def test_kernels_ignore_escaped_string_literals(spark):
+    """The kernels' SQL text holds no backslash escape, so the parser's
+    escaped-literal mode leaves their whitespace regex as it is."""
+    docs = spark.createDataFrame(
+        [(1, "a\tb  c"), (2, "a b c"), (3, " A\nb c "), (4, "a\\sb c")],
+        "doc_id long, text string",
+    )
+
+    def run():
+        return (
+            sorted(tuple(r) for r in dedup_mod.exact_dedup(docs, "doc_id", "text").collect()),
+            sorted(tuple(r) for r in dedup_mod.shingled_df(docs, "doc_id", "text", 2).collect()),
+        )
+
+    want = run()
+    assert want[0] == [(1, 3), (4, 1)]
+    key = "spark.sql.parser.escapedStringLiterals"
+    prior = spark.conf.get(key)
+    spark.conf.set(key, "true")
+    try:
+        assert run() == want
+    finally:
+        spark.conf.set(key, prior)
 
 
 # Recorded from the Column-API signature/band-key construction the
